@@ -13,8 +13,8 @@ The job is idempotent: rerunning after any failure resumes from the
 checkpoint manifest (left-anti join on bucket x config fingerprint) and
 dynamically overwrites only unfinished bucket partitions -- the
 `--start-at` restart analogue (run_pipeline.py:336-341) at bucket
-granularity.  Counters land in the manifest per bucket (turns_in,
-spans_out).
+granularity.  The extraction is the fused map-only kernel; counters land
+in the manifest per bucket (turns_in, spans_out, classifier_drop_rate).
 """
 
 from __future__ import annotations
@@ -33,9 +33,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--output", required=True, help="extracted-spans output path")
     p.add_argument("--manifest", required=True, help="checkpoint manifest path")
     p.add_argument("--buckets", type=int, default=256, help="restart granularity")
-    p.add_argument("--strategy", choices=["relational", "fused"], default="relational",
-                   help="relational = declarative plan with lineage counters; "
-                        "fused = map-only kernel (fastest, no candidate counters)")
     p.add_argument("--catalog", choices=["parquet", "iceberg"], default="parquet",
                    help="sink format: partitioned parquet, or Iceberg tables "
                         "(snapshot-committed spans + manifest; the input path "
@@ -77,7 +74,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         turns = read_transcripts(spark, args.input)
         result = run_with_resume(
             spark, turns, args.output, args.manifest, cfg=cfg, n_buckets=args.buckets,
-            strategy=args.strategy, catalog=args.catalog,
+            catalog=args.catalog,
             spans_layout=args.spans_layout,
         )
         print(json.dumps(result))

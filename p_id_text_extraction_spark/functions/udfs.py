@@ -1,10 +1,10 @@
 """Arrow-batched pandas UDF kernels -- the only Python in the hot path.
 
-Two kernels, mirroring where the reference *has* to run a model
-(text_detection.py:72-81, text_recognition.py:56-131); everything else in
-the pipeline is pure Catalyst column/window/aggregate logic.  Both kernels
-call the shared `oracle.spec` functions, so distributed output is
-byte-identical to the pure-Python oracle by construction.
+Two kernels: the relational plan's detect UDF (where the reference *has*
+to run a model, text_detection.py:72-81) and the fused strategy's
+whole-turn rows kernel.  Both call the shared `oracle.spec` functions, so
+distributed output is byte-identical to the pure-Python oracle by
+construction.
 
 Batches arrive via Arrow (`spark.sql.execution.arrow.pyspark.enabled`);
 regexes compile once per executor process at import time -- the analogue of
@@ -14,7 +14,7 @@ loading TrOCR once per process (text_recognition.py:37-51).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
+from pyspark.accumulators import Accumulator
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
@@ -30,11 +30,6 @@ from p_id_text_extraction_spark.oracle import spec
 DETECT_RESULT = T.StructType([
     T.StructField("norm_text", T.StringType(), False),
     T.StructField("cands", T.StringType(), False),
-])
-
-NORMALIZE_RESULT = T.StructType([
-    T.StructField("text", T.StringType(), False),
-    T.StructField("method", T.StringType(), False),
 ])
 
 
@@ -99,7 +94,8 @@ SPAN_ROW_SCHEMA = T.StructType([
 _SPAN_COLS = [f.name for f in SPAN_ROW_SCHEMA.fields]
 
 
-def make_extract_rows_kernel(cfg: ExtractConfig = DEFAULT_CONFIG):
+def make_extract_rows_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
+                             candidates: Accumulator | None = None):
     """mapInPandas kernel for the FUSED strategy: the whole per-turn oracle
     (parse -> segment -> detect -> suppress -> cluster -> merge -> crop ->
     normalize -> coord -> rank) in one Arrow-batched pass, emitting final
@@ -111,36 +107,33 @@ def make_extract_rows_kernel(cfg: ExtractConfig = DEFAULT_CONFIG):
     sorts, embarrassingly parallel at any cluster size.  Byte-equality with
     the oracle is structural (the kernel IS oracle.pipeline.extract_turn_tuples).
     The relational strategy (plans/pipeline.extract_pipeline) keeps the
-    declarative window/aggregate algebra for engines that need per-stage
-    observability; both are golden-tested against the same oracle.
+    declarative window/aggregate algebra as the golden cross-check; both
+    are tested against the same oracle.
+
+    ``candidates``: a Spark accumulator that receives, once per Arrow
+    batch, the detected candidate count of the sweep the kernel already
+    runs (``extract_turn_tuples(stats=...)``).  Accumulators updated in a
+    transformation OVER-COUNT when a task is retried, a stage resubmitted
+    or a cached partition recomputed: read the value once, right after the
+    first action that materializes the plan, and treat it as telemetry --
+    never gate correctness on it.
     """
     from p_id_text_extraction_spark.oracle.pipeline import extract_turn_tuples
 
     def kernel(batches):
         for pdf in batches:
             rows: list[tuple] = []
+            stats = {"candidates_in": 0} if candidates is not None else None
             for conv_id, turn_idx, txt in zip(
                 pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist()
             ):
                 rows.extend(extract_turn_tuples(
                     conv_id, int(turn_idx), txt if isinstance(txt, str) else None, cfg=cfg,
+                    stats=stats,
                 ))
+            if stats is not None:
+                candidates.add(stats["candidates_in"])
             yield pd.DataFrame(rows, columns=_SPAN_COLS)
 
     return kernel
 
-
-def make_normalize_udf(cfg: ExtractConfig = DEFAULT_CONFIG):
-    """Confidence-gated text normalizer (text_recognition.py:111-131 analogue)."""
-
-    @pandas_udf(NORMALIZE_RESULT)
-    def normalize(cropped: pd.Series, conf_milli: pd.Series) -> pd.DataFrame:
-        texts: list[str] = []
-        methods: list[str] = []
-        for txt, conf in zip(cropped.tolist(), conf_milli.tolist()):  # plain-list iteration beats Series iteration
-            out, method = spec.normalize_text(txt if isinstance(txt, str) else "", int(conf), cfg)
-            texts.append(out)
-            methods.append(method)
-        return pd.DataFrame({"text": texts, "method": methods})
-
-    return normalize

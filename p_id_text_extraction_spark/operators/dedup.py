@@ -233,8 +233,9 @@ def hashed_grams_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
     conv) that dominated ngram_jaccard_pairs' pre-join stage; the
     normalization projection stays JVM-side.  ``size(hs)`` equals the
     relational set_size (count of distinct gram strings) by construction.
-    Docs with no full shingle emit no row (matching the relational
-    ``set_size > 0`` filter on sizes and the empty explode)."""
+    ``hs`` is sorted ascending.  Docs with no full shingle -- NULL text
+    included -- emit no row (matching the relational ``set_size > 0``
+    filter on sizes and the empty explode)."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -251,14 +252,18 @@ def hashed_grams_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
         for pdf in batches:
             ids, hss = [], []
             for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
+                if not t or not isinstance(t, str):   # NULL/empty: no shingle
+                    continue
                 toks = t.split(" ")
                 m = len(toks) - (n - 1)
                 if m <= 0:
                     continue
                 grams = {" ".join(toks[i:i + n]) for i in range(m)}
                 digests = [md5(g.encode("utf-8")).digest() for g in grams]
-                hs = (np.frombuffer(b"".join(digests), dtype=">u8")[::2]
-                      .astype(np.uint64) >> FOUR)
+                # sorted, so the persisted intermediate does not depend on
+                # set iteration order (stable across runs and task retries)
+                hs = np.sort(np.frombuffer(b"".join(digests), dtype=">u8")[::2]
+                             .astype(np.uint64) >> FOUR)
                 ids.append(doc_id)
                 hss.append(hs.astype(np.int64).tolist())
             yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
@@ -293,8 +298,8 @@ def minhash_sketches_kernel(docs: DataFrame, n: int = 3, num_hashes: int = 32,
         order-free: size, array_intersect size, min folds);
       * sig[i] = min over hg%%P of (a_i*h + b_i)%%P, exact in uint64
         (a_i, h < 2^30 so products stay < 2^60).
-    Docs with no full shingle emit no row, matching the relational
-    ``size(hhs) > 0`` filter."""
+    Docs with no full shingle -- NULL text included -- emit no row,
+    matching the relational ``size(hhs) > 0`` filter."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -315,6 +320,8 @@ def minhash_sketches_kernel(docs: DataFrame, n: int = 3, num_hashes: int = 32,
         for pdf in batches:
             ids, hgs, sigs = [], [], []
             for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
+                if not t or not isinstance(t, str):   # NULL/empty: no shingle
+                    continue
                 toks = t.split(" ")
                 m = len(toks) - (n - 1)
                 if m <= 0:

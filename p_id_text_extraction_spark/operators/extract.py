@@ -194,9 +194,8 @@ def normalize(cropped: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFr
     rewrites -- primary = strip ends, fallback = strip + collapse runs to
     one space ('  '.join(split()) equivalence) -- so whole-stage codegen
     handles them and the expensive path keeps exactly ONE Python kernel
-    (detect).  `functions.udfs.make_normalize_udf` remains the drop-in
-    extension point for heavier (model-backed) normalizers.  The
-    empty-text drop (F6) already happened JVM-side in `crop`.
+    (detect).  The empty-text drop (F6) already happened JVM-side in
+    `crop`.
     """
     trimmed = F.regexp_replace("cropped", f"^[{_WS}]+|[{_WS}]+$", "")
     collapsed = F.regexp_replace(trimmed, f"[{_WS}]+", " ")

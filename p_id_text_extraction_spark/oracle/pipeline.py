@@ -156,6 +156,7 @@ OUTPUT_FIELDS = (
 def extract_turn_tuples(
     conv_id: str, turn_idx: int, text: str | None, role: str | None = None,
     tool: str | None = None, cfg: ExtractConfig = DEFAULT_CONFIG,
+    stats: dict[str, int] | None = None,
 ) -> list[tuple]:
     """Full oracle pipeline for one turn, fused into a single sorted sweep.
 
@@ -167,6 +168,10 @@ def extract_turn_tuples(
     cluster's accumulators (exactly the staged semantics; the
     tests/test_spec.py property pins `extract_turn` == staged composition).
     Returns tuples in OUTPUT_FIELDS order.
+
+    ``stats``: when given, ``stats["candidates_in"]`` grows by this turn's
+    detected candidate count (the same sweep input, no second detect pass)
+    -- the lineage counter the relational plan observes as candidates_in.
     """
     norm_text = spec.parse_canvas(text)
     n = len(norm_text)
@@ -175,6 +180,8 @@ def extract_turn_tuples(
     cands = [(g_start, -g_end, kind, idx, conf, ls, le)
              for idx, g_start, g_end, kind, conf, ls, le
              in spec.detect_all_spans(norm_text, cfg)]
+    if stats is not None:
+        stats["candidates_in"] += len(cands)
     if not cands:
         return []
     cands.sort()

@@ -18,9 +18,10 @@ Idempotence and isolation rules:
     the write -- a bucket that died mid-write is fully rewritten on retry,
     and a todo bucket that yields ZERO spans still ends up empty instead of
     retaining rows from an aborted earlier attempt;
-  * counters come from the in-plan DataFrame (observe + a groupBy on the
-    cached spans), never from re-reading the output directory -- at 100 TB
-    a read-back is two extra full passes over everything ever written.
+  * counters come from the in-plan DataFrame (the kernel's candidate
+    accumulator + one groupBy on the cached spans), never from re-reading
+    the output directory -- at 100 TB a read-back is two extra full passes
+    over everything ever written.
 
 Production target is two Iceberg tables; the sandbox has no Iceberg jars,
 so both land as partitioned parquet with identical semantics.
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from p_id_text_extraction_spark.config import DEFAULT_CONFIG, ExtractConfig
-from p_id_text_extraction_spark.plans.pipeline import extract_pipeline
+from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
 
 MANIFEST_COLUMNS = ["bucket_id", "job_fingerprint", "turns_in", "spans_out",
                     "classifier_drop_rate", "task_rows_max",
@@ -96,7 +97,8 @@ def completed_buckets(spark: SparkSession, manifest_dir: str, fingerprint: str) 
         f.endswith(".parquet") for root, _d, files in os.walk(manifest_dir) for f in files
     ):
         return spark.createDataFrame([], "bucket_id int")
-    m = spark.read.parquet(manifest_dir)
+    # the declared schema spares a schema-inference job over the footers
+    m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
     return m.filter(F.col("job_fingerprint") == fingerprint).select("bucket_id").distinct()
 
 
@@ -123,7 +125,6 @@ def run_with_resume(
     n_buckets: int = 16,
     bucket_filter: list[int] | None = None,
     write_partitions: int | None = None,
-    strategy: str = "relational",
     catalog: str = "parquet",
     spans_layout: str = "identity",
 ) -> dict:
@@ -135,11 +136,11 @@ def run_with_resume(
     over (bucket_id, conv_id), NOT just bucket_id, so output parallelism
     tracks the cluster instead of collapsing to n_buckets tasks.
 
-    ``strategy``: 'relational' (default -- the declarative window/aggregate
-    plan, with observe()-based candidate lineage) or 'fused' (the map-only
-    kernel: fastest and shuffle-free, but candidate counts never
-    materialize, so classifier_drop_rate is recorded as NaN).
-    Both strategies produce byte-identical spans (tests/test_resume.py).
+    The extraction is the fused map-only kernel
+    (plans/pipeline.extract_pipeline_fused); its candidate count rides a
+    Spark accumulator into the manifest's classifier_drop_rate.  With no
+    todo bucket the call returns after the done-set collect without
+    running any extraction: nothing is written or committed.
 
     ``catalog``: 'parquet' (partitioned parquet + explicit todo-partition
     clears) or 'iceberg' (both sinks are Iceberg tables via
@@ -157,8 +158,6 @@ def run_with_resume(
 
     Returns the counter dict for the run.
     """
-    if strategy not in ("relational", "fused"):
-        raise ValueError(f"unknown strategy {strategy!r}: use 'relational' or 'fused'")
     if catalog not in ("parquet", "iceberg"):
         raise ValueError(f"unknown catalog {catalog!r}: use 'parquet' or 'iceberg'")
     if spans_layout not in ("identity", "bucket"):
@@ -190,90 +189,81 @@ def run_with_resume(
 
     # re-derive the bucket on the output side: it is a deterministic
     # function of conv_id, no need to thread it through the pipeline
-    from pyspark.sql import Observation
-    if strategy == "fused":
-        from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
-        obs = None
-        base = extract_pipeline_fused(todo.drop("bucket_id"), cfg)
-    else:
-        obs = Observation("lineage")
-        base = extract_pipeline(todo.drop("bucket_id"), cfg, observation=obs)
+    candidates = spark.sparkContext.accumulator(0)
+    base = extract_pipeline_fused(todo.drop("bucket_id"), cfg, candidates=candidates)
     n_write = write_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     spans = (
         with_bucket(base, n_buckets, bucket_fn)
         .withColumn("job_fingerprint", F.lit(fingerprint))
         .repartition(n_write, "bucket_id", "conv_id")
         .sortWithinPartitions("conv_id", "turn_idx", "span_rank")
-        .persist()
     )
+    if catalog == "iceberg":
+        # hidden partitioning (layout 'bucket'): no bucket_id data column
+        # -- the table's bucket(conv_id, n) transform IS the bucketing,
+        # and the restart bucket ids align by construction (same murmur3
+        # function on both sides)
+        if spans_layout == "bucket":
+            spans_w = spans.drop("bucket_id")
+            partition_cols = ("job_fingerprint", f"bucket(conv_id, {n_buckets})")
+            replaced = [{"job_fingerprint": fingerprint, "conv_id_bucket": b}
+                        for b in todo_ids]
+        else:
+            spans_w = spans
+            partition_cols = ("job_fingerprint", "bucket_id")
+            replaced = [{"job_fingerprint": fingerprint, "bucket_id": b} for b in todo_ids]
+        ice.ensure_table(spark, output_dir, spans_w.schema, partition_cols)
+    if not todo_ids:
+        # fully resumed: no scan, no kernel, no commit, no manifest row
+        if catalog == "parquet":
+            from p_id_text_extraction_spark.util import make_dirs
+            make_dirs(spark, output_dir)
+        return {"fingerprint": fingerprint, "buckets_completed": 0,
+                "task_rows_max": 0, "task_rows_median": 0}
+
+    spans = spans.persist()
     from p_id_text_extraction_spark.util import dynamic_partition_overwrite
     try:
         if catalog == "iceberg":
             # one atomic overwrite-partitions snapshot: replaced partitions
             # are EXPLICIT (the todo set), so a bucket retried to zero
             # spans still drops its old files -- no pre-clear step, and a
-            # reader never observes a half-written state.  A fully-resumed
-            # run (no todo buckets) commits nothing: no empty snapshots.
-            if spans_layout == "bucket":
-                # hidden partitioning: no bucket_id data column -- the
-                # table's bucket(conv_id, n) transform IS the bucketing,
-                # and the restart bucket ids align by construction (same
-                # murmur3 function on both sides)
-                spans_w = spans.drop("bucket_id")
-                ice.ensure_table(spark, output_dir, spans_w.schema,
-                                 ("job_fingerprint",
-                                  f"bucket(conv_id, {n_buckets})"))
-                if todo_ids:
-                    ice.overwrite_span_partitions(
-                        spans_w, output_dir,
-                        replaced=[{"job_fingerprint": fingerprint,
-                                   "conv_id_bucket": b} for b in todo_ids])
-            else:
-                ice.ensure_table(spark, output_dir, spans.schema,
-                                 ("job_fingerprint", "bucket_id"))
-                if todo_ids:
-                    ice.overwrite_span_partitions(
-                        spans, output_dir,
-                        replaced=[{"job_fingerprint": fingerprint, "bucket_id": b}
-                                  for b in todo_ids])
+            # reader never observes a half-written state.
+            ice.overwrite_span_partitions(spans_w, output_dir, replaced=replaced)
         else:
             _clear_todo_partitions(spark, output_dir, fingerprint, todo_ids)
             with dynamic_partition_overwrite(spark):
                 (spans.write.mode("overwrite")
                  .partitionBy("job_fingerprint", "bucket_id")
                  .parquet(output_dir))
+        # the write was the first action on the cache, so the accumulator
+        # has seen each kernel task once (barring retries -- telemetry only)
+        candidates_in = candidates.value
 
         # lineage counters per completed bucket (FIXTURES.md section 3), all
-        # from THIS run's plan: observe() rode the candidate scan, and the
-        # per-bucket span counts aggregate the cached spans -- no read-back.
-        # classifier_drop_rate (candidates dropped by suppress/merge vs
-        # candidates detected -- the boxes-before/after ratio of
-        # grouping_logic.py:978-983) is a run-level rate stamped on each
-        # bucket row of this run.
-        per_bucket = {r.bucket_id: r.cnt
-                      for r in spans.groupBy("bucket_id").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-        # WRITE-STAGE SKEW COUNTERS: rows per task of the cached spans'
-        # (bucket_id, conv_id) partitioning -- the production measurement
-        # of the skew story (a hot conversation concentrates its spans in
-        # one task).  One pass over the cache, <= n_write tiny rows back.
-        import statistics
-        pp = [r.cnt for r in spans.groupBy(
-            F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("cnt")).collect()]
-        task_rows_max = max(pp) if pp else 0
-        task_rows_median = int(statistics.median(pp)) if pp else 0
+        # from THIS run's plan -- no read-back.  ONE aggregate over the
+        # cache yields both the per-bucket span counts and the WRITE-STAGE
+        # SKEW COUNTERS: rows per task of the (bucket_id, conv_id) write
+        # partitioning (a hot conversation concentrates its spans in one
+        # task).  <= n_write x n_buckets tiny rows back.
+        counts = spans.groupBy(F.spark_partition_id().alias("pid"), "bucket_id").count().collect()
     finally:
         spans.unpersist()
-    try:
-        m = dict(obs.get) if obs is not None else {}
-    except Exception:  # noqa: BLE001 - zero-task plans never emit the observed row
-        m = {}
-    candidates_in = int(m.get("candidates_in") or 0)
+    per_bucket: dict[int, int] = {}
+    per_task: dict[int, int] = {}
+    for r in counts:
+        per_bucket[r.bucket_id] = per_bucket.get(r.bucket_id, 0) + r["count"]
+        per_task[r.pid] = per_task.get(r.pid, 0) + r["count"]
+    import statistics
+    pp = list(per_task.values())
+    task_rows_max = max(pp) if pp else 0
+    task_rows_median = int(statistics.median(pp)) if pp else 0
+    # classifier_drop_rate (candidates dropped by suppress/merge/crop vs
+    # candidates detected -- the boxes-before/after ratio of
+    # grouping_logic.py:978-983) is a run-level rate stamped on each
+    # bucket row of this run.
     spans_total = sum(per_bucket.values())
-    if obs is None:
-        drop_rate = float("nan")   # fused kernel never materializes candidates
-    else:
-        drop_rate = (candidates_in - spans_total) / candidates_in if candidates_in else 0.0
+    drop_rate = (candidates_in - spans_total) / candidates_in if candidates_in else 0.0
 
     turns_in = {r.bucket_id: r.cnt
                 for r in todo.groupBy("bucket_id").agg(F.count(F.lit(1)).alias("cnt")).collect()}
@@ -287,12 +277,7 @@ def run_with_resume(
     # resumes.  (turns_in empty but input non-empty = a resume whose
     # remaining todo buckets are all legitimately hash-empty: record them,
     # or the run livelocks re-clearing them forever.)
-    if turns_in:
-        record = True
-    elif todo_ids:
-        record = bool(turns.limit(1).count())
-    else:
-        record = False
+    record = bool(turns_in) or bool(turns.limit(1).count())
     manifest_rows = [
         (b, fingerprint, int(turns_in.get(b, 0)), int(per_bucket.get(b, 0)), float(drop_rate),
          int(task_rows_max), int(task_rows_median),

@@ -12,6 +12,7 @@ declare (a superset of) the same clustering keys.
 
 from __future__ import annotations
 
+from pyspark.accumulators import Accumulator
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -56,6 +57,7 @@ def extract_pipeline(
 def extract_pipeline_fused(
     turns: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
+    candidates: Accumulator | None = None,
 ) -> DataFrame:
     """FUSED strategy: the entire per-turn pipeline inside one Arrow kernel.
 
@@ -64,14 +66,18 @@ def extract_pipeline_fused(
     turn whole, so there is nothing to shuffle -- the map-only shape is the
     minimal-communication plan for this computation and scales linearly
     with executors (the north_rule two-cluster-size criterion).  Same
-    output schema and bytes as `extract_pipeline` (golden-tested); use the
-    relational strategy when per-stage lineage counters (observe) or
-    engine-side operator introspection are needed.
+    output schema and bytes as `extract_pipeline` (golden-tested).  This
+    is the production path; the relational plan stays as the extract_full
+    query and the golden cross-check.
+
+    ``candidates``: optional Spark accumulator for the detected candidate
+    count (see `functions.udfs.make_extract_rows_kernel` for its
+    over-count caveat).
     """
     cfg.validate()
     from p_id_text_extraction_spark.functions.udfs import SPAN_ROW_SCHEMA, make_extract_rows_kernel
     pruned = turns.select("conv_id", "turn_idx", "text")
-    return pruned.mapInPandas(make_extract_rows_kernel(cfg), SPAN_ROW_SCHEMA)
+    return pruned.mapInPandas(make_extract_rows_kernel(cfg, candidates), SPAN_ROW_SCHEMA)
 
 
 def run_metrics(observation: Observation) -> dict:

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from p_id_text_extraction_spark.config import DEFAULT_CONFIG, ExtractConfig
-from p_id_text_extraction_spark.plans.pipeline import extract_pipeline
+from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
 
 
 def extract_stream(
@@ -24,13 +24,13 @@ def extract_stream(
     checkpoint_dir: str,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     trigger_available_now: bool = True,
-    strategy: str = "relational",
     catalog: str = "parquet",
 ) -> StreamingQuery:
     """Run the extraction pipeline over a streaming transcripts source.
 
     ``stream`` must be a readStream DataFrame with the transcript schema.
-    Each micro-batch runs the identical batch plan and lands in a
+    Each micro-batch runs the batch production plan (the fused map-only
+    kernel, plans/pipeline.extract_pipeline_fused) and lands in a
     ``batch_id=N`` partition with dynamic partition overwrite, mirroring
     plans/checkpoint.py's bucket protocol: foreachBatch is at-least-once
     (a micro-batch retried after a mid-write failure re-executes), so the
@@ -42,20 +42,14 @@ def extract_stream(
     this batch_id), so a retried batch replaces itself atomically and
     concurrent readers never observe a half-written batch.
     """
-
-    if strategy not in ("relational", "fused"):
-        raise ValueError(f"unknown strategy {strategy!r}: use 'relational' or 'fused'")
     if catalog not in ("parquet", "iceberg"):
         raise ValueError(f"unknown catalog {catalog!r}: use 'parquet' or 'iceberg'")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
         from p_id_text_extraction_spark.util import dynamic_partition_overwrite
-        plan = (extract_pipeline_fused(batch_df, cfg) if strategy == "fused"
-                else extract_pipeline(batch_df, cfg))
-        spans = plan.withColumn("batch_id", F.lit(batch_id))
+        spans = extract_pipeline_fused(batch_df, cfg).withColumn("batch_id", F.lit(batch_id))
         if catalog == "iceberg":
             from p_id_text_extraction_spark.sources import iceberg as icemod
             icemod.ensure_table(batch_df.sparkSession, output_dir,

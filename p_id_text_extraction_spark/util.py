@@ -70,3 +70,11 @@ def delete_path(spark: SparkSession, path: str) -> None:
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     fs.delete(hpath, True)
+
+
+def make_dirs(spark: SparkSession, path: str) -> None:
+    """Create a directory (and parents) through the Hadoop FileSystem API;
+    a no-op when it already exists.  Same URI coverage as delete_path."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hpath.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(hpath)

@@ -105,16 +105,60 @@ def test_fingerprint_isolation(spark, turns_df, tmp_path):
     assert r["buckets_completed"] == 4  # nothing skipped
 
 
-def test_fused_strategy_resume_identical(spark, turns_df, tmp_path):
-    """The fused map-only strategy must write byte-identical spans through
-    the same resume protocol."""
-    run_with_resume(spark, turns_df, str(tmp_path / "or"), str(tmp_path / "mr"), n_buckets=8)
-    run_with_resume(spark, turns_df, str(tmp_path / "of"), str(tmp_path / "mf"),
-                    n_buckets=8, strategy="fused")
-    assert _rows(spark, str(tmp_path / "of")) == _rows(spark, str(tmp_path / "or"))
-    import math
-    rows = spark.read.parquet(str(tmp_path / "mf")).collect()
-    assert all(math.isnan(r.classifier_drop_rate) for r in rows)
+def _relational(turns):
+    """The relational plan's spans, and classifier_drop_rate as its
+    observe() lineage gives it: (candidates_in - spans) / candidates_in."""
+    from pyspark.sql import Observation
+
+    from p_id_text_extraction_spark.plans.pipeline import extract_pipeline
+    obs = Observation("lineage")
+    # one action, no orderBy: a range-partition sample job would re-run the
+    # observed node and inflate the metric
+    rows = sorted((tuple(r) for r in extract_pipeline(turns, observation=obs).collect()),
+                  key=lambda t: t[:3])
+    candidates_in = obs.get["candidates_in"]
+    return rows, (candidates_in - len(rows)) / candidates_in
+
+
+def test_resume_equals_relational_plan_and_drop_rate(spark, turns_df, tmp_path):
+    """run_with_resume (the fused kernel) writes exactly the relational
+    plan's spans, and its accumulator-fed manifest drop rate equals the
+    relational observe() value -- on the golden corpus and the skew
+    fixture."""
+    from p_id_text_extraction_spark.sources.transcripts import gen_skew_turns
+    skew = transcripts_df(spark, gen_skew_turns(1))
+    for i, turns in enumerate((turns_df, skew)):
+        out, man = str(tmp_path / f"o{i}"), str(tmp_path / f"m{i}")
+        run_with_resume(spark, turns, out, man, n_buckets=4)
+        want, drop_rate = _relational(turns)
+        assert _rows(spark, out) == want and want
+        assert 0.0 < drop_rate < 1.0
+        rates = {r.classifier_drop_rate for r in spark.read.parquet(man).collect()}
+        assert rates == {drop_rate}
+
+
+@pytest.mark.parametrize("catalog", ["parquet", "iceberg"])
+def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
+    """A resume over a complete manifest collects the done set and stops:
+    at most 2 Spark jobs, no Iceberg snapshot, same return value as ever."""
+    from p_id_text_extraction_spark.sources import iceberg_format as ice
+    out, man = str(tmp_path / "o"), str(tmp_path / "m")
+    run_with_resume(spark, turns_df, out, man, n_buckets=8, catalog=catalog)
+    snaps = ((ice.snapshot_ids(out), ice.snapshot_ids(man))
+             if catalog == "iceberg" else None)
+    sc = spark.sparkContext
+    group = f"noop-resume-{catalog}"
+    sc.setJobGroup(group, "no-op resume")
+    try:
+        r = run_with_resume(spark, turns_df, out, man, n_buckets=8, catalog=catalog)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert {k: v for k, v in r.items() if k != "fingerprint"} == \
+        {"buckets_completed": 0, "task_rows_max": 0, "task_rows_median": 0}
+    if catalog == "iceberg":
+        assert (ice.snapshot_ids(out), ice.snapshot_ids(man)) == snaps
 
 
 def test_zero_span_todo_bucket_cleared(spark, tmp_path):

@@ -195,8 +195,8 @@ def test_minhash_sketches_kernel_equals_relational(spark):
     minhash_signatures): sig exactly (position = coefficient), hg as a
     SET (array_distinct keeps first occurrence, np.unique sorts; every
     consumer is order-free).  Corpus includes unicode, tabs/newlines that
-    survive _norm_text, repeated grams, and docs too short for any full
-    shingle (which must emit NO row on both paths)."""
+    survive _norm_text, repeated grams, NULL text, and docs too short for
+    any full shingle (which must emit NO row on both paths)."""
     rows = [
         (0, "the quick brown fox jumps over the quick brown fox again"),
         (1, "  Mixed   CASE   and   collapsed    spaces   here  "),
@@ -206,6 +206,7 @@ def test_minhash_sketches_kernel_equals_relational(spark):
         (5, ""),                     # empty -> no row
         (6, "x y z"),                # exactly one shingle
         (7, "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 3),
+        (8, None),                   # NULL -> no row, no crash
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     hg_rel = {r.doc_id: sorted(r.hg) for r in dedup.hashed_gram_arrays(df).collect()
@@ -224,8 +225,9 @@ def test_minhash_sketches_kernel_equals_relational(spark):
 def test_hashed_grams_kernel_equals_relational(spark):
     """ngram_jaccard's kernel-minted hashed shingle MULTISETS must match
     md5_hash60(explode(gram_arrays)) row-for-row (as multisets; explode
-    order is irrelevant to the window/join consumers) and size(hs) must
-    equal the relational set_size."""
+    order is irrelevant to the window/join consumers, but the kernel emits
+    them sorted) and size(hs) must equal the relational set_size.  NULL
+    text emits no row on either path."""
     rows = [
         (0, "the quick brown fox jumps over the quick brown fox again"),
         (1, "  Mixed   CASE   and   collapsed    spaces   here  "),
@@ -233,6 +235,7 @@ def test_hashed_grams_kernel_equals_relational(spark):
         (3, "one two"),
         (4, ""),
         (5, "x y z"),
+        (6, None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     grams = dedup.gram_arrays(df)
@@ -246,7 +249,7 @@ def test_hashed_grams_kernel_equals_relational(spark):
     out = dedup.hashed_grams_kernel(df).collect()
     assert {r.doc_id for r in out} == set(rel_sizes)
     for r in out:
-        assert sorted(r.hs) == sorted(rel[r.doc_id]), r.doc_id
+        assert r.hs == sorted(rel[r.doc_id]), r.doc_id    # emitted sorted
         assert len(r.hs) == rel_sizes[r.doc_id], r.doc_id
 
 

@@ -11,11 +11,12 @@ cost (guide section 1: measure first).
 from __future__ import annotations
 
 import cProfile
+import os
 import pstats
 import sys
 import time
 
-sys.path.insert(0, __file__.rsplit("/", 2)[0])
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from p_id_text_extraction_spark.sources.transcripts import gen_conv
 from p_id_text_extraction_spark.oracle.pipeline import extract_turn_tuples

@@ -219,9 +219,9 @@ def resume_cycle() -> dict:
     pipeline -- a map-only scan into a 1-row aggregate, zero output, zero
     spill -- instead of materializing a second 20 GB spans tree; each
     resume phase runs in its OWN session so shuffle scratch (the
-    repartition before the write) is freed between phases; and the runs
-    use the FUSED production strategy (three relational runs would each
-    add a 22 GB shuffle spill on top)."""
+    repartition before the write) is freed between phases; and
+    run_with_resume runs the fused map-only production path (a relational
+    run would add a 22 GB shuffle spill on top)."""
     from pyspark.sql import functions as F  # noqa: F401  (checksum_df)
 
     from p_id_text_extraction_spark.plans.checkpoint import run_with_resume
@@ -246,8 +246,7 @@ def resume_cycle() -> dict:
     spark = session()
     t0 = time.monotonic()
     r1 = run_with_resume(spark, read_transcripts(spark, DATA_DIR), out_b, man_b,
-                         n_buckets=32, bucket_filter=list(range(8)),
-                         strategy="fused")
+                         n_buckets=32, bucket_filter=list(range(8)))
     wall_part = round(time.monotonic() - t0, 1)
     spark.stop()
     # phase 2: resume completes the remaining 24; third run is a no-op;
@@ -255,11 +254,9 @@ def resume_cycle() -> dict:
     spark = session()
     turns = read_transcripts(spark, DATA_DIR)
     t0 = time.monotonic()
-    r2 = run_with_resume(spark, turns, out_b, man_b, n_buckets=32,
-                         strategy="fused")
+    r2 = run_with_resume(spark, turns, out_b, man_b, n_buckets=32)
     wall_resume = round(time.monotonic() - t0, 1)
-    r3 = run_with_resume(spark, turns, out_b, man_b, n_buckets=32,
-                         strategy="fused")
+    r3 = run_with_resume(spark, turns, out_b, man_b, n_buckets=32)
     ck_b = checksum_df(spark.read.parquet(out_b))
     for d in (out_b, man_b):
         shutil.rmtree(d, ignore_errors=True)
