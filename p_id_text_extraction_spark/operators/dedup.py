@@ -24,11 +24,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from p_id_text_extraction_spark.operators.textstats import norm_text_col
 from p_id_text_extraction_spark.util import track_persist
-
-
-def _norm_text() -> F.Column:
-    return F.trim(F.regexp_replace(F.lower("text"), " +", " "))
 
 
 def _spread(docs: DataFrame) -> DataFrame:
@@ -44,7 +41,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by md5 fingerprint; keeps the min doc_id as
     canonical.  One hash-aggregate shuffle; at 100 TB this is the cheapest
     first pass (drops byte-identical crawl copies before anything fuzzy)."""
-    fp = docs.select("doc_id", F.md5(_norm_text()).alias("fp"))
+    fp = docs.select("doc_id", F.md5(norm_text_col()).alias("fp"))
     return (
         fp.groupBy("fp")
         .agg(
@@ -55,42 +52,18 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def gram_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram sets as one array per doc: (doc_id, grams)."""
-    toks = _spread(docs).select("doc_id", F.split(_norm_text(), " ").alias("toks"))
-    # n-gram via transform over 1-based start indices; guard short docs --
-    # Spark's sequence(1, 0) yields a DESCENDING [1, 0], not empty
-    return toks.select(
-        "doc_id",
-        F.array_distinct(
-            F.when(
-                F.size("toks") >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice("toks", i, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("grams"),
-    )
-
-
-def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Word n-gram shingle sets, one row per distinct (doc_id, shingle)."""
-    return gram_arrays(docs, n).select("doc_id", F.explode("grams").alias("shingle"))
-
-
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard_milli: int = 100,
                         max_posting: int = 1000) -> DataFrame:
     """Near-duplicate pairs by n-gram Jaccard, inverted-index style.
 
     plan: shingle -> 60-bit hash -> frequency cap -> co-partitioned
-    self-join -> count common shingles per pair -> join per-doc set sizes ->
-    Jaccard in milli-units.  Emits (doc_a, doc_b, jaccard_milli), doc_a <
-    doc_b.
+    self-join -> count shared shingle hashes per pair -> join per-doc set
+    sizes -> Jaccard in milli-units.  Emits (doc_a, doc_b, jaccard_milli),
+    doc_a < doc_b.
 
     Scale shape (two big exchanges, slim rows):
-      * shingles shuffle ONCE, as 16-byte (doc_id, hash) rows instead of
-        raw strings -- md5_hash60 keeps the hash engine-portable, and a
+      * shingle hashes shuffle ONCE, as 16-byte (doc_id, hash) rows instead
+        of raw strings -- md5_hash60 keeps the hash engine-portable, and a
         hash collision merges the same postings in the DuckDB oracle too,
         so pair counts stay bit-identical by construction;
       * the frequency cap (a shingle in > max_posting docs is a stopword
@@ -103,17 +76,17 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard_milli: int = 10
     # PERSIST the hashed gram multisets: the subtree feeds two consumers
     # (sizes + the shingle explode); materializing the shingle intermediate
     # is also what a production multi-pass dedup does.  r6: the grams are
-    # minted by hashed_grams_kernel (one zero-shuffle Arrow pass; same
-    # multiset as md5_hash60(explode(gram_arrays)) by construction)
-    # instead of the interpreted Catalyst transform/md5/conv chain --
-    # Spark also re-evaluates an inlined higher-order generator child per
-    # OUTPUT element (9s vs 0.2s for this explode at sf0.1, the r1
-    # lesson), so the persist stays load-bearing either way.
+    # minted by hashed_grams_kernel (one zero-shuffle Arrow pass; the same
+    # multiset as the twin's ``sh`` CTE, pinned per document in
+    # tests/test_training_ops.py) instead of an interpreted Catalyst
+    # transform/md5/conv chain -- Spark also re-evaluates an inlined
+    # higher-order generator child per OUTPUT element (9s vs 0.2s for this
+    # explode at sf0.1, the r1 lesson), so the persist stays load-bearing.
     hsets = track_persist(hashed_grams_kernel(docs, n))
     sh = hsets.select("doc_id", F.explode("hs").alias("sh"))
     # set sizes from the pre-explode arrays: no second explode+groupBy
-    # over every shingle row (kernel rows always hold >= 1 shingle,
-    # matching the relational set_size > 0 filter)
+    # over every shingle row (kernel rows always hold >= 1 shingle, like
+    # the twin's sizes CTE, which only counts unnested rows)
     sizes = hsets.select("doc_id", F.size("hs").alias("set_size"))
 
     w = Window.partitionBy("sh")
@@ -158,12 +131,69 @@ def md5_hash60(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+# _md5's C constructor skips OpenSSL's per-call EVP setup -- identical
+# digests (it IS md5), ~2.2x cheaper on 8-byte inputs (measured 439 ->
+# 196 ns/call); hashlib stays as the fallback spelling
+try:
+    from _md5 import md5 as _md5
+except ImportError:                           # pragma: no cover
+    from hashlib import md5 as _md5
+
+_FOUR = np.uint64(4)
+_NO_GRAMS = np.empty(0, dtype=np.uint64)
+
+
+def _hash60(digests: bytes) -> np.ndarray:
+    """md5_hash60 for the Arrow kernels, over concatenated 16-byte md5
+    digests: one uint64 per digest, in order.  The first 15 hex chars of
+    md5 are its top 60 bits, so one strided big-endian view (the first
+    8-byte half of every digest) and one shift replace a per-gram
+    ``int.from_bytes(digest[:8]) >> 4`` (measured 728 -> 330 ns/gram with
+    the _md5 constructor, md5 itself then 99%)."""
+    return np.frombuffer(digests, dtype=">u8")[::2].astype(np.uint64) >> _FOUR
+
+
+def gram_digests(t: str | None, n: int) -> np.ndarray:
+    """md5_hash60 of every DISTINCT word ``n``-gram of the normalized text
+    ``t``, unordered -- one entry per distinct gram STRING, so a 60-bit
+    collision appears twice, as in the twins' ``unnest(g)``.  Empty for
+    NULL text and for fewer than ``n`` tokens (the twins' ``CASE WHEN
+    len(t) >= n ... ELSE []``)."""
+    if t is None:
+        return _NO_GRAMS
+    # split the UTF-8 BYTES: a space byte never occurs inside a multi-byte
+    # sequence, so the byte grams are the encoded str grams -- one encode
+    # per doc instead of one per gram
+    toks = t.encode("utf-8").split(b" ")
+    m = len(toks) - (n - 1)
+    if m <= 0:
+        return _NO_GRAMS
+    grams = {b" ".join(toks[i:i + n]) for i in range(m)}
+    return _hash60(b"".join([_md5(g).digest() for g in grams]))
+
+
+def char_gram_digests(t: str, k: int) -> np.ndarray:
+    """md5_hash60 of every CODE-POINT ``k``-gram of ``t``, in position
+    order (the twin's ``substring(t, i, k)``); empty when ``t`` is shorter
+    than ``k``."""
+    n_g = len(t) - (k - 1)
+    if t.isascii():
+        # fast path: byte slices == encoded code-point slices
+        b = t.encode("utf-8")
+        digests = [_md5(b[i:i + k]).digest() for i in range(n_g)]
+    else:
+        # slice the STR then encode per gram -- byte k-grams would split
+        # multi-byte code points and diverge from the twin
+        digests = [_md5(t[i:i + k].encode("utf-8")).digest() for i in range(n_g)]
+    return _hash60(b"".join(digests))
+
+
 # largest prime below 2^30: the universal-hash modulus.  a*hh stays under
 # 2^60, so h_i = (a*hh + b) mod P is exact int64 in Spark AND exact integer
 # arithmetic in DuckDB -- no overflow in either engine.  (A 100 TB
 # deployment that doesn't need a SQL oracle would widen this to 64-bit
 # xxhash64 permutations; 30-bit minhash space costs <0.1% estimate bias at
-# ~10^6 distinct shingles.)
+# ~10^6 distinct shingle hashes.)
 MINHASH_P = 1073741789
 
 
@@ -176,96 +206,34 @@ def minhash_coeffs(num_hashes: int, seed: int = 11) -> list[tuple[int, int]]:
             for _ in range(num_hashes)]
 
 
-def hashed_gram_arrays(docs: DataFrame, n: int = 3,
-                       grams: DataFrame | None = None) -> DataFrame:
-    """Distinct 60-bit-hashed shingle sets: (doc_id, hg array<long>).
-
-    8-byte elements instead of raw shingle strings -- the unit every
-    MinHash consumer (signatures AND the exact-verify join) should ship.
-    A hash collision merges the same elements in the DuckDB twin too
-    (md5_hash60 is engine-portable), so set sizes, intersections, and the
-    exact Jaccard over ``hg`` stay bit-identical cross-engine."""
-    if grams is None:
-        grams = gram_arrays(docs, n)
-    return grams.select(
-        "doc_id", F.array_distinct(F.transform("grams", md5_hash60)).alias("hg"))
-
-
-def minhash_signatures(docs: DataFrame, n: int = 3, num_hashes: int = 32,
-                       seed: int = 11, grams: DataFrame | None = None,
-                       hashed: DataFrame | None = None) -> DataFrame:
-    """MinHash signatures: ONE md5 per shingle folded to the universal-hash
-    domain, then ``num_hashes`` cheap modular permutations folded with
-    min().  Returns (doc_id, sig array<bigint>).  Pass precomputed
-    ``grams`` (doc_id, grams) or ``hashed`` (doc_id, hg) to share a
-    persisted intermediate.
-
-    Plan shape: ZERO shuffles -- each permutation's min is an array_min
-    over the per-doc hashed shingle array (a projection), not an
-    explode + groupBy aggregate.  Same values by construction (min over
-    the same multiset); docs with no shingles produce no signature row,
-    matching the aggregate formulation."""
-    if hashed is None:
-        hashed = hashed_gram_arrays(docs, n, grams=grams)
-    hh = hashed.select(
-        "doc_id",
-        F.transform("hg", lambda h: F.pmod(h, F.lit(MINHASH_P))).alias("hhs"),
-    ).filter(F.size("hhs") > 0)
-    sig = F.array(*[
-        F.array_min(F.transform("hhs", lambda h: F.pmod(F.lit(a) * h + F.lit(b),
-                                                        F.lit(MINHASH_P))))
-        for a, b in minhash_coeffs(num_hashes, seed)
-    ])
-    return hh.select("doc_id", sig.alias("sig"))
-
-
 HASHED_GRAMS_SCHEMA = "doc_id bigint, hs array<bigint>"
 
 
 def hashed_grams_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
-    """The hashed shingle MULTISET per doc -- (doc_id, hs array<bigint>)
-    where hs has one md5_hash60 entry per DISTINCT gram string (a 60-bit
-    collision therefore appears twice, exactly like the relational
-    ``md5_hash60(explode(gram_arrays))`` and its DuckDB twin).
+    """The hashed shingle MULTISET per doc -- (doc_id, hs array<bigint>):
+    ``gram_digests`` sorted ascending, so the persisted intermediate does
+    not depend on set iteration order (stable across runs and task
+    retries).  ``size(hs)`` is the twin's set_size (distinct gram strings).
 
-    Zero-shuffle Arrow kernel replacing the interpreted Catalyst chain
-    (split -> transform concat_ws -> array_distinct -> explode -> md5 ->
-    conv) that dominated ngram_jaccard_pairs' pre-join stage; the
-    normalization projection stays JVM-side.  ``size(hs)`` equals the
-    relational set_size (count of distinct gram strings) by construction.
-    ``hs`` is sorted ascending.  Docs with no full shingle -- NULL text
-    included -- emit no row (matching the relational ``set_size > 0``
-    filter on sizes and the empty explode)."""
+    Zero-shuffle Arrow kernel behind ngram_jaccard_pairs' pre-join stage;
+    the normalization projection stays JVM-side.  Docs with no full
+    shingle -- NULL text included -- emit no row, like the twin's
+    ``unnest`` of an empty list.  Pinned per document to the twin's CTEs
+    (tests/test_training_ops.py)."""
     from collections.abc import Iterator
 
     import pandas as pd
 
-    try:
-        from _md5 import md5
-    except ImportError:                       # pragma: no cover
-        from hashlib import md5
-
-    FOUR = np.uint64(4)
-    pruned = _spread(docs).select("doc_id", _norm_text().alias("t"))
+    pruned = _spread(docs).select("doc_id", norm_text_col().alias("t"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, hss = [], []
             for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
-                if not t or not isinstance(t, str):   # NULL/empty: no shingle
-                    continue
-                toks = t.split(" ")
-                m = len(toks) - (n - 1)
-                if m <= 0:
-                    continue
-                grams = {" ".join(toks[i:i + n]) for i in range(m)}
-                digests = [md5(g.encode("utf-8")).digest() for g in grams]
-                # sorted, so the persisted intermediate does not depend on
-                # set iteration order (stable across runs and task retries)
-                hs = np.sort(np.frombuffer(b"".join(digests), dtype=">u8")[::2]
-                             .astype(np.uint64) >> FOUR)
-                ids.append(doc_id)
-                hss.append(hs.astype(np.int64).tolist())
+                hs = np.sort(gram_digests(t, n))
+                if hs.size:
+                    ids.append(doc_id)
+                    hss.append(hs.astype(np.int64).tolist())
             yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
                                 "hs": pd.Series(hss, dtype="object")})
 
@@ -280,60 +248,39 @@ def minhash_sketches_kernel(docs: DataFrame, n: int = 3, num_hashes: int = 32,
     """(doc_id, hg, sig) in ONE zero-shuffle Arrow kernel -- the fast path
     behind minhash_lsh_pairs.
 
-    The relational decomposition (gram_arrays -> hashed_gram_arrays ->
-    minhash_signatures) is the executable spec and stays untouched, but
-    Catalyst interprets every higher-order ``transform`` lambda per
-    element: the shingle concat, the md5 fold, and the 32 permutation
-    folds cost ~2e9 interpreted lambda evaluations at sf1 -- the same
-    shape the winnow kernel already replaced (per-doc array work belongs
-    in an Arrow kernel once the per-element lambda count passes ~1e8).
-    Here: normalization stays JVM-side (same ``_norm_text`` projection),
-    tokenize/gram/md5 run per doc in C (`_md5` constructor + one strided
-    numpy digest view == md5_hash60 by the first-15-hex == top-60-bits
-    identity), and all ``num_hashes`` permutations fold as two vectorized
-    numpy ops.  Value-equal by construction, property-pinned against the
-    staged composition (tests/test_training_ops.py):
-      * hg = the distinct hashed shingle set (np.unique sorts it;
-        array_distinct keeps first occurrence -- every consumer is
-        order-free: size, array_intersect size, min folds);
+    Per-doc array work belongs in an Arrow kernel once the per-element
+    lambda count passes ~1e8: Catalyst interprets every higher-order
+    ``transform`` lambda per element, and the shingle concat, the md5 fold
+    and the 32 permutation folds cost ~2e9 such evaluations at sf1.
+    Here normalization stays JVM-side (``norm_text_col``), tokenize, gram
+    and md5 run per doc in C (``gram_digests``), and all ``num_hashes``
+    permutations fold as two vectorized numpy ops.  The reference is the
+    DuckDB twin (``_minhash_lsh_sql``), pinned per document against its
+    ``hgrams`` and ``sig`` CTEs (tests/test_training_ops.py):
+      * hg = the distinct hashed shingle set, sorted (the twin's
+        list_distinct order differs -- every consumer is order-free:
+        size, array_intersect size, min folds);
       * sig[i] = min over hg%%P of (a_i*h + b_i)%%P, exact in uint64
         (a_i, h < 2^30 so products stay < 2^60).
-    Docs with no full shingle -- NULL text included -- emit no row,
-    matching the relational ``size(hhs) > 0`` filter."""
+    Docs with no full shingle -- NULL text included -- emit no row, like
+    the twin's ``sig`` GROUP BY over an empty unnest."""
     from collections.abc import Iterator
 
     import pandas as pd
-
-    try:
-        from _md5 import md5
-    except ImportError:                       # pragma: no cover
-        from hashlib import md5
 
     coeffs = minhash_coeffs(num_hashes, seed)
     A = np.array([a for a, _ in coeffs], dtype=np.uint64).reshape(-1, 1)
     B = np.array([b for _, b in coeffs], dtype=np.uint64).reshape(-1, 1)
     P = np.uint64(MINHASH_P)
-    FOUR = np.uint64(4)
-    pruned = _spread(docs).select("doc_id", _norm_text().alias("t"))
+    pruned = _spread(docs).select("doc_id", norm_text_col().alias("t"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, hgs, sigs = [], [], []
             for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
-                if not t or not isinstance(t, str):   # NULL/empty: no shingle
+                hg = np.unique(gram_digests(t, n))
+                if not hg.size:
                     continue
-                toks = t.split(" ")
-                m = len(toks) - (n - 1)
-                if m <= 0:
-                    continue
-                # distinct gram STRINGS first (mirrors gram_arrays'
-                # array_distinct), then hash, then distinct again
-                # (mirrors hashed_gram_arrays')
-                grams = {" ".join(toks[i:i + n]) for i in range(m)}
-                digests = [md5(g.encode("utf-8")).digest() for g in grams]
-                hg = np.unique(
-                    np.frombuffer(b"".join(digests), dtype=">u8")[::2]
-                    .astype(np.uint64) >> FOUR)
                 sig = ((A * (hg % P) + B) % P).min(axis=1)
                 ids.append(doc_id)
                 hgs.append(hg.astype(np.int64).tolist())
@@ -366,9 +313,9 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, num_hashes: int = 32,
     # identically in the DuckDB twin) and the signatures (both banded
     # self-join sides project from it, and a broadcast build side
     # re-evaluates its subtree -- the persist makes the kernel run once).
-    # minhash_sketches_kernel == the staged relational composition,
-    # property-pinned; the r6 kernel move replaced ~2e9 interpreted
-    # Catalyst lambda evaluations at sf1 with C loops.
+    # minhash_sketches_kernel is pinned per document to the twin's sketch
+    # CTEs; the r6 kernel move replaced ~2e9 interpreted Catalyst lambda
+    # evaluations at sf1 with C loops.
     sketches = track_persist(minhash_sketches_kernel(docs, n, num_hashes, seed))
     hg = sketches.select("doc_id", "hg")
     sig = sketches.select("doc_id", "sig")
@@ -416,7 +363,7 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     """60-bit SimHash over word tokens: per token one engine-portable
     md5-derived hash (md5_hash60), sum of bit votes, sign -> fingerprint
     bits.  Pure aggregate composition, fully SQL-mirrorable."""
-    toks = _spread(docs).select("doc_id", F.explode(F.split(_norm_text(), " ")).alias("tok"))
+    toks = _spread(docs).select("doc_id", F.explode(F.split(norm_text_col(), " ")).alias("tok"))
     h = toks.select("doc_id", md5_hash60(F.col("tok")).alias("h"))
     votes = [
         F.sum(F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{i}")

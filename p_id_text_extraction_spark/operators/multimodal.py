@@ -46,7 +46,7 @@ FEATURE_DIM = 16
 FEATURES_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("media_type", T.StringType(), False),
-    T.StructField("feature", T.ArrayType(T.FloatType()), False),
+    T.StructField("feature", T.ArrayType(T.FloatType()), True),
 ])
 
 
@@ -266,7 +266,7 @@ def _real_feature(payload: bytes, media_type: str) -> np.ndarray:
 def _fake_feature(payload: bytes) -> np.ndarray:
     """Deterministic stand-in for a feature extractor: 16 floats derived
     from the md5 of the payload bytes.  Stable across runs/machines."""
-    d = hashlib.md5(payload or b"").digest()
+    d = hashlib.md5(payload).digest()
     return (np.frombuffer(d, dtype=np.uint8).astype(np.float32) - 127.5) / 127.5
 
 
@@ -275,15 +275,17 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
 
     The Arrow batch shape is the real contract: each batch arrives as a
     pandas DataFrame, payloads as Python bytes; the kernel vectorizes per
-    batch and emits fixed-width float arrays.
+    batch and emits fixed-width float arrays -- or a NULL feature for a
+    NULL payload (as the twin's md5 of NULL), never the digest of b"".
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if fake:
-                feats = [_fake_feature(p).tolist() for p in pdf["payload"]]
+                feats = [None if p is None else _fake_feature(p).tolist()
+                         for p in pdf["payload"]]
             else:
-                feats = [_real_feature(p, t).tolist()
+                feats = [None if p is None else _real_feature(p, t).tolist()
                          for p, t in zip(pdf["payload"], pdf["media_type"])]
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],

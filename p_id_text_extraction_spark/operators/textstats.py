@@ -2,7 +2,8 @@
 
 Every score is either an integer milli-unit or a single IEEE-double op on
 integers, so the DuckDB oracle reproduces values bit-for-bit.  All logic is
-JVM-side `pyspark.sql.functions` -- whole-stage codegen, no Python.
+JVM-side `pyspark.sql.functions` -- whole-stage codegen -- except winnowing,
+a per-document Arrow kernel (``winnow_fingerprints_kernel``).
 """
 
 from __future__ import annotations
@@ -10,15 +11,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from p_id_text_extraction_spark.util import track_persist
-
-# stopword markers for the n-gram-free language-ID heuristic; chosen to be
-# expressible as identical LIKE/regexp predicates in Spark SQL and DuckDB
+# stopword markers for the n-gram-free language-ID heuristic.  The SQL
+# twins spell the word boundary \b, and RE2 (DuckDB) counts only ASCII
+# characters as word characters: it finds "and" inside "ñandú", where
+# Java's Unicode-aware \b finds none.  Explicit ASCII lookarounds give
+# Spark RE2's boundary.
+_ASCII_WORD = "[a-zA-Z0-9_]"
 LANG_MARKERS = [
-    ("en", r"\b(the|and|of|to)\b"),
-    ("es", r"\b(el|la|de|que)\b"),
-    ("fr", r"\b(le|la|et|les)\b"),
-    ("de", r"\b(der|die|und|das)\b"),
+    (code, f"(?<!{_ASCII_WORD})({words})(?!{_ASCII_WORD})")
+    for code, words in [("en", "the|and|of|to"), ("es", "el|la|de|que"),
+                        ("fr", "le|la|et|les"), ("de", "der|die|und|das")]
 ]
 
 
@@ -108,10 +110,11 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 def norm_text_col() -> F.Column:
     """THE canonical text normalization (casefold + collapse space runs +
-    trim).  fingerprint, corpus_split and winnow_fingerprints all derive
-    from this one expression -- corpus_split's leakage guarantee (exact
-    dups never straddle the split) is DEFINED by staying bit-identical to
-    fingerprint's normalization, so never fork it."""
+    trim).  fingerprint, corpus_split, the winnow kernel and the dedup
+    operators all derive from this one expression -- corpus_split's
+    leakage guarantee (exact dups never straddle the split) is DEFINED by
+    staying bit-identical to fingerprint's normalization, so never fork
+    it."""
     return F.trim(F.regexp_replace(F.lower("text"), " +", " "))
 
 
@@ -194,74 +197,48 @@ def repetition_score(docs: DataFrame) -> DataFrame:
 WINNOW_SCHEMA = "doc_id bigint, fp_csv string, n_fps int"
 
 
-def winnow_fingerprints_kernel(docs: DataFrame, k: int = 8, w: int = 16,
-                               parallelism: int | None = None) -> DataFrame:
-    """Winnowing as a ZERO-SHUFFLE Arrow kernel (the default path).
+def winnow_fingerprints_kernel(docs: DataFrame, k: int = 8, w: int = 16) -> DataFrame:
+    """Winnowing document fingerprints (Schleimer et al.'s rolling-hash
+    scheme, the standard plagiarism/near-dup fingerprint): hash every
+    char ``k``-gram, slide a window of ``w`` consecutive hashes, keep each
+    window's minimum -- a document pair sharing any sufficiently long run
+    of text shares a fingerprint.  Emits (doc_id, fp_csv, n_fps): the
+    distinct selected hashes as a CSV sorted AS STRINGS.
 
-    The relational formulation below is algebraically clean but pays for
-    it three times at scale: Catalyst interprets the gram-generating
-    ``transform(sequence, substr)`` lambda per element (~100 s for 234M
-    grams at sf10 on 8 cores, BEFORE hashing), the 234M exploded rows
-    cross an exchange, and the sliding min runs as an O(n*w) window.
-    Winnowing is per-document, so none of that communication is
-    necessary: normalize JVM-side, then one mapInPandas kernel hashes
-    grams (hashlib.md5, the same first-15-hex-chars integer as
-    dedup.md5_hash60 -- engine-portable, DuckDB twin unchanged) and takes
-    window minima via a numpy sliding view (C speed).  Byte-identical to
-    the relational path (golden-tested); sf10: 234 s -> 75 s, plan is
-    Scan -> Project -> MapInPandas.
+    The per-k-gram hash is the engine-portable md5-60bit
+    (``dedup.char_gram_digests``; a true rolling polynomial would be cheaper
+    per gram but has no DuckDB twin -- the selection logic, the part
+    winnowing actually defines, is identical).  The reference is the
+    DuckDB twin (``queries._WINNOW_SQL``).
 
-    Parallelism is bounded by the SCAN's split count (a map-only plan has
-    no exchange to rebalance on): at 100 TB that is thousands of files,
-    but a single-file corpus runs one Python worker -- pass
-    ``parallelism=`` to trade one tiny pre-kernel repartition of the slim
-    (doc_id, text) rows for full fan-out."""
+    A ZERO-SHUFFLE Arrow kernel: winnowing is per-document, so the
+    relational shape (an interpreted ``transform(sequence, substr)`` gram
+    lambda, the exploded grams across an exchange, an O(n*w) sliding-min
+    window) paid for communication it never needed -- sf10: 234 s -> 75 s.
+    Normalize JVM-side, then hash grams and take window minima via a
+    numpy sliding view (C speed).  Like the dedup kernels, the slim
+    (doc_id, t) rows are spread over ``defaultParallelism`` tasks first:
+    a single-file corpus would otherwise run one Python worker."""
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    norm = norm_text_col()
-    pruned = docs.select("doc_id", norm.alias("t")).filter(F.length(norm) >= k)
-    if parallelism:
-        pruned = pruned.repartition(parallelism)
+    from p_id_text_extraction_spark.operators.dedup import _spread, char_gram_digests
 
-    # _md5's C constructor skips OpenSSL's per-call EVP setup -- identical
-    # digests (it IS md5), ~2.2x cheaper on 8-byte inputs (measured 439 ->
-    # 196 ns/call); hashlib stays as the fallback spelling
-    try:
-        from _md5 import md5
-    except ImportError:                       # pragma: no cover
-        from hashlib import md5
+    norm = norm_text_col()
+    pruned = _spread(docs.select("doc_id", norm.alias("t")).filter(F.length(norm) >= k))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, csvs, counts = [], [], []
             for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
-                n_g = len(t) - (k - 1)      # CODE-POINT grams, like substr
-                if n_g < w:        # no FULL window -> no row (matches SQL)
+                if len(t) - (k - 1) < w:   # no FULL window -> no row (as SQL)
                     continue
-                if t.isascii():
-                    # fast path: byte slices == encoded code-point slices
-                    b = t.encode("utf-8")
-                    digests = [md5(b[i:i + k]).digest() for i in range(n_g)]
-                else:
-                    # unicode: slice the STR (code points) then encode per
-                    # gram -- byte k-grams would silently diverge from the
-                    # relational substr path on multi-byte text
-                    digests = [md5(t[i:i + k].encode("utf-8")).digest()
-                               for i in range(n_g)]
-                # vectorized top-60-bit extraction: one join, one strided
-                # big-endian u8 view (every other 8-byte half of the 16-byte
-                # digests), one shift -- replaces a per-gram
-                # int.from_bytes(digest[:8]) >> 4 (measured 728 -> 330
-                # ns/gram with the _md5 constructor, md5 itself now 99%)
-                hs = np.frombuffer(b"".join(digests),
-                                   dtype=">u8")[::2].astype(np.uint64) >> 4
+                hs = char_gram_digests(t, k)
                 mins = np.lib.stride_tricks.sliding_window_view(hs, w).min(axis=1)
-                # the relational path sorts the CSV as STRINGS
-                # (array_sort over cast(string)) -- mirror that exactly,
-                # numeric order would diverge ("100" < "2" < "20")
+                # the twin sorts the CSV as STRINGS (list_sort over VARCHAR)
+                # -- numeric order would diverge ("100" < "2" < "20")
                 uniq = sorted({str(x) for x in np.unique(mins).tolist()})
                 ids.append(doc_id)
                 csvs.append(",".join(uniq))
@@ -271,47 +248,6 @@ def winnow_fingerprints_kernel(docs: DataFrame, k: int = 8, w: int = 16,
                                 "n_fps": pd.Series(counts, dtype="int32")})
 
     return pruned.mapInPandas(kernel, WINNOW_SCHEMA)
-
-
-def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 16) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer et al.'s rolling-hash
-    scheme, the standard plagiarism/near-dup fingerprint): hash every
-    char ``k``-gram, slide a window of ``w`` consecutive hashes, keep each
-    window's minimum -- a document pair sharing any sufficiently long run
-    of text shares a fingerprint.
-
-    The per-k-gram hash is the engine-portable md5-60bit (a true rolling
-    polynomial would be cheaper per gram but xxhash/rolling have no DuckDB
-    twin; the selection logic -- the part winnowing actually defines -- is
-    identical).  Emits (doc_id, fp_csv, n_fps): the distinct selected
-    hashes as a sorted CSV.
-    """
-    from p_id_text_extraction_spark.operators.dedup import md5_hash60
-    norm = norm_text_col()
-    d = docs.select("doc_id", norm.alias("t")).filter(F.length(norm) >= k)
-    # materialize the gram arrays BEFORE exploding: an inlined higher-order
-    # generator child re-evaluates per output element (round-1 lesson)
-    arr = d.select(
-        "doc_id",
-        F.transform(
-            F.sequence(F.lit(1), F.length("t") - (k - 1)),
-            lambda i: F.col("t").substr(i, F.lit(k)),
-        ).alias("grams"),
-    )
-    arr = track_persist(arr)
-    grams = arr.select("doc_id", F.posexplode("grams").alias("pos", "gram"))
-    hashed = grams.select("doc_id", "pos", md5_hash60(F.col("gram")).alias("h"))
-    win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
-    mins = hashed.select("doc_id", "pos", F.min("h").over(win).alias("wmin"),
-                         F.max("pos").over(Window.partitionBy("doc_id")).alias("maxpos"))
-    # a window starting at pos is only complete if pos + w - 1 <= maxpos;
-    # incomplete tail windows are excluded (standard winnowing emits one
-    # min per FULL window)
-    sel = mins.filter(F.col("pos") + (w - 1) <= F.col("maxpos"))
-    return sel.groupBy("doc_id").agg(
-        F.array_join(F.array_sort(F.collect_set(F.col("wmin").cast("string"))), ",").alias("fp_csv"),
-        F.countDistinct("wmin").cast("int").alias("n_fps"),
-    )
 
 
 def corpus_clean(docs: DataFrame, min_quality_milli: int = 200,
@@ -331,11 +267,11 @@ def corpus_clean(docs: DataFrame, min_quality_milli: int = 200,
     base = docs.select(
         "doc_id",
         F.md5(norm_text_col()).alias("fp"),
-        # n>0 guard mirrors quality_score's filter: a zero-length text has
-        # NULL quality (division by zero) there and was dropped by the
-        # inner join; the explicit filter below keeps parity
-        F.length("text").alias("_n"),
-        quality_milli_col().alias("quality_milli"),
+        # guarded in place: the twin's q CTE drops zero-length text, so its
+        # quality is NULL here and fails the gate below.  A filter could
+        # not do it -- canonical selection runs over ALL documents, and the
+        # window keeps Catalyst from pushing a filter below the division
+        F.when(F.length("text") > 0, quality_milli_col()).alias("quality_milli"),
         # pred_lang_col directly: corpus_clean must not require the
         # documents table's ground-truth `lang` column it never reads
         pred_lang_col().alias("pred_lang"),
@@ -347,7 +283,6 @@ def corpus_clean(docs: DataFrame, min_quality_milli: int = 200,
         .withColumn("_min_id", F.min("doc_id").over(w))
         .filter(
             (F.col("doc_id") == F.col("_min_id"))
-            & (F.col("_n") > 0)
             & (F.col("quality_milli") >= min_quality_milli)
             & (F.col("n_tokens") >= min_tokens)
             & F.col("pred_lang").isin(*langs)

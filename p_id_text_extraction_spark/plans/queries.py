@@ -1077,14 +1077,12 @@ _REPETITION_SQL = """
 
 def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (rolling-hash document fingerprint scheme)
-    via the Arrow kernel (byte-identical to the relational form, which
-    stays golden-tested).  The driver corpora are one parquet file per
-    table, which would bound the map-only plan to one Python worker --
-    one pre-kernel repartition of the slim (doc_id, text) rows buys full
-    fan-out (sf1: 13.4x wall ratio -> ~linear)."""
-    return textstats.winnow_fingerprints_kernel(
-        _t(spark, sf_dir, "documents"),
-        parallelism=spark.sparkContext.defaultParallelism)
+    via the Arrow kernel, whose reference is the twin below.  The driver
+    corpora are one parquet file per table, which would bound the kernel
+    to one Python worker -- the kernel's pre-kernel repartition of the
+    slim (doc_id, t) rows buys full fan-out (sf1: 13.4x wall ratio ->
+    ~linear)."""
+    return textstats.winnow_fingerprints_kernel(_t(spark, sf_dir, "documents"))
 
 
 _WINNOW_SQL = """

@@ -1,12 +1,11 @@
 """Property tests for the training-data operators (dedup sketches,
-similarity search, multimodal plumbing) -- the ops whose queries get only
-rows-only driver checks because xxhash64 / LSH planes / pandas kernels have
-no DuckDB twin."""
+similarity search, multimodal plumbing), and the DuckDB-twin checks on an
+adversarial corpus that pin the dedup and winnow Arrow kernels (the twins
+are their reference decomposition)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from p_id_text_extraction_spark.operators import dedup, multimodal, similarity, textstats
 
@@ -174,83 +173,20 @@ def test_winnow_shared_run_shares_fingerprint(spark):
         (2, "other opening words " + shared + " with another different tail"),
         (3, "completely unrelated content about gardening tomatoes in summer"),
     ], "doc_id long, text string")
-    fps = {r.doc_id: set(r.fp_csv.split(",")) for r in textstats.winnow_fingerprints(docs).collect()}
+    fps = {r.doc_id: set(r.fp_csv.split(","))
+           for r in textstats.winnow_fingerprints_kernel(docs).collect()}
     assert fps[1] & fps[2], "shared passage produced no shared fingerprint"
     assert not (fps[1] & fps[3])
     assert not (fps[2] & fps[3])
 
 
 def test_minhash_identical_signatures(spark, docs_df):
-    sigs = {r.doc_id: r.sig for r in dedup.minhash_signatures(docs_df).collect()}
+    sigs = {r.doc_id: r.sig for r in dedup.minhash_sketches_kernel(docs_df).collect()}
     assert sigs[0] == sigs[1]
     assert sigs[0] != sigs[3]
     # near-dup shares most signature positions
     same = sum(1 for a, b in zip(sigs[0], sigs[2]) if a == b)
     assert same >= 16  # >=50% of 32 hashes
-
-
-def test_minhash_sketches_kernel_equals_relational(spark):
-    """The Arrow kernel behind minhash_lsh_pairs must value-match the
-    staged relational composition (gram_arrays -> hashed_gram_arrays ->
-    minhash_signatures): sig exactly (position = coefficient), hg as a
-    SET (array_distinct keeps first occurrence, np.unique sorts; every
-    consumer is order-free).  Corpus includes unicode, tabs/newlines that
-    survive _norm_text, repeated grams, NULL text, and docs too short for
-    any full shingle (which must emit NO row on both paths)."""
-    rows = [
-        (0, "the quick brown fox jumps over the quick brown fox again"),
-        (1, "  Mixed   CASE   and   collapsed    spaces   here  "),
-        (2, "unicode tokensé café naïve 日本語 text okay"),
-        (3, "tabs\tstay\tglued and\nnewlines too plus more words"),
-        (4, "one two"),              # < n tokens -> no shingle -> no row
-        (5, ""),                     # empty -> no row
-        (6, "x y z"),                # exactly one shingle
-        (7, "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 3),
-        (8, None),                   # NULL -> no row, no crash
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    hg_rel = {r.doc_id: sorted(r.hg) for r in dedup.hashed_gram_arrays(df).collect()
-              if r.hg}
-    sig_rel = {r.doc_id: r.sig for r in dedup.minhash_signatures(df).collect()}
-    out = dedup.minhash_sketches_kernel(df).collect()
-    assert {r.doc_id for r in out} == set(sig_rel)
-    for r in out:
-        assert sorted(r.hg) == hg_rel[r.doc_id], r.doc_id
-        assert r.sig == sig_rel[r.doc_id], r.doc_id
-    # map-only plan: no exchange beyond the deliberate _spread repartition
-    plan = dedup.minhash_sketches_kernel(df)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-
-
-def test_hashed_grams_kernel_equals_relational(spark):
-    """ngram_jaccard's kernel-minted hashed shingle MULTISETS must match
-    md5_hash60(explode(gram_arrays)) row-for-row (as multisets; explode
-    order is irrelevant to the window/join consumers, but the kernel emits
-    them sorted) and size(hs) must equal the relational set_size.  NULL
-    text emits no row on either path."""
-    rows = [
-        (0, "the quick brown fox jumps over the quick brown fox again"),
-        (1, "  Mixed   CASE   and   collapsed    spaces   here  "),
-        (2, "unicode tokensé café naïve 日本語 text okay"),
-        (3, "one two"),
-        (4, ""),
-        (5, "x y z"),
-        (6, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    grams = dedup.gram_arrays(df)
-    rel = {}
-    for r in (grams.select("doc_id", F.explode("grams").alias("g"))
-              .select("doc_id", dedup.md5_hash60(F.col("g")).alias("sh")).collect()):
-        rel.setdefault(r.doc_id, []).append(r.sh)
-    rel_sizes = {r.doc_id: r.set_size for r in
-                 grams.select("doc_id", F.size("grams").alias("set_size"))
-                 .filter(F.col("set_size") > 0).collect()}
-    out = dedup.hashed_grams_kernel(df).collect()
-    assert {r.doc_id for r in out} == set(rel_sizes)
-    for r in out:
-        assert r.hs == sorted(rel[r.doc_id]), r.doc_id    # emitted sorted
-        assert len(r.hs) == rel_sizes[r.doc_id], r.doc_id
 
 
 def test_minhash_lsh_candidates(spark, docs_df):
@@ -399,35 +335,184 @@ def test_non_media_payload_decode_raises():
         multimodal.decode_payload(b"x", "image")
 
 
-def test_null_text_matches_duckdb_twin(spark, tmp_path):
-    """The NULL-text contract (ADVICE round 2): operators whose twins
-    would diverge on NULL text (Spark size(NULL)=-1 vs DuckDB len(NULL)
-    =NULL) must coalesce identically on BOTH sides.  Exercised against a
-    corpus that actually contains NULL/empty text, which the generated
-    testdata never does."""
+def _long_doc(n_tokens: int, seed: int) -> str:
+    import random
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(400)] + ["the", "and", "of", "to"]
+    return " ".join(rng.choice(vocab) for _ in range(n_tokens))
+
+
+_LONG = _long_doc(6000, seed=3)
+# adversarial documents: NULL, empty, whitespace-only, \x00, tabs and
+# newlines, Latin-1 / Greek / CJK text, short docs, an exact and a near
+# duplicate pair, and a 6,000-token document.  The twins' per-document
+# list_transform needs ~9 GB and minutes on a 60,000-token document, so
+# documents here stay at a few thousand tokens (the mega-document case is
+# test_dedup_kernels_survive_a_mega_document, Spark-only).
+TWIN_DOCS = [
+    (1, "a normal document with several plain words"),
+    (2, None),
+    (3, ""),
+    (4, "  line\nline\nline  "),
+    (5, "mail me at a.b@example.com or https://x.test/page now"),
+    (6, "   \t  "),
+    (7, "\x00"),
+    (8, "tabs\tstay\tglued and\nnewlines too plus the more words"),
+    # RE2 finds "and" inside "ñandú", Java's Unicode \b does not
+    (9, "héllo wörld naïve café déjà vu über straße jalapeño ñandú αβγδε"),
+    (10, ("日本語のテキストで 重複検出を試験する " * 8).strip()),
+    (11, "Ελληνικό κείμενο για τον έλεγχο της ανίχνευσης διπλότυπων"),
+    (12, "one two"),
+    (13, "x y z"),
+    (14, "x" * 23),              # exactly one full winnow window
+    (15, "x" * 22),              # no full winnow window
+    (16, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (17, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (18, "the quick brown fox jumps over the lazy dog near the river bank yesterday"),
+    (19, "  Mixed   CASE   and   collapsed    spaces   here  "),
+    (20, "the quick brown fox jumps over the quick brown fox again"),
+    (21, "el perro de la casa que come la comida de 2024 y 1999"),
+    (22, _LONG),
+    (23, _LONG.rsplit(" ", 40)[0] + " the end of a slightly different ending"),
+    (24, "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 3),
+]
+
+
+@pytest.fixture(scope="module")
+def twin_corpus(spark, tmp_path_factory):
+    """(sf_dir, duckdb connection) over TWIN_DOCS as a documents table."""
     import duckdb
-    from p_id_text_extraction_spark.plans.queries import ORACLES, QUERIES
-    rows = [
-        (1, "a normal document with several plain words", "en", "gen", 42),
-        (2, None, "en", "gen", 0),
-        (3, "", "en", "gen", 0),
-        (4, "  line\nline\nline  ", "en", "gen", 18),
-        (5, "mail me at a.b@example.com or https://x.test/page now", "en", "gen", 53),
-    ]
-    docs = spark.createDataFrame(
+    sf_dir = tmp_path_factory.mktemp("twin_corpus")
+    rows = [(i, t, "en", "gen", len(t or "")) for i, t in TWIN_DOCS]
+    (spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long")
-    path = str(tmp_path / "documents.parquet")
-    docs.coalesce(1).write.mode("overwrite").parquet(path)
+     .coalesce(1).write.parquet(str(sf_dir / "documents.parquet")))
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
-    for name in ["doc_token_count", "doc_redact_pii", "doc_repetition",
-                 "doc_fingerprint", "corpus_split", "doc_lang_id"]:
-        sdf = QUERIES[name](spark, str(tmp_path)).toPandas()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet/*.parquet'")
+    yield str(sf_dir), con
+    con.close()
+
+
+def test_null_text_matches_duckdb_twin(spark, twin_corpus):
+    """Every listed query equals its DuckDB twin on the adversarial corpus.
+    The twins are the reference decomposition of the dedup and winnow
+    kernels (NULL, empty or short text emits no row; non-ASCII winnow
+    grams are code-point slices; fp_csv sorts as strings).  The rest pin
+    the NULL/empty-text contract (Spark size(NULL)=-1 vs DuckDB
+    len(NULL)=NULL), the empty-text quality guard in corpus_clean, the
+    ASCII word boundary of the language markers, and the NULL payload of
+    multimodal_features."""
+    from p_id_text_extraction_spark.plans.queries import ORACLES, QUERIES
+    from p_id_text_extraction_spark.util import unpersist_tracked
+    sf_dir, con = twin_corpus
+    for name in ["doc_token_count", "doc_quality_score", "doc_redact_pii",
+                 "doc_repetition", "doc_fingerprint", "corpus_split",
+                 "doc_lang_id", "corpus_clean", "corpus_stats",
+                 "corpus_token_quantiles", "corpus_pack", "multimodal_features",
+                 "multimodal_gate", "multimodal_resize", "multimodal_frame_plan",
+                 "validate_dimensions", "validation_summary", "doc_winnow",
+                 "dedup_exact", "dedup_simhash", "dedup_ngram_jaccard",
+                 "dedup_components", "dedup_components_jump", "dedup_minhash_lsh"]:
+        sdf = QUERIES[name](spark, sf_dir).toPandas()
+        unpersist_tracked()
         odf = con.execute(ORACLES[name]).df()
         s = sorted(map(tuple, sdf[sorted(sdf.columns)].astype(str).itertuples(index=False)))
         o = sorted(map(tuple, odf[sorted(odf.columns)].astype(str).itertuples(index=False)))
-        assert len(sdf) == len(odf), name
+        assert len(sdf) == len(odf) > 0, name
         assert s == o, f"{name}: first diff {[p for p in zip(s, o) if p[0] != p[1]][:2]}"
+
+
+def _ctes_before(sql: str, cte: str) -> str:
+    """The WITH clause of a twin up to (not including) CTE ``cte``."""
+    return sql[:sql.index(f"{cte} AS (")].rstrip().rstrip(",")
+
+
+def _one_map_in_pandas(df) -> None:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+
+
+def test_minhash_sketches_kernel_equals_relational(spark, twin_corpus):
+    """Per document, the minhash Arrow kernel equals the relational
+    decomposition in the minhash twin, cut before its banded CTE (hgrams
+    and sig).  sig matches by position (position = coefficient), hg as a
+    set (the kernel emits it sorted).  NULL, empty, whitespace-only and
+    short docs emit no row; the kernel is one MapInPandas."""
+    from p_id_text_extraction_spark.plans import queries
+    sf_dir, con = twin_corpus
+    docs = queries._t(spark, sf_dir, "documents")
+    sig_cols = ", ".join(f"s{i}" for i in range(32))
+    twin_sk = {r[0]: (sorted(r[1]), list(r[2])) for r in con.execute(
+        _ctes_before(queries._minhash_lsh_sql(), "banded")
+        + f" SELECT doc_id, hg, [{sig_cols}] FROM hgrams JOIN sig USING (doc_id)").fetchall()}
+    sketches = dedup.minhash_sketches_kernel(docs).collect()
+    assert {r.doc_id for r in sketches} == set(twin_sk)
+    for r in sketches:
+        assert (r.hg, r.sig) == twin_sk[r.doc_id], r.doc_id
+    assert {2, 3, 6, 7, 12}.isdisjoint(twin_sk)     # NULL/empty/blank/short
+    _one_map_in_pandas(dedup.minhash_sketches_kernel(docs))
+
+
+def test_hashed_grams_kernel_equals_relational(spark, twin_corpus):
+    """Per document, the hashed-gram Arrow kernel equals the relational
+    decomposition in the n-gram twin (its consumer), cut before its freq
+    CTE: hs sorted, with its length = the twin's set_size.  NULL, empty,
+    whitespace-only and short docs emit no row; the kernel is one
+    MapInPandas."""
+    from p_id_text_extraction_spark.plans import queries
+    sf_dir, con = twin_corpus
+    docs = queries._t(spark, sf_dir, "documents")
+    twin_hs = {r[0]: (r[1], r[2]) for r in con.execute(
+        _ctes_before(queries.ORACLES["dedup_ngram_jaccard"], "freq")
+        + " SELECT doc_id, list_sort(list(sh)), any_value(set_size)"
+        " FROM sh JOIN sizes USING (doc_id) GROUP BY doc_id").fetchall()}
+    hs = dedup.hashed_grams_kernel(docs).collect()
+    assert {r.doc_id for r in hs} == set(twin_hs)
+    for r in hs:
+        assert (r.hs, len(r.hs)) == twin_hs[r.doc_id], r.doc_id
+    assert {2, 3, 6, 7, 12}.isdisjoint(twin_hs)     # NULL/empty/blank/short
+    _one_map_in_pandas(dedup.hashed_grams_kernel(docs))
+
+
+def test_winnow_kernel_equals_relational(spark, twin_corpus):
+    """Per document, the winnow Arrow kernel equals the relational
+    decomposition in the winnow twin (k-gram rows, md5-60 hashes, a
+    sliding-window min): fp_csv sorted as strings, n_fps, non-ASCII
+    k-grams as code-point slices.  A 23-char doc has exactly one full
+    window, a 22-char doc none; NULL and short docs emit no row; the
+    kernel is one MapInPandas."""
+    from p_id_text_extraction_spark.plans import queries
+    sf_dir, con = twin_corpus
+    docs = queries._t(spark, sf_dir, "documents")
+    twin = {r[0]: (r[1], r[2]) for r in con.execute(queries.ORACLES["doc_winnow"]).fetchall()}
+    got = {r.doc_id: (r.fp_csv, r.n_fps)
+           for r in textstats.winnow_fingerprints_kernel(docs).collect()}
+    assert got == twin
+    assert twin[14][1] == 1 and 15 not in twin      # 23 vs 22 chars
+    assert {9, 10, 11} <= set(twin)                 # Latin-1 / CJK / Greek
+    assert {2, 3, 6, 7, 12}.isdisjoint(twin)        # NULL/empty/blank/short
+    _one_map_in_pandas(textstats.winnow_fingerprints_kernel(docs))
+
+
+def test_dedup_kernels_survive_a_mega_document(spark):
+    """A 40,000-token document through the three Arrow kernels and both
+    kernel-backed pair operators: no crash, full output.  Twin equality
+    cannot cover this size -- the twins' per-document list_transform needs
+    ~9 GB and minutes on 60,000 tokens -- so this test is Spark-only."""
+    mega = _long_doc(40_000, seed=5)
+    docs = spark.createDataFrame([(1, mega), (2, mega), (3, "x y z w")],
+                                 "doc_id long, text string")
+    sk = {r.doc_id: r for r in dedup.minhash_sketches_kernel(docs).collect()}
+    hs = {r.doc_id: r.hs for r in dedup.hashed_grams_kernel(docs).collect()}
+    assert sk[1].sig == sk[2].sig and len(sk[1].sig) == 32
+    assert len(sk[1].hg) == len(hs[1]) > 10_000
+    wn = {r.doc_id: r for r in textstats.winnow_fingerprints_kernel(docs).collect()}
+    assert wn[1].fp_csv == wn[2].fp_csv and wn[1].n_fps > 100
+    ng = {(r.doc_a, r.doc_b): r.jaccard_milli
+          for r in dedup.ngram_jaccard_pairs(docs).collect()}
+    lsh = {(r.doc_a, r.doc_b): r.jaccard_milli
+           for r in dedup.minhash_lsh_pairs(docs).collect()}
+    assert ng == lsh == {(1, 2): 1000}
 
 
 def test_operator_caches_released_by_unpersist_tracked(spark, docs_df):
@@ -438,8 +523,8 @@ def test_operator_caches_released_by_unpersist_tracked(spark, docs_df):
     unpersist_tracked()   # isolate from earlier tests in this session
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    dedup.minhash_lsh_pairs(docs_df).collect()       # persists hashed grams
-    dedup.ngram_jaccard_pairs(docs_df).collect()     # persists gram arrays
+    dedup.minhash_lsh_pairs(docs_df).collect()       # persists the sketches
+    dedup.ngram_jaccard_pairs(docs_df).collect()     # persists hs + postings
     assert jsc.getPersistentRDDs().size() > before
     released = unpersist_tracked()
     assert released >= 2
@@ -674,36 +759,6 @@ def test_real_feature_and_resize_on_png(spark):
     # jpeg stays honestly gated
     with pytest.raises(NotImplementedError):
         multimodal.decode_payload(b"\xff\xd8\xff\xe0jfif", "image")
-
-
-def test_winnow_kernel_equals_relational(spark):
-    """The zero-shuffle winnow kernel must be byte-identical to the
-    relational window formulation, including the string-sorted CSV and
-    the no-full-window drop; plan must be map-only."""
-    import pandas as pd
-    texts = [
-        "The quick brown fox jumps over the lazy dog and keeps running",
-        "THE QUICK  brown    fox",         # normalization collapses/cases
-        "short",                            # < k after norm -> dropped
-        "x" * 23,                           # exactly w full windows edge
-        "x" * 22,                           # n_grams = w - 1 -> no row
-        ("alpha beta gamma " * 40).strip(),  # repeats -> few distinct mins
-        # NON-ASCII: multi-byte code points force the kernel's str-slice
-        # path -- byte k-grams would diverge from substr here
-        "héllo wörld naïve café déjà vu über straße jalapeño ñandú αβγδε",
-        ("日本語のテキストで 重複検出を試験する " * 8).strip(),
-        "mixed ascii and 中文 characters interleaved 测试 throughout the line",
-    ]
-    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts,
-                        "lang": "en", "source": "t",
-                        "n_chars": [len(t) for t in texts]})
-    docs = spark.createDataFrame(pdf)
-    a = sorted(map(tuple, textstats.winnow_fingerprints(docs).collect()))
-    b = sorted(map(tuple, textstats.winnow_fingerprints_kernel(docs).collect()))
-    assert a == b and len(a) >= 3
-    plan = (textstats.winnow_fingerprints_kernel(docs)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan and plan.count("MapInPandas") == 1
 
 
 def test_dup_components_local_equals_distributed(spark):
