@@ -5,8 +5,15 @@ run_pipeline.py:336-341,368-387).  At 10^12-turn scale the unit of restart
 is an input *bucket*: ``bucket_id = pmod(xxhash64(conv_id), n_buckets)``
 (deterministic across runs -- xxhash64 is seed-stable).  A manifest table
 records each completed (bucket_id, job_fingerprint) with lineage counters
-(FIXTURES.md section 3); resume left-anti-joins the input against it and
-re-processes only missing buckets.
+(FIXTURES.md section 3); resume re-processes only missing buckets.
+
+The resume anti-join is evaluated on the driver: the done set holds at
+most ``n_buckets`` ids, so it is collected (no Spark job when there is no
+manifest yet), subtracted from ``range(n_buckets)``, and the remainder
+reaches the scan as ONE ``bucket_id IN (...)`` predicate.  A Spark-side
+left-anti join against the done set would add an exchange that shuffles
+every todo turn's text before the kernel, for a table of <= n_buckets
+rows.
 
 Idempotence and isolation rules:
   * the fingerprint covers config AND n_buckets -- a manifest row can never
@@ -29,11 +36,11 @@ so both land as partitioned parquet with identical semantics.
 
 from __future__ import annotations
 
-import os
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from p_id_text_extraction_spark.config import DEFAULT_CONFIG, ExtractConfig
 from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
@@ -91,15 +98,21 @@ def with_bucket(turns: DataFrame, n_buckets: int,
     return turns.withColumn("bucket_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
 
 
-def completed_buckets(spark: SparkSession, manifest_dir: str, fingerprint: str) -> DataFrame:
-    """Bucket ids already done for this fingerprint; empty if no manifest yet."""
-    if not os.path.isdir(manifest_dir) or not any(
-        f.endswith(".parquet") for root, _d, files in os.walk(manifest_dir) for f in files
-    ):
-        return spark.createDataFrame([], "bucket_id int")
+def completed_buckets(spark: SparkSession, manifest_dir: str, fingerprint: str) -> set[int]:
+    """Bucket ids already done for this fingerprint; empty if no manifest
+    yet.  The probe goes through the Hadoop FileSystem API, so a file://,
+    hdfs:// or s3a:// manifest is found like a plain path."""
+    from p_id_text_extraction_spark.util import has_file
+    if not has_file(spark, manifest_dir, ".parquet"):
+        return set()
     # the declared schema spares a schema-inference job over the footers
     m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
-    return m.filter(F.col("job_fingerprint") == fingerprint).select("bucket_id").distinct()
+    return _bucket_ids(m, fingerprint)
+
+
+def _bucket_ids(manifest: DataFrame, fingerprint: str) -> set[int]:
+    return {r.bucket_id for r in manifest.filter(F.col("job_fingerprint") == fingerprint)
+            .select("bucket_id").distinct().collect()}           # <= n_buckets rows
 
 
 def _clear_todo_partitions(spark: SparkSession, output_dir: str,
@@ -172,20 +185,18 @@ def run_with_resume(
     if catalog == "iceberg":
         from p_id_text_extraction_spark.sources import iceberg as ice
         from p_id_text_extraction_spark.sources.iceberg_format import table_exists
-        if table_exists(manifest_dir):
-            done = (ice.read_table(spark, manifest_dir)
-                    .filter(F.col("job_fingerprint") == fingerprint)
-                    .select("bucket_id").distinct())
-        else:
-            done = spark.createDataFrame([], "bucket_id int")
+        done_ids = (_bucket_ids(ice.read_table(spark, manifest_dir), fingerprint)
+                    if table_exists(manifest_dir) else set())
     else:
-        done = completed_buckets(spark, manifest_dir, fingerprint)
-    done_ids = {r.bucket_id for r in done.collect()}           # <= n_buckets rows
-    todo = bucketed.join(done, "bucket_id", "left_anti")       # J7: resume anti-join
-    if bucket_filter is not None:
-        todo = todo.filter(F.col("bucket_id").isin(bucket_filter))
+        done_ids = completed_buckets(spark, manifest_dir, fingerprint)
     todo_ids = [b for b in range(n_buckets)
                 if b not in done_ids and (bucket_filter is None or b in bucket_filter)]
+    # J7: the resume anti-join, applied as one predicate on the scan (one
+    # parsed expression: Column.isin costs a py4j call per literal; an
+    # empty IN () does not parse, and an empty todo set runs no plan)
+    in_todo = (F.expr(f"bucket_id IN ({', '.join(map(str, todo_ids))})")
+               if todo_ids else F.lit(False))
+    todo = bucketed.filter(in_todo)
 
     # re-derive the bucket on the output side: it is a deterministic
     # function of conv_id, no need to thread it through the pipeline
@@ -285,12 +296,16 @@ def run_with_resume(
         for b in sorted(todo_ids)
     ] if record else []
     if manifest_rows:
-        mdf = spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA)
         if catalog == "iceberg":
-            ice.ensure_table(spark, manifest_dir, mdf.schema)
-            ice.append_spans(mdf, manifest_dir)   # snapshot-isolated append
+            # <= n_buckets rows already on the driver: a snapshot-isolated
+            # append that runs no Spark job on a format table
+            schema = StructType.fromDDL(MANIFEST_SCHEMA)
+            ice.ensure_table(spark, manifest_dir, schema)
+            ice.append_rows(spark, manifest_rows, schema, manifest_dir)
         else:
-            mdf.write.mode("append").parquet(manifest_dir)
+            # a Spark write, so any Hadoop URI works
+            (spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA)
+             .write.mode("append").parquet(manifest_dir))
 
     return {"fingerprint": fingerprint, "buckets_completed": len(manifest_rows),
             "task_rows_max": int(task_rows_max),

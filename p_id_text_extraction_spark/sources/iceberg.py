@@ -86,6 +86,18 @@ def append_spans(df: DataFrame, table_or_path: str) -> None:
         df.write.mode("append").parquet(table_or_path)
 
 
+def append_rows(spark: SparkSession, rows: list[tuple], schema,
+                table_or_path: str) -> None:
+    """Append driver-side ``rows`` (tuples in ``schema`` column order): one
+    pyarrow-written file and a snapshot commit, with no Spark job, on an
+    Iceberg-format table path; ``append_spans`` over a DataFrame of the
+    rows on a catalog table name or the parquet fallback."""
+    if _is_format_table(table_or_path):
+        iceberg_format.append_rows(table_or_path, rows)
+    else:
+        append_spans(spark.createDataFrame(rows, schema), table_or_path)
+
+
 def overwrite_span_partitions(df: DataFrame, table_or_path: str,
                               partition_cols: tuple[str, ...] = ("bucket_id",),
                               replaced: list[dict] | None = None) -> None:

@@ -22,10 +22,12 @@ needs:
     partitions, exactly like the reference implementation.
 
 Deliberate deviations, documented:
-  * data files are written by Spark's parquet writer, which records no
-    Iceberg field-ids; the table metadata therefore carries
+  * data files are written by Spark's parquet writer, except small
+    driver-side appends (``append_rows``, e.g. the checkpoint manifest)
+    and delete files, which pyarrow writes; both stamp top-level
+    ``PARQUET:field_id``s, and the table metadata also carries
     ``schema.name-mapping.default`` -- the spec's sanctioned mechanism
-    for mapping id-less files by column name;
+    for mapping id-less files (and nested list elements) by column name;
   * identity-partition source columns live in the directory structure
     (Hive layout) rather than in the data files; reads reconstitute them
     via Spark's basePath partition discovery, value-identical to Iceberg's
@@ -608,10 +610,8 @@ def add_position_deletes(table_path: str, deletes: list[tuple[str, int]]) -> dic
     manifest (manifest-list content=1) at the next sequence number, so it
     applies to every data file with data sequence number <= its own."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     meta = load_metadata(table_path)
     seq = meta["last-sequence-number"] + 1
-    snapshot_id = seq
     rows = sorted(deletes)
     schema = pa.schema([
         pa.field("file_path", pa.string(), nullable=False,
@@ -621,23 +621,71 @@ def add_position_deletes(table_path: str, deletes: list[tuple[str, int]]) -> dic
     ])
     tbl = pa.Table.from_pydict(
         {"file_path": [r[0] for r in rows], "pos": [r[1] for r in rows]}, schema=schema)
+    df = {**_write_driver_file(table_path, tbl, seq, "-deletes"), "content": 1}
+    return _commit_delete_file(table_path, meta, df, seq)
+
+
+def _write_driver_file(table_path: str, tbl, seq: int, suffix: str) -> dict:
+    """Write a pyarrow table as ONE parquet file under the table's data
+    dir; return its unpartitioned data_file dict (no bounds)."""
+    import pyarrow.parquet as pq
     data_dir = os.path.join(table_path, "data")
     os.makedirs(data_dir, exist_ok=True)
-    path = os.path.join(data_dir, f"{seq:05d}-{_uuid.uuid4().hex[:12]}-deletes.parquet")
+    path = os.path.join(data_dir, f"{seq:05d}-{_uuid.uuid4().hex[:12]}{suffix}.parquet")
     pq.write_table(tbl, path)
-    df = {"content": 1, "file_path": path, "partition": {},
-          "record_count": len(rows), "file_size_in_bytes": os.path.getsize(path),
-          "lower_bounds": None, "upper_bounds": None}
-    entries = [_entry(df, STATUS_ADDED, snapshot_id, seq)]
-    new_manifest = _write_manifest(meta, table_path, entries, snapshot_id, seq,
+    return {"file_path": path, "partition": {}, "record_count": tbl.num_rows,
+            "file_size_in_bytes": os.path.getsize(path),
+            "lower_bounds": None, "upper_bounds": None}
+
+
+def _commit_delete_file(table_path: str, meta: dict, df: dict, seq: int) -> dict:
+    """Commit one delete file under a DELETE manifest at ``seq``."""
+    entries = [_entry(df, STATUS_ADDED, seq, seq)]
+    new_manifest = _write_manifest(meta, table_path, entries, seq, seq,
                                    "d0", content=1)
     manifest_list = [new_manifest] + _current_manifest_list(meta)
-    return _commit_snapshot(table_path, meta, manifest_list, snapshot_id, seq,
-                            "delete")
+    return _commit_snapshot(table_path, meta, manifest_list, seq, seq, "delete")
 
 
-_ICEBERG_TO_PA = {"string": "string", "long": "int64", "int": "int32",
-                  "double": "float64", "boolean": "bool_"}
+# Iceberg primitive -> pyarrow type constructor and its arguments, for the
+# files the driver writes itself
+_ICEBERG_TO_PA = {"string": ("string",), "long": ("int64",), "int": ("int32",),
+                  "double": ("float64",), "boolean": ("bool_",),
+                  "timestamptz": ("timestamp", "us", "UTC")}
+
+
+def _pa_field(f: dict):
+    """An Iceberg schema field as a PARQUET:field_id-stamped pyarrow field."""
+    import pyarrow as pa
+    if not isinstance(f["type"], str) or f["type"] not in _ICEBERG_TO_PA:
+        raise NotImplementedError(f"column {f['name']!r} of type {f['type']!r} "
+                                  f"has no pyarrow mapping")
+    ctor, *args = _ICEBERG_TO_PA[f["type"]]
+    return pa.field(f["name"], getattr(pa, ctor)(*args),
+                    metadata={b"PARQUET:field_id": str(f["id"]).encode()})
+
+
+def append_rows(table_path: str, rows: list[tuple]) -> dict:
+    """Commit an append snapshot of driver-side ``rows`` (tuples in table
+    column order) as ONE parquet file written by pyarrow, stamped with
+    PARQUET:field_id and carrying footer column bounds -- no Spark job,
+    for small tables such as the checkpoint manifest.  Unpartitioned
+    tables of primitive columns only."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    meta = load_metadata(table_path)
+    if meta["partition-specs"][meta["default-spec-id"]]["fields"]:
+        raise ValueError(f"append_rows writes unpartitioned tables only: {table_path}")
+    fields = meta["schemas"][meta["current-schema-id"]]["fields"]
+    if any(len(r) != len(fields) for r in rows):
+        raise ValueError(f"append_rows: every row needs {len(fields)} values")
+    schema = pa.schema([_pa_field(f) for f in fields])
+    tbl = pa.Table.from_pydict(
+        {f["name"]: [r[i] for r in rows] for i, f in enumerate(fields)}, schema=schema)
+    df = _write_driver_file(table_path, tbl, meta["last-sequence-number"] + 1, "")
+    df["lower_bounds"], df["upper_bounds"] = _file_bounds(
+        pq.ParquetFile(df["file_path"]).metadata, {f["name"]: f for f in fields})
+    return append_files(table_path, [df])
 
 
 def add_equality_deletes(table_path: str, rows: list[dict],
@@ -655,42 +703,19 @@ def add_equality_deletes(table_path: str, rows: list[dict],
     whose data sequence number is STRICTLY LESS than its own (a position
     delete uses <=), and a null delete value matches null data values."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     meta = load_metadata(table_path)
     schema_fields = {f["name"]: f
                      for f in meta["schemas"][meta["current-schema-id"]]["fields"]}
     missing = [c for c in equality_cols if c not in schema_fields]
     if missing:
         raise ValueError(f"equality columns not in table schema: {missing}")
-    for c in equality_cols:
-        t = schema_fields[c]["type"]
-        if not isinstance(t, str) or t not in _ICEBERG_TO_PA:
-            raise NotImplementedError(f"equality delete on column type {t!r}")
     seq = meta["last-sequence-number"] + 1
-    snapshot_id = seq
-    pa_fields = [
-        pa.field(c, getattr(pa, _ICEBERG_TO_PA[schema_fields[c]["type"]])(),
-                 metadata={b"PARQUET:field_id":
-                           str(schema_fields[c]["id"]).encode()})
-        for c in equality_cols]
     tbl = pa.Table.from_pydict(
         {c: [r.get(c) for r in rows] for c in equality_cols},
-        schema=pa.schema(pa_fields))
-    data_dir = os.path.join(table_path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    path = os.path.join(
-        data_dir, f"{seq:05d}-{_uuid.uuid4().hex[:12]}-eq-deletes.parquet")
-    pq.write_table(tbl, path)
-    df = {"content": 2, "file_path": path, "partition": {},
-          "record_count": len(rows), "file_size_in_bytes": os.path.getsize(path),
-          "lower_bounds": None, "upper_bounds": None,
+        schema=pa.schema([_pa_field(schema_fields[c]) for c in equality_cols]))
+    df = {**_write_driver_file(table_path, tbl, seq, "-eq-deletes"), "content": 2,
           "equality_ids": [schema_fields[c]["id"] for c in equality_cols]}
-    entries = [_entry(df, STATUS_ADDED, snapshot_id, seq)]
-    new_manifest = _write_manifest(meta, table_path, entries, snapshot_id, seq,
-                                   "d0", content=1)
-    manifest_list = [new_manifest] + _current_manifest_list(meta)
-    return _commit_snapshot(table_path, meta, manifest_list, snapshot_id, seq,
-                            "delete")
+    return _commit_delete_file(table_path, meta, df, seq)
 
 
 # ---------------------------------------------------------------------------
@@ -955,10 +980,9 @@ def _stage_datafiles(df, table_path: str, partition_cols: tuple[str, ...],
     # expressible through column metadata, so the table keeps
     # schema.name-mapping.default as the spec-sanctioned fallback for
     # nested levels and for files written before the stamping existed.
-    for c in df.columns:
-        f = schema_fields.get(c)
-        if f is not None:
-            df = df.withMetadata(c, {"parquet.field.id": f["id"]})
+    from pyspark.sql import functions as F
+    df = df.select([F.col(c).alias(c, metadata={"parquet.field.id": schema_fields[c]["id"]})
+                    if c in schema_fields else F.col(c) for c in df.columns])
     # hidden partitioning: derive transform columns (e.g. bucket[N]) the
     # caller's df doesn't carry; partitionBy turns them into directories
     # only -- the source column stays in the data files

@@ -62,19 +62,36 @@ def dynamic_partition_overwrite(spark: SparkSession):
             spark.conf.set(_OVERWRITE_MODE_KEY, prev)
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop FileSystem API, so
+    the same code works for local paths AND file://, hdfs://, s3a:// URIs
+    (os / shutil calls silently miss anything with a scheme)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def delete_path(spark: SparkSession, path: str) -> None:
-    """Delete a directory through the Hadoop FileSystem API, so the same
-    code works for local paths AND file://, hdfs://, s3a:// URIs (a plain
-    shutil.rmtree silently no-ops on anything with a scheme)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Delete a directory (recursively) through the Hadoop FileSystem API."""
+    fs, hpath = _hadoop_fs(spark, path)
     fs.delete(hpath, True)
 
 
 def make_dirs(spark: SparkSession, path: str) -> None:
     """Create a directory (and parents) through the Hadoop FileSystem API;
-    a no-op when it already exists.  Same URI coverage as delete_path."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    hpath.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(hpath)
+    a no-op when it already exists."""
+    fs, hpath = _hadoop_fs(spark, path)
+    fs.mkdirs(hpath)
+
+
+def has_file(spark: SparkSession, path: str, suffix: str) -> bool:
+    """True iff ``path`` exists and holds a file named ``*suffix`` at any
+    depth, probed through the Hadoop FileSystem API; stops at the first
+    match."""
+    fs, hpath = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return False
+    files = fs.listFiles(hpath, True)
+    while files.hasNext():
+        if files.next().getPath().getName().endswith(suffix):
+            return True
+    return False

@@ -154,9 +154,10 @@ def test_snapshot_isolation_for_pinned_readers(spark, table):
 
 def test_resume_with_iceberg_catalog(spark, tmp_path):
     """The full checkpoint protocol over Iceberg tables, UNMOCKED:
-    kill/resume byte-identical to an uninterrupted parquet-catalog run,
-    idempotent third run commits nothing, manifest is a snapshot-committed
-    Iceberg table."""
+    kill/resume byte-identical to the same kill/resume through the parquet
+    catalog, idempotent third run commits nothing, manifest is a
+    snapshot-committed Iceberg table whose rows, types and footer field
+    ids round-trip."""
     turns = transcripts_df(spark, gen_turns(40, max_turns=10, seed=3))
     out, man = str(tmp_path / "spans_ice"), str(tmp_path / "man_ice")
     r1 = run_with_resume(spark, turns, out, man, n_buckets=8,
@@ -169,17 +170,37 @@ def test_resume_with_iceberg_catalog(spark, tmp_path):
     # no-op resume must not have committed an empty snapshot
     assert len(ice.snapshot_ids(out)) == 2
 
-    run_with_resume(spark, turns, str(tmp_path / "pq"), str(tmp_path / "pqm"), n_buckets=8)
+    pq_out, pq_man = str(tmp_path / "pq"), str(tmp_path / "pqm")
+    run_with_resume(spark, turns, pq_out, pq_man, n_buckets=8, bucket_filter=[0, 1, 2, 3])
+    run_with_resume(spark, turns, pq_out, pq_man, n_buckets=8)
     a = [tuple(r) for r in ice.read_table(spark, out)
          .drop("bucket_id", "job_fingerprint").orderBy(*KEY).collect()]
-    b = [tuple(r) for r in spark.read.parquet(str(tmp_path / "pq"))
+    b = [tuple(r) for r in spark.read.parquet(pq_out)
          .drop("bucket_id", "job_fingerprint").orderBy(*KEY).collect()]
     assert a == b and len(a) > 100
 
+    from pyspark.sql.types import StructType
+
+    from p_id_text_extraction_spark.plans.checkpoint import MANIFEST_SCHEMA
     m = ice.read_table(spark, man)
-    assert m.count() == 8
+    assert m.schema == StructType.fromDDL(MANIFEST_SCHEMA)
     assert set(m.toPandas()["input_probe"]) <= {"counted", "hash_empty_verified"}
     assert len(ice.snapshot_ids(man)) == 2   # one manifest append per productive run
+    # the driver-written manifest rows equal the parquet catalog's Spark-
+    # written ones, bar completed_ts (the commit time, the last column)
+    rows = m.collect()
+    assert len(rows) == 8 and all(r.completed_ts for r in rows)
+    pq_rows = spark.read.schema(MANIFEST_SCHEMA).parquet(pq_man).collect()
+    assert sorted(r[:-1] for r in rows) == sorted(r[:-1] for r in pq_rows)
+    # every column of each manifest file carries its Iceberg field id
+    import pyarrow.parquet as pq
+    meta = ice.load_metadata(man)
+    want = {f["name"]: f["id"] for f in meta["schemas"][meta["current-schema-id"]]["fields"]}
+    files = ice.plan_files(man)
+    assert len(files) == 2 and all(f["lower_bounds"] for f in files)
+    for f in files:
+        assert {fld.name: int(fld.metadata[b"PARQUET:field_id"])
+                for fld in pq.read_schema(f["file_path"])} == want
 
 
 def test_resume_with_bucket_partitioned_spans(spark, tmp_path):

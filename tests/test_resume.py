@@ -137,6 +137,20 @@ def test_resume_equals_relational_plan_and_drop_rate(spark, turns_df, tmp_path):
         assert rates == {drop_rate}
 
 
+def _jobs(spark, group, call):
+    """Run ``call`` under a Spark job group; return (its result, the
+    number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("catalog", ["parquet", "iceberg"])
 def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
     """A resume over a complete manifest collects the done set and stops:
@@ -146,19 +160,84 @@ def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
     run_with_resume(spark, turns_df, out, man, n_buckets=8, catalog=catalog)
     snaps = ((ice.snapshot_ids(out), ice.snapshot_ids(man))
              if catalog == "iceberg" else None)
-    sc = spark.sparkContext
-    group = f"noop-resume-{catalog}"
-    sc.setJobGroup(group, "no-op resume")
-    try:
-        r = run_with_resume(spark, turns_df, out, man, n_buckets=8, catalog=catalog)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    r, jobs = _jobs(spark, f"noop-resume-{catalog}", lambda: run_with_resume(
+        spark, turns_df, out, man, n_buckets=8, catalog=catalog))
+    assert jobs <= 2
     assert {k: v for k, v in r.items() if k != "fingerprint"} == \
         {"buckets_completed": 0, "task_rows_max": 0, "task_rows_median": 0}
     if catalog == "iceberg":
         assert (ice.snapshot_ids(out), ice.snapshot_ids(man)) == snaps
+
+
+# Spark jobs a killed call (fresh manifest) and its resume launch on this
+# fixture, as measured: mostly the shuffle and result stages of the spans
+# write, the per-bucket/per-task count and the turns_in aggregate; the
+# parquet catalog adds its manifest write, and a resume adds the done-set
+# read.
+JOBS_PER_CALL = {"parquet": (8, 10), "iceberg": (7, 9)}
+
+
+def _sql_plans_since(spark, last_id):
+    """Physical plan texts of the SQL executions with id > ``last_id``."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in reversed(range(execs.size())):
+        e = execs.apply(i)
+        if e.executionId() <= last_id:
+            break
+        plans.append(e.physicalPlanDescription())
+    return plans
+
+
+def _last_sql_id(spark):
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+@pytest.mark.parametrize("catalog", ["parquet", "iceberg"])
+def test_resume_plan_has_no_join(spark, turns_df, tmp_path, catalog):
+    """The resume anti-join is evaluated on the driver: a killed call on a
+    fresh manifest plans no Join, its kernel (MapInPandas) sits below the
+    write's single Exchange, and the killed and resume calls stay within
+    their measured Spark job counts."""
+    import re
+    out, man = str(tmp_path / "o"), str(tmp_path / "m")
+    last_id = _last_sql_id(spark)
+    r1, killed_jobs = _jobs(spark, f"killed-{catalog}", lambda: run_with_resume(
+        spark, turns_df, out, man, n_buckets=8, bucket_filter=[0, 1, 2, 3], catalog=catalog))
+    plans = _sql_plans_since(spark, last_id)
+    assert r1["buckets_completed"] == 4
+    assert plans and not any("Join" in p for p in plans)
+    write = [p for p in plans
+             if "InsertIntoHadoopFsRelationCommand" in p and "MapInPandas" in p]
+    assert len(write) == 1
+    # each exchange shows up in the initial and the final AQE plan: compare
+    # partitionings, not nodes
+    parts = {re.sub(r"#\d+", "", m) for m in
+             re.findall(r"Arguments: (hashpartitioning\([^)]*\))", write[0])}
+    assert parts == {"hashpartitioning(bucket_id, conv_id, 4)"}
+    tree = write[0].split("\n\n")[0]
+    assert tree.index("Exchange") < tree.index("MapInPandas")
+
+    r2, resume_jobs = _jobs(spark, f"resume-{catalog}", lambda: run_with_resume(
+        spark, turns_df, out, man, n_buckets=8, catalog=catalog))
+    assert r2["buckets_completed"] == 4
+    assert killed_jobs <= JOBS_PER_CALL[catalog][0]
+    assert resume_jobs <= JOBS_PER_CALL[catalog][1]
+
+
+def test_kill_and_resume_over_file_uri(spark, turns_df, tmp_path):
+    """A file:// manifest and output resume like plain paths: the resume
+    finds the killed call's manifest rows (the probe goes through the
+    Hadoop FileSystem API), redoes only the missing buckets, and a third
+    call is a no-op."""
+    out, man = (tmp_path / "o").as_uri(), (tmp_path / "m").as_uri()
+    done = [run_with_resume(spark, turns_df, out, man, n_buckets=4, **kw)["buckets_completed"]
+            for kw in ({"bucket_filter": [0, 1]}, {}, {})]
+    assert done == [2, 2, 0]
+    assert sorted(r.bucket_id for r in spark.read.parquet(man).collect()) == [0, 1, 2, 3]
+    run_with_resume(spark, turns_df, str(tmp_path / "pq"), str(tmp_path / "pqm"), n_buckets=4)
+    assert _rows(spark, out) == _rows(spark, str(tmp_path / "pq"))
 
 
 def test_zero_span_todo_bucket_cleared(spark, tmp_path):
