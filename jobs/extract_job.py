@@ -1,20 +1,32 @@
 """spark-submit driver for the extraction pipeline (north_rule run mode).
 
 Cluster:
-    spark-submit --py-files p_id_text_extraction_spark.zip jobs/extract_job.py \
+    spark-submit --py-files p_id_text_extraction_spark.zip \
+        --conf spark.python.daemon.module=p_id_text_extraction_spark.worker_daemon \
+        jobs/extract_job.py \
         --input <transcripts table/path> --output <spans path> \
         --manifest <checkpoint manifest path> --buckets 4096
+
+The worker daemon (p_id_text_extraction_spark/worker_daemon.py) takes the
+Python worker's fixed per-task cost off every task.  Spark starts it with
+the executors' PYTHONPATH; a --py-files archive reaches a worker's sys.path
+only per task, after the daemon has started.  So the package must be on the
+executors' PYTHONPATH when the daemon starts (an image with the package
+installed, or spark.executorEnv.PYTHONPATH); otherwise leave the --conf
+line out.
 
 Sandbox (local mode):
     python jobs/extract_job.py --input /tmp/in.parquet --output /tmp/out \
         --manifest /tmp/manifest --buckets 16 --cores 32
 
 The job is idempotent: rerunning after any failure resumes from the
-checkpoint manifest (left-anti join on bucket x config fingerprint) and
-dynamically overwrites only unfinished bucket partitions -- the
-`--start-at` restart analogue (run_pipeline.py:336-341) at bucket
-granularity.  The extraction is the fused map-only kernel; counters land
-in the manifest per bucket (turns_in, spans_out, classifier_drop_rate).
+checkpoint manifest (the done buckets of this config fingerprint are
+subtracted on the driver and the rest reach the scan as one
+``bucket_id IN (...)`` predicate) and dynamically overwrites only
+unfinished bucket partitions -- the `--start-at` restart analogue
+(run_pipeline.py:336-341) at bucket granularity.  The extraction is the
+fused map-only kernel; counters land in the manifest per bucket (turns_in,
+spans_out, classifier_drop_rate).
 """
 
 from __future__ import annotations

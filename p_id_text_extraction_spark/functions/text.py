@@ -22,12 +22,3 @@ def mint_block_id(conv_id: Column | str, turn_idx: Column | str, idx: Column | s
                            F.col(turn_idx) if isinstance(turn_idx, str) else turn_idx,
                            F.col(idx) if isinstance(idx, str) else idx)
 
-
-def clamped_pad(start: Column, end: Column, n: Column, pad: int) -> tuple[Column, Column]:
-    """P8: max(0, start-pad), min(n, end+pad) (cropping_Images.py:44-47)."""
-    return F.greatest(F.lit(0), start - pad), F.least(n, end + pad)
-
-
-def scale_round(offset: Column, scale: float, digits: int = 4) -> Column:
-    """P7: round(offset * scale, digits) (src/convert_coord.py:17-23)."""
-    return F.round(offset * F.lit(scale), digits)

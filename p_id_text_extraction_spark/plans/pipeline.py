@@ -79,7 +79,3 @@ def extract_pipeline_fused(
     pruned = turns.select("conv_id", "turn_idx", "text")
     return pruned.mapInPandas(make_extract_rows_kernel(cfg, candidates), SPAN_ROW_SCHEMA)
 
-
-def run_metrics(observation: Observation) -> dict:
-    """Materialized counter values; call after an action on the plan."""
-    return dict(observation.get)

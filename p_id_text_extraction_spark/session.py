@@ -4,7 +4,12 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+from p_id_text_extraction_spark import worker_daemon
+
+DAEMON_MODULE = "spark.python.daemon.module"
 
 
 def get_spark(
@@ -24,20 +29,30 @@ def get_spark(
     # env var -- more, smaller map tasks would only bloat the shuffle
     # block count there (guide section 2.2).
     max_part = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
-    b = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.maxPartitionBytes", max_part)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra or {}).items():
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.app.name": app,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.files.maxPartitionBytes": max_part,
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        **(extra or {}),
+    }
+    # The worker daemon (worker_daemon.py) takes ~0.12 s of fixed cost off
+    # every Python task.  A daemon module the submitter configured wins: the
+    # gateway is launched here exactly as getOrCreate would launch it, so
+    # the JVM's conf also holds spark-submit --conf and spark-defaults.conf.
+    if DAEMON_MODULE not in conf:
+        SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
+        if not SparkConf().contains(DAEMON_MODULE):
+            conf[DAEMON_MODULE] = worker_daemon.__name__
+    b = SparkSession.builder
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
