@@ -13,7 +13,9 @@ the executors' PYTHONPATH; a --py-files archive reaches a worker's sys.path
 only per task, after the daemon has started.  So the package must be on the
 executors' PYTHONPATH when the daemon starts (an image with the package
 installed, or spark.executorEnv.PYTHONPATH); otherwise leave the --conf
-line out.
+line out.  The session also appends the package's parent directory to
+spark.executorEnv.PYTHONPATH, so in local mode the script runs from any
+working directory.
 
 Sandbox (local mode):
     python jobs/extract_job.py --input /tmp/in.parquet --output /tmp/out \
@@ -25,8 +27,10 @@ subtracted on the driver and the rest reach the scan as one
 ``bucket_id IN (...)`` predicate) and dynamically overwrites only
 unfinished bucket partitions -- the `--start-at` restart analogue
 (run_pipeline.py:336-341) at bucket granularity.  The extraction is the
-fused map-only kernel; counters land in the manifest per bucket (turns_in,
-spans_out, classifier_drop_rate).
+fused map-only kernel, and it counts the manifest's per-bucket counters
+(turns_in, spans_out, classifier_drop_rate, task_rows_max/median) while it
+extracts: they are exact under task retries, and the spans write is the
+run's only pass over the data.
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ loading TrOCR once per process (text_recognition.py:37-51).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.accumulators import Accumulator
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
@@ -94,8 +94,73 @@ SPAN_ROW_SCHEMA = T.StructType([
 _SPAN_COLS = [f.name for f in SPAN_ROW_SCHEMA.fields]
 
 
+class LineageCounts:
+    """Lineage counters of the fused kernel's tasks, folded into running
+    sums: ``turns`` and ``spans`` per restart bucket, ``write_rows`` (spans)
+    per hash partition of the write, and the detected ``candidates``.
+
+    ``seen`` holds the partition ids of the kernel tasks counted so far.  A
+    task's counts enter the sums the first time its partition id arrives
+    and are dropped after that: the kernel is deterministic, so a
+    re-executed stage, a second action or a recomputed partition re-sends
+    the same counts and the sums stay exact.  The state is
+    O(kernel tasks + buckets + write partitions)."""
+
+    def __init__(self) -> None:
+        self.seen: set[int] = set()
+        self.turns: dict[int, int] = {}
+        self.spans: dict[int, int] = {}
+        self.write_rows: dict[int, int] = {}
+        self.candidates = 0
+
+    def merge(self, other: LineageCounts) -> LineageCounts:
+        if other.seen <= self.seen:
+            return self
+        if not other.seen.isdisjoint(self.seen):
+            # one task sends one partition id, so this cannot happen
+            raise ValueError("lineage counts of overlapping task sets cannot be merged exactly")
+        self.seen |= other.seen
+        for mine, theirs in ((self.turns, other.turns), (self.spans, other.spans),
+                             (self.write_rows, other.write_rows)):
+            _add_counts(mine, theirs.items())
+        self.candidates += other.candidates
+        return self
+
+    def count_batch(self, pdf: pd.DataFrame, out: pd.DataFrame) -> pd.DataFrame:
+        """Count one batch's turns and spans; return ``out`` with the
+        turns' ``bucket_id``.  Both keys are functions of conv_id, so the
+        spans are attributed through a per-conversation lookup, outside
+        the per-turn loop."""
+        keys = pdf[["conv_id", "bucket_id", "write_pid"]].drop_duplicates("conv_id").set_index("conv_id")
+        buckets = out["conv_id"].map(keys["bucket_id"])
+        _add_counts(self.turns, pdf["bucket_id"].value_counts().items())
+        _add_counts(self.spans, buckets.value_counts().items())
+        _add_counts(self.write_rows, out["conv_id"].map(keys["write_pid"]).value_counts().items())
+        return out.assign(bucket_id=buckets.astype("int32"))
+
+
+def _add_counts(into: dict[int, int], items) -> None:
+    for k, v in items:
+        into[int(k)] = into.get(int(k), 0) + int(v)
+
+
+class FirstWinsParam(AccumulatorParam):
+    """Accumulator merge for `LineageCounts`: first value per partition id
+    wins, never an add over a re-sent one."""
+
+    def zero(self, value: LineageCounts) -> LineageCounts:
+        return LineageCounts()
+
+    def addInPlace(self, value1: LineageCounts, value2: LineageCounts) -> LineageCounts:
+        return value1.merge(value2)
+
+
+COUNTED_SPAN_ROW_SCHEMA = T.StructType(
+    SPAN_ROW_SCHEMA.fields + [T.StructField("bucket_id", T.IntegerType(), True)])
+
+
 def make_extract_rows_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
-                             candidates: Accumulator | None = None):
+                             counter: Accumulator | None = None):
     """mapInPandas kernel for the FUSED strategy: the whole per-turn oracle
     (parse -> segment -> detect -> suppress -> cluster -> merge -> crop ->
     normalize -> coord -> rank) in one Arrow-batched pass, emitting final
@@ -110,20 +175,23 @@ def make_extract_rows_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
     declarative window/aggregate algebra as the golden cross-check; both
     are tested against the same oracle.
 
-    ``candidates``: a Spark accumulator that receives, once per Arrow
-    batch, the detected candidate count of the sweep the kernel already
-    runs (``extract_turn_tuples(stats=...)``).  Accumulators updated in a
-    transformation OVER-COUNT when a task is retried, a stage resubmitted
-    or a cached partition recomputed: read the value once, right after the
-    first action that materializes the plan, and treat it as telemetry --
-    never gate correctness on it.
+    ``counter``: a Spark accumulator of `LineageCounts` (merged with
+    `FirstWinsParam`).  The batches then also carry ``bucket_id`` (passed
+    through to the spans, `COUNTED_SPAN_ROW_SCHEMA`) and ``write_pid``, the
+    partition id the write's hash partitioning gives the turn's spans.  The
+    kernel counts turns and spans per bucket, spans per write partition
+    and the detected candidates of the sweep it already runs
+    (``extract_turn_tuples(stats=...)``), and sends them once per task,
+    after its last batch, keyed by the task's partition id: the counts are
+    exact under task retries, stage resubmission and repeated actions.
     """
     from p_id_text_extraction_spark.oracle.pipeline import extract_turn_tuples
 
     def kernel(batches):
+        counts = LineageCounts() if counter is not None else None
+        stats = {"candidates_in": 0} if counter is not None else None
         for pdf in batches:
             rows: list[tuple] = []
-            stats = {"candidates_in": 0} if candidates is not None else None
             for conv_id, turn_idx, txt in zip(
                 pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist()
             ):
@@ -131,9 +199,12 @@ def make_extract_rows_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
                     conv_id, int(turn_idx), txt if isinstance(txt, str) else None, cfg=cfg,
                     stats=stats,
                 ))
-            if stats is not None:
-                candidates.add(stats["candidates_in"])
-            yield pd.DataFrame(rows, columns=_SPAN_COLS)
+            out = pd.DataFrame(rows, columns=_SPAN_COLS)
+            yield out if counts is None else counts.count_batch(pdf, out)
+        if counts is not None:
+            from pyspark import TaskContext
+            counts.seen.add(TaskContext.get().partitionId())
+            counts.candidates = stats["candidates_in"]
+            counter.add(counts)
 
     return kernel
-

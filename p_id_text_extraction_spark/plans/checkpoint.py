@@ -25,10 +25,12 @@ Idempotence and isolation rules:
     the write -- a bucket that died mid-write is fully rewritten on retry,
     and a todo bucket that yields ZERO spans still ends up empty instead of
     retaining rows from an aborted earlier attempt;
-  * counters come from the in-plan DataFrame (the kernel's candidate
-    accumulator + one groupBy on the cached spans), never from re-reading
-    the output directory -- at 100 TB a read-back is two extra full passes
-    over everything ever written.
+  * counters are counted by the fused kernel while it extracts and ride
+    an idempotent accumulator keyed by the kernel task's partition id, so
+    they are exact under task retries and stage resubmission: the call
+    caches nothing, runs no aggregate, never re-scans its input and never
+    re-reads the output directory (at 100 TB a read-back is two extra full
+    passes over everything ever written).
 
 Production target is two Iceberg tables; the sandbox has no Iceberg jars,
 so both land as partitioned parquet with identical semantics.
@@ -43,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from p_id_text_extraction_spark.config import DEFAULT_CONFIG, ExtractConfig
+from p_id_text_extraction_spark.functions.udfs import FirstWinsParam, LineageCounts
 from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
 
 MANIFEST_COLUMNS = ["bucket_id", "job_fingerprint", "turns_in", "spans_out",
@@ -111,8 +114,9 @@ def completed_buckets(spark: SparkSession, manifest_dir: str, fingerprint: str) 
 
 
 def _bucket_ids(manifest: DataFrame, fingerprint: str) -> set[int]:
+    # one row per completed bucket: a plain collect, no distinct shuffle
     return {r.bucket_id for r in manifest.filter(F.col("job_fingerprint") == fingerprint)
-            .select("bucket_id").distinct().collect()}           # <= n_buckets rows
+            .select("bucket_id").collect()}
 
 
 def _clear_todo_partitions(spark: SparkSession, output_dir: str,
@@ -150,10 +154,13 @@ def run_with_resume(
     tracks the cluster instead of collapsing to n_buckets tasks.
 
     The extraction is the fused map-only kernel
-    (plans/pipeline.extract_pipeline_fused); its candidate count rides a
-    Spark accumulator into the manifest's classifier_drop_rate.  With no
-    todo bucket the call returns after the done-set collect without
-    running any extraction: nothing is written or committed.
+    (plans/pipeline.extract_pipeline_fused).  It also counts every
+    manifest counter (turns and spans per bucket, spans per write
+    partition, detected candidates) into an exact
+    `functions.udfs.LineageCounts` accumulator, so the spans write is the
+    call's only pass over the data.  With no todo bucket the call returns
+    after the done-set collect without running any extraction: nothing is
+    written or committed.
 
     ``catalog``: 'parquet' (partitioned parquet + explicit todo-partition
     clears) or 'iceberg' (both sinks are Iceberg tables via
@@ -196,15 +203,16 @@ def run_with_resume(
     # empty IN () does not parse, and an empty todo set runs no plan)
     in_todo = (F.expr(f"bucket_id IN ({', '.join(map(str, todo_ids))})")
                if todo_ids else F.lit(False))
-    todo = bucketed.filter(in_todo)
-
-    # re-derive the bucket on the output side: it is a deterministic
-    # function of conv_id, no need to thread it through the pipeline
-    candidates = spark.sparkContext.accumulator(0)
-    base = extract_pipeline_fused(todo.drop("bucket_id"), cfg, candidates=candidates)
     n_write = write_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # write_pid is the partition id the write's HashPartitioning(bucket_id,
+    # conv_id) gives a turn's spans, so the kernel can count the write
+    # stage's rows per task without a pass over the spans
+    todo = (bucketed.filter(in_todo)
+            .withColumn("write_pid", F.pmod(F.hash("bucket_id", "conv_id"), F.lit(n_write))))
+
+    counter = spark.sparkContext.accumulator(LineageCounts(), FirstWinsParam())
     spans = (
-        with_bucket(base, n_buckets, bucket_fn)
+        extract_pipeline_fused(todo, cfg, counter=counter)
         .withColumn("job_fingerprint", F.lit(fingerprint))
         .repartition(n_write, "bucket_id", "conv_id")
         .sortWithinPartitions("conv_id", "turn_idx", "span_rank")
@@ -232,52 +240,39 @@ def run_with_resume(
         return {"fingerprint": fingerprint, "buckets_completed": 0,
                 "task_rows_max": 0, "task_rows_median": 0}
 
-    spans = spans.persist()
     from p_id_text_extraction_spark.util import dynamic_partition_overwrite
-    try:
-        if catalog == "iceberg":
-            # one atomic overwrite-partitions snapshot: replaced partitions
-            # are EXPLICIT (the todo set), so a bucket retried to zero
-            # spans still drops its old files -- no pre-clear step, and a
-            # reader never observes a half-written state.
-            ice.overwrite_span_partitions(spans_w, output_dir, replaced=replaced)
-        else:
-            _clear_todo_partitions(spark, output_dir, fingerprint, todo_ids)
-            with dynamic_partition_overwrite(spark):
-                (spans.write.mode("overwrite")
-                 .partitionBy("job_fingerprint", "bucket_id")
-                 .parquet(output_dir))
-        # the write was the first action on the cache, so the accumulator
-        # has seen each kernel task once (barring retries -- telemetry only)
-        candidates_in = candidates.value
+    if catalog == "iceberg":
+        # one atomic overwrite-partitions snapshot: replaced partitions
+        # are EXPLICIT (the todo set), so a bucket retried to zero
+        # spans still drops its old files -- no pre-clear step, and a
+        # reader never observes a half-written state.
+        ice.overwrite_span_partitions(spans_w, output_dir, replaced=replaced)
+    else:
+        _clear_todo_partitions(spark, output_dir, fingerprint, todo_ids)
+        with dynamic_partition_overwrite(spark):
+            (spans.write.mode("overwrite")
+             .partitionBy("job_fingerprint", "bucket_id")
+             .parquet(output_dir))
 
-        # lineage counters per completed bucket (FIXTURES.md section 3), all
-        # from THIS run's plan -- no read-back.  ONE aggregate over the
-        # cache yields both the per-bucket span counts and the WRITE-STAGE
-        # SKEW COUNTERS: rows per task of the (bucket_id, conv_id) write
-        # partitioning (a hot conversation concentrates its spans in one
-        # task).  <= n_write x n_buckets tiny rows back.
-        counts = spans.groupBy(F.spark_partition_id().alias("pid"), "bucket_id").count().collect()
-    finally:
-        spans.unpersist()
-    per_bucket: dict[int, int] = {}
-    per_task: dict[int, int] = {}
-    for r in counts:
-        per_bucket[r.bucket_id] = per_bucket.get(r.bucket_id, 0) + r["count"]
-        per_task[r.pid] = per_task.get(r.pid, 0) + r["count"]
+    # lineage counters per completed bucket (FIXTURES.md section 3), all
+    # counted by the kernel during the write.  The WRITE-STAGE SKEW
+    # COUNTERS are the rows per non-empty task of the (bucket_id, conv_id)
+    # write partitioning (a hot conversation concentrates its spans in
+    # one task).
+    counts = counter.value
+    turns_in, per_bucket = counts.turns, counts.spans
     import statistics
-    pp = list(per_task.values())
+    pp = list(counts.write_rows.values())
     task_rows_max = max(pp) if pp else 0
     task_rows_median = int(statistics.median(pp)) if pp else 0
     # classifier_drop_rate (candidates dropped by suppress/merge/crop vs
     # candidates detected -- the boxes-before/after ratio of
     # grouping_logic.py:978-983) is a run-level rate stamped on each
     # bucket row of this run.
+    candidates_in = counts.candidates
     spans_total = sum(per_bucket.values())
     drop_rate = (candidates_in - spans_total) / candidates_in if candidates_in else 0.0
 
-    turns_in = {r.bucket_id: r.cnt
-                for r in todo.groupBy("bucket_id").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     from datetime import datetime, timezone
     now = datetime.now(timezone.utc)
     # every todo bucket this run COVERED gets a manifest row -- including

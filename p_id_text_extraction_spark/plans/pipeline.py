@@ -57,7 +57,7 @@ def extract_pipeline(
 def extract_pipeline_fused(
     turns: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    candidates: Accumulator | None = None,
+    counter: Accumulator | None = None,
 ) -> DataFrame:
     """FUSED strategy: the entire per-turn pipeline inside one Arrow kernel.
 
@@ -70,12 +70,14 @@ def extract_pipeline_fused(
     is the production path; the relational plan stays as the extract_full
     query and the golden cross-check.
 
-    ``candidates``: optional Spark accumulator for the detected candidate
-    count (see `functions.udfs.make_extract_rows_kernel` for its
-    over-count caveat).
+    ``counter``: optional `functions.udfs.LineageCounts` accumulator.
+    ``turns`` must then carry ``bucket_id`` and ``write_pid``; the spans
+    carry ``bucket_id`` and the kernel's counts are exact (see
+    `functions.udfs.make_extract_rows_kernel`).
     """
     cfg.validate()
-    from p_id_text_extraction_spark.functions.udfs import SPAN_ROW_SCHEMA, make_extract_rows_kernel
-    pruned = turns.select("conv_id", "turn_idx", "text")
-    return pruned.mapInPandas(make_extract_rows_kernel(cfg, candidates), SPAN_ROW_SCHEMA)
-
+    from p_id_text_extraction_spark.functions import udfs
+    cols, schema = ["conv_id", "turn_idx", "text"], udfs.SPAN_ROW_SCHEMA
+    if counter is not None:
+        cols, schema = cols + ["bucket_id", "write_pid"], udfs.COUNTED_SPAN_ROW_SCHEMA
+    return turns.select(*cols).mapInPandas(udfs.make_extract_rows_kernel(cfg, counter), schema)

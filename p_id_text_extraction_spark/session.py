@@ -10,6 +10,10 @@ from pyspark.sql import SparkSession
 from p_id_text_extraction_spark import worker_daemon
 
 DAEMON_MODULE = "spark.python.daemon.module"
+WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+# the directory holding the package: Python workers import the daemon and
+# the kernels (pickled by reference) from it
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -43,14 +47,23 @@ def get_spark(
         "spark.ui.enabled": "false",
         **(extra or {}),
     }
-    # The worker daemon (worker_daemon.py) takes ~0.12 s of fixed cost off
-    # every Python task.  A daemon module the submitter configured wins: the
-    # gateway is launched here exactly as getOrCreate would launch it, so
-    # the JVM's conf also holds spark-submit --conf and spark-defaults.conf.
-    if DAEMON_MODULE not in conf:
-        SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
-        if not SparkConf().contains(DAEMON_MODULE):
-            conf[DAEMON_MODULE] = worker_daemon.__name__
+    # The gateway is launched here exactly as getOrCreate would launch it,
+    # so the JVM's conf also holds spark-submit --conf and
+    # spark-defaults.conf.  The worker daemon (worker_daemon.py) takes
+    # ~0.12 s of fixed cost off every Python task; a daemon module the
+    # submitter configured wins.
+    SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
+    submitted = SparkConf()
+    if DAEMON_MODULE not in conf and not submitted.contains(DAEMON_MODULE):
+        conf[DAEMON_MODULE] = worker_daemon.__name__
+    # A driver started outside the package's parent directory (a script
+    # that put it on its own sys.path) would start workers that cannot
+    # import the package: append it to the workers' PYTHONPATH, after any
+    # value the caller or the submitter set.
+    paths = [p for p in (conf.get(WORKER_PYTHONPATH) or submitted.get(WORKER_PYTHONPATH, ""))
+             .split(os.pathsep) if p]
+    if PACKAGE_PARENT not in paths:
+        conf[WORKER_PYTHONPATH] = os.pathsep.join(paths + [PACKAGE_PARENT])
     b = SparkSession.builder
     for k, v in conf.items():
         b = b.config(k, v)

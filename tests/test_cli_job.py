@@ -8,7 +8,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from jobs.extract_job import main, parse_args
 from p_id_text_extraction_spark.sources.transcripts import gen_turns, transcripts_df
@@ -87,3 +88,29 @@ def test_cli_iceberg_catalog_end_to_end(spark, tmp_path):
     assert '"buckets_completed": 0' in buf.getvalue()
     # the no-op rerun committed no extra snapshot to the spans table
     assert len(ice.snapshot_ids(str(tmp_path / "o_ice"))) == 1
+
+
+def test_cli_runs_outside_the_repo_root(spark, tmp_path):
+    """Started from another directory with no PYTHONPATH, the script puts
+    the package on the driver's sys.path only; its Python workers (the
+    daemon, the kernels pickled by reference) must import it too.  The
+    run succeeds and its manifest equals an in-process run's."""
+    import subprocess
+    src = str(tmp_path / "in")
+    transcripts_df(spark, gen_turns(30, max_turns=8, seed=9)).write.parquet(src)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    run = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "extract_job.py"), "--input", src,
+         "--output", str(tmp_path / "o_cli"), "--manifest", str(tmp_path / "m_cli"),
+         "--buckets", "4", "--cores", spark.conf.get("spark.sql.shuffle.partitions")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+
+    assert main(["--input", src, "--output", str(tmp_path / "o"),
+                 "--manifest", str(tmp_path / "m"), "--buckets", "4"], spark=spark) == 0
+
+    def manifest(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).drop("completed_ts").collect())
+
+    assert manifest(str(tmp_path / "m_cli")) == manifest(str(tmp_path / "m"))

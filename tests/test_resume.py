@@ -4,11 +4,17 @@ uninterrupted run; a completed manifest must skip all work."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from p_id_text_extraction_spark.config import ExtractConfig
+from p_id_text_extraction_spark.oracle.pipeline import extract_turn_tuples
 from p_id_text_extraction_spark.plans.checkpoint import job_fingerprint, run_with_resume
-from p_id_text_extraction_spark.sources.transcripts import gen_turns, transcripts_df
+from p_id_text_extraction_spark.sources.transcripts import gen_skew_turns, gen_turns, transcripts_df
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 KEY = ["conv_id", "turn_idx", "span_rank"]
 
@@ -69,7 +75,6 @@ def test_manifest_skew_counters_flag_hot_conversation(spark, tmp_path):
     its spans in one write task -- the manifest's task_rows_max/median
     ratio must surface it, which is the production observability the
     skew story promises."""
-    from p_id_text_extraction_spark.sources.transcripts import gen_skew_turns
     turns = transcripts_df(spark, gen_skew_turns())
     out, man = str(tmp_path / "o"), str(tmp_path / "m")
     r = run_with_resume(spark, turns, out, man, n_buckets=4)
@@ -125,7 +130,6 @@ def test_resume_equals_relational_plan_and_drop_rate(spark, turns_df, tmp_path):
     plan's spans, and its accumulator-fed manifest drop rate equals the
     relational observe() value -- on the golden corpus and the skew
     fixture."""
-    from p_id_text_extraction_spark.sources.transcripts import gen_skew_turns
     skew = transcripts_df(spark, gen_skew_turns(1))
     for i, turns in enumerate((turns_df, skew)):
         out, man = str(tmp_path / f"o{i}"), str(tmp_path / f"m{i}")
@@ -154,7 +158,7 @@ def _jobs(spark, group, call):
 @pytest.mark.parametrize("catalog", ["parquet", "iceberg"])
 def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
     """A resume over a complete manifest collects the done set and stops:
-    at most 2 Spark jobs, no Iceberg snapshot, same return value as ever."""
+    one Spark job, no Iceberg snapshot, same return value as ever."""
     from p_id_text_extraction_spark.sources import iceberg_format as ice
     out, man = str(tmp_path / "o"), str(tmp_path / "m")
     run_with_resume(spark, turns_df, out, man, n_buckets=8, catalog=catalog)
@@ -162,7 +166,7 @@ def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
              if catalog == "iceberg" else None)
     r, jobs = _jobs(spark, f"noop-resume-{catalog}", lambda: run_with_resume(
         spark, turns_df, out, man, n_buckets=8, catalog=catalog))
-    assert jobs <= 2
+    assert jobs <= 1
     assert {k: v for k, v in r.items() if k != "fingerprint"} == \
         {"buckets_completed": 0, "task_rows_max": 0, "task_rows_median": 0}
     if catalog == "iceberg":
@@ -170,11 +174,10 @@ def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
 
 
 # Spark jobs a killed call (fresh manifest) and its resume launch on this
-# fixture, as measured: mostly the shuffle and result stages of the spans
-# write, the per-bucket/per-task count and the turns_in aggregate; the
-# parquet catalog adds its manifest write, and a resume adds the done-set
-# read.
-JOBS_PER_CALL = {"parquet": (8, 10), "iceberg": (7, 9)}
+# fixture, as measured: the shuffle and result stages of the spans write
+# (the kernel counts every manifest counter on the way); the parquet
+# catalog adds its manifest write, and a resume adds the done-set collect.
+JOBS_PER_CALL = {"parquet": (3, 4), "iceberg": (2, 3)}
 
 
 def _sql_plans_since(spark, last_id):
@@ -244,7 +247,6 @@ def test_zero_span_todo_bucket_cleared(spark, tmp_path):
     """A todo bucket that yields zero spans must still clear its partition:
     dynamic overwrite alone rewrites nothing for it, silently keeping rows
     from an aborted earlier attempt (ADVICE round 1)."""
-    import os
     out = str(tmp_path / "o")
     turns_a = transcripts_df(spark, [
         {"conv_id": "k", "turn_idx": 0, "role": "user",
@@ -316,3 +318,187 @@ def test_resume_churn_matrix_isolation(spark, turns_df, tmp_path):
                            n_buckets=nb_a)["buckets_completed"] == 0
     assert run_with_resume(spark, turns_df, out, man, cfg=cfg_b,
                            n_buckets=nb_b)["buckets_completed"] == 0
+
+
+def _counting_plan(turns, counter, n_buckets=8, n_write=4):
+    """The fused plan as run_with_resume counts it: the kernel's turns
+    carry their bucket and the write partition of their spans."""
+    from p_id_text_extraction_spark.plans.checkpoint import with_bucket
+    from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
+    todo = with_bucket(turns, n_buckets).withColumn(
+        "write_pid", F.pmod(F.hash("bucket_id", "conv_id"), F.lit(n_write)))
+    return extract_pipeline_fused(todo, counter=counter)
+
+
+def _noop(df):
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _lineage(spark):
+    from p_id_text_extraction_spark.functions.udfs import FirstWinsParam, LineageCounts
+    return spark.sparkContext.accumulator(LineageCounts(), FirstWinsParam())
+
+
+def test_lineage_counts_exact_over_repeated_actions(spark, turns_df):
+    """Every action re-runs the kernel; one accumulator over two actions
+    (and a third, collecting one) holds exactly one pass's counts, and
+    they equal an independent recount of the plan's input and output."""
+    from p_id_text_extraction_spark.plans.checkpoint import with_bucket
+    once, repeated = _lineage(spark), _lineage(spark)
+    _noop(_counting_plan(turns_df, once))
+    plan = _counting_plan(turns_df, repeated)
+    _noop(plan)
+    _noop(plan)
+    spans = plan.collect()
+    a, b = once.value, repeated.value
+    assert (b.seen, b.turns, b.spans, b.write_rows, b.candidates) == \
+        (a.seen, a.turns, a.spans, a.write_rows, a.candidates)
+
+    assert a.turns == {r.bucket_id: r["count"]
+                       for r in with_bucket(turns_df, 8).groupBy("bucket_id").count().collect()}
+    per_bucket: dict[int, int] = {}
+    for r in spans:
+        per_bucket[r.bucket_id] = per_bucket.get(r.bucket_id, 0) + 1
+    assert a.spans == per_bucket and spans
+    out = spark.createDataFrame(spans, plan.schema)
+    assert a.write_rows == {
+        r.pid: r["count"] for r in out.repartition(4, "bucket_id", "conv_id")
+        .groupBy(F.spark_partition_id().alias("pid")).count().collect()}
+    stats = {"candidates_in": 0}
+    for t in turns_df.collect():
+        extract_turn_tuples(t.conv_id, t.turn_idx, t.text, stats=stats)
+    assert a.candidates == stats["candidates_in"]
+
+
+def test_lineage_counts_merge_first_wins():
+    from p_id_text_extraction_spark.functions.udfs import FirstWinsParam, LineageCounts
+    param = FirstWinsParam()
+
+    def task(pid, bucket, n):
+        c = LineageCounts()
+        c.seen, c.turns, c.spans, c.write_rows, c.candidates = {pid}, {bucket: n}, {bucket: n}, {0: n}, n
+        return c
+
+    total = param.zero(None)
+    for t in (task(0, 3, 2), task(1, 3, 5), task(0, 3, 2), param.zero(None)):
+        total = param.addInPlace(total, t)
+    assert (total.seen, total.turns, total.write_rows, total.candidates) == ({0, 1}, {3: 7}, {0: 7}, 7)
+    both = param.addInPlace(task(0, 3, 2), task(1, 3, 5))
+    with pytest.raises(ValueError):
+        param.addInPlace(task(1, 3, 5), both)
+
+
+_RETRIED_RUN = """
+import json, os, sys
+from pyspark import TaskContext
+from p_id_text_extraction_spark.plans.checkpoint import run_with_resume
+from p_id_text_extraction_spark.session import get_spark
+src, marks, out, man = sys.argv[1:5]
+spark = get_spark(app="retried_resume", cores=4, shuffle_partitions=4,
+                  extra={"spark.master": "local[4,2]"})
+
+def fail_once(batches):
+    # every input partition fails its first attempt, after the kernel
+    # downstream has taken all of its batches
+    yield from batches
+    mark = os.path.join(marks, str(TaskContext.get().partitionId()))
+    if not os.path.exists(mark):
+        open(mark, "w").close()
+        raise RuntimeError("injected input failure")
+
+turns = spark.read.parquet(src)
+print(json.dumps(run_with_resume(spark, turns.mapInPandas(fail_once, turns.schema), out, man,
+                                 n_buckets=8)))
+spark.stop()
+"""
+
+
+def test_counters_exact_under_task_retries(spark, turns_df, tmp_path):
+    """local[4,2]: each input partition's first task attempt fails after
+    feeding the kernel, so every kernel task runs twice; the manifest
+    still equals an unfailed run's on every column but completed_ts."""
+    import json
+    import subprocess
+    import sys
+    src, marks = str(tmp_path / "in"), tmp_path / "marks"
+    marks.mkdir()
+    turns_df.repartition(3).write.parquet(src)
+    out, man = str(tmp_path / "o"), str(tmp_path / "m")
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    run = subprocess.run([sys.executable, "-c", _RETRIED_RUN, src, str(marks), out, man],
+                         cwd=REPO, env=env, capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert json.loads(run.stdout.strip().splitlines()[-1])["buckets_completed"] == 8
+    assert len(os.listdir(marks)) == spark.read.parquet(src).rdd.getNumPartitions() > 1
+
+    want_out, want_man = str(tmp_path / "wo"), str(tmp_path / "wm")
+    run_with_resume(spark, spark.read.parquet(src), want_out, want_man, n_buckets=8)
+    assert _manifest(spark.read.parquet(man)) == _manifest(spark.read.parquet(want_man))
+    assert _rows(spark, out) == _rows(spark, want_out)
+
+
+def _manifest(df):
+    return sorted(tuple(r) for r in df.drop("completed_ts").collect())
+
+
+RECOUNT_FIXTURES = {
+    "golden": lambda: gen_turns(40, max_turns=10, seed=3),
+    "skew": lambda: gen_skew_turns(1),
+    "hash_empty": lambda: gen_turns(3, seed=5),
+}
+
+
+@pytest.mark.parametrize("catalog,layout",
+                         [("parquet", "identity"), ("iceberg", "identity"), ("iceberg", "bucket")])
+@pytest.mark.parametrize("fixture", sorted(RECOUNT_FIXTURES))
+def test_manifest_counters_equal_recount(spark, tmp_path, fixture, catalog, layout):
+    """Every manifest counter of a killed call and its resume equals a
+    recount: turns_in from the bucketed input, spans_out from the spans
+    read back, task_rows_* from the read-back under the write's
+    (bucket_id, conv_id) partitioning, the drop rate from the oracle's
+    candidate count.  No plan of either call caches anything."""
+    import statistics
+
+    from p_id_text_extraction_spark.plans.checkpoint import with_bucket
+    from p_id_text_extraction_spark.sources import iceberg as ice
+    n_buckets, n_write = 8, int(spark.conf.get("spark.sql.shuffle.partitions"))
+    rows = RECOUNT_FIXTURES[fixture]()
+    turns = transcripts_df(spark, rows)
+    out, man = str(tmp_path / "o"), str(tmp_path / "m")
+    calls = [list(range(n_buckets // 2)), list(range(n_buckets // 2, n_buckets))]
+    last_id = _last_sql_id(spark)
+    for kw in ({"bucket_filter": calls[0]}, {}):
+        run_with_resume(spark, turns, out, man, n_buckets=n_buckets, catalog=catalog,
+                        spans_layout=layout, **kw)
+    plans = _sql_plans_since(spark, last_id)
+    assert plans and not any("InMemoryRelation" in p for p in plans)
+
+    read = (lambda p: ice.read_table(spark, p)) if catalog == "iceberg" else spark.read.parquet
+    bucket_fn = "iceberg" if layout == "bucket" else "xxhash"
+    spans = read(out).drop("job_fingerprint")
+    if layout == "bucket":
+        spans = with_bucket(spans, n_buckets, bucket_fn)
+    bucketed = with_bucket(turns, n_buckets, bucket_fn)
+    turns_in = {r.bucket_id: r["count"] for r in bucketed.groupBy("bucket_id").count().collect()}
+    spans_out = {r.bucket_id: r["count"] for r in spans.groupBy("bucket_id").count().collect()}
+    bucket_of = {r.conv_id: r.bucket_id for r in bucketed.select("conv_id", "bucket_id").collect()}
+    manifest = {r.bucket_id: r for r in read(man).collect()}
+    assert sorted(manifest) == list(range(n_buckets))
+
+    for call in calls:
+        per_task = [r["count"] for r in spans.filter(F.col("bucket_id").isin(call))
+                    .repartition(n_write, "bucket_id", "conv_id")
+                    .groupBy(F.spark_partition_id()).count().collect()]
+        stats = {"candidates_in": 0}
+        for t in rows:
+            if bucket_of[t["conv_id"]] in call:
+                extract_turn_tuples(t["conv_id"], t["turn_idx"], t["text"], stats=stats)
+        cands, n_spans = stats["candidates_in"], sum(spans_out.get(b, 0) for b in call)
+        want = (max(per_task, default=0),
+                int(statistics.median(per_task)) if per_task else 0,
+                (cands - n_spans) / cands if cands else 0.0)
+        for b in call:
+            r = manifest[b]
+            assert (r.turns_in, r.spans_out) == (turns_in.get(b, 0), spans_out.get(b, 0))
+            assert (r.task_rows_max, r.task_rows_median, r.classifier_drop_rate) == want
+            assert r.input_probe == ("counted" if turns_in.get(b) else "hash_empty_verified")
