@@ -24,8 +24,8 @@ Sandbox (local mode):
 The job is idempotent: rerunning after any failure resumes from the
 checkpoint manifest (the done buckets of this config fingerprint are
 subtracted on the driver and the rest reach the scan as one
-``bucket_id IN (...)`` predicate) and dynamically overwrites only
-unfinished bucket partitions -- the `--start-at` restart analogue
+``bucket_id IN (...)`` predicate) and replaces exactly the unfinished
+bucket partitions -- the `--start-at` restart analogue
 (run_pipeline.py:336-341) at bucket granularity.  The extraction is the
 fused map-only kernel, and it counts the manifest's per-bucket counters
 (turns_in, spans_out, classifier_drop_rate, task_rows_max/median) while it

@@ -21,8 +21,8 @@ Idempotence and isolation rules:
   * output is partitioned by (job_fingerprint, bucket_id), so runs with
     different configs never share partition directories and a config change
     can never surface another config's stale rows;
-  * every todo bucket's partition directory is explicitly cleared before
-    the write -- a bucket that died mid-write is fully rewritten on retry,
+  * the spans write replaces exactly the todo buckets' partitions, named
+    explicitly -- a bucket that died mid-write is fully rewritten on retry,
     and a todo bucket that yields ZERO spans still ends up empty instead of
     retaining rows from an aborted earlier attempt;
   * counters are counted by the fused kernel while it extracts and ride
@@ -32,8 +32,9 @@ Idempotence and isolation rules:
     re-reads the output directory (at 100 TB a read-back is two extra full
     passes over everything ever written).
 
-Production target is two Iceberg tables; the sandbox has no Iceberg jars,
-so both land as partitioned parquet with identical semantics.
+Both tables are partitioned parquet (``catalog='parquet'``) or
+Iceberg-format tables (``catalog='iceberg'``, sources/iceberg_format.py),
+with the same rows and the same retry semantics.
 """
 
 from __future__ import annotations
@@ -47,6 +48,9 @@ from pyspark.sql.types import StructType
 from p_id_text_extraction_spark.config import DEFAULT_CONFIG, ExtractConfig
 from p_id_text_extraction_spark.functions.udfs import FirstWinsParam, LineageCounts
 from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
+from p_id_text_extraction_spark.sources import iceberg as ice
+from p_id_text_extraction_spark.sources.iceberg_format import bucket_transform_col, table_exists
+from p_id_text_extraction_spark.util import has_file, make_dirs, replace_partitions
 
 MANIFEST_COLUMNS = ["bucket_id", "job_fingerprint", "turns_in", "spans_out",
                     "classifier_drop_rate", "task_rows_max",
@@ -93,44 +97,28 @@ def with_bucket(turns: DataFrame, n_buckets: int,
     restart unit IS the spans table's hidden bucket partition and a
     retried bucket maps to exactly one overwritten partition."""
     if bucket_fn == "iceberg":
-        from p_id_text_extraction_spark.sources.iceberg_format import (
-            bucket_transform_col,
-        )
         return turns.withColumn(
             "bucket_id", bucket_transform_col("conv_id", n_buckets, "string"))
     return turns.withColumn("bucket_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
 
 
 def completed_buckets(spark: SparkSession, manifest_dir: str, fingerprint: str) -> set[int]:
-    """Bucket ids already done for this fingerprint; empty if no manifest
-    yet.  The probe goes through the Hadoop FileSystem API, so a file://,
-    hdfs:// or s3a:// manifest is found like a plain path."""
-    from p_id_text_extraction_spark.util import has_file
-    if not has_file(spark, manifest_dir, ".parquet"):
+    """Bucket ids already done for this fingerprint, read from whatever the
+    manifest path holds: an Iceberg-format table through
+    sources/iceberg.read_table, else partitioned parquet; empty if there is
+    no manifest yet.  The parquet probe goes through the Hadoop FileSystem
+    API, so a file://, hdfs:// or s3a:// manifest is found like a plain
+    path."""
+    if table_exists(manifest_dir):
+        manifest = ice.read_table(spark, manifest_dir)
+    elif has_file(spark, manifest_dir, ".parquet"):
+        # the declared schema spares a schema-inference job over the footers
+        manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+    else:
         return set()
-    # the declared schema spares a schema-inference job over the footers
-    m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
-    return _bucket_ids(m, fingerprint)
-
-
-def _bucket_ids(manifest: DataFrame, fingerprint: str) -> set[int]:
     # one row per completed bucket: a plain collect, no distinct shuffle
     return {r.bucket_id for r in manifest.filter(F.col("job_fingerprint") == fingerprint)
             .select("bucket_id").collect()}
-
-
-def _clear_todo_partitions(spark: SparkSession, output_dir: str,
-                           fingerprint: str, todo_ids: list[int]) -> None:
-    """Remove the partition dirs this run is about to (re)write.  Covers the
-    two dynamic-overwrite blind spots: a bucket that died mid-write, and a
-    todo bucket that produces zero spans this time (dynamic overwrite would
-    rewrite nothing, silently keeping an aborted attempt's rows).  Deletion
-    goes through the Hadoop FileSystem API so file:// / hdfs:// / s3a://
-    output paths are handled, not just bare local paths."""
-    from p_id_text_extraction_spark.util import delete_path
-    base = f"{output_dir.rstrip('/')}/job_fingerprint={fingerprint}"
-    for b in todo_ids:
-        delete_path(spark, f"{base}/bucket_id={b}")
 
 
 def run_with_resume(
@@ -162,11 +150,15 @@ def run_with_resume(
     after the done-set collect without running any extraction: nothing is
     written or committed.
 
-    ``catalog``: 'parquet' (partitioned parquet + explicit todo-partition
-    clears) or 'iceberg' (both sinks are Iceberg tables via
-    sources/iceberg.py -- spans retried buckets land as an atomic
-    overwrite-partitions snapshot, so no pre-clear is needed, and the
-    manifest append is a snapshot commit with isolation).
+    ``catalog``: the kind of table a new spans or manifest table gets,
+    and so the spans write and the manifest append.  'parquet':
+    partitioned parquet, spans written by ``util.replace_partitions``
+    and the manifest by a Spark append.  'iceberg': Iceberg-format tables
+    via sources/iceberg.py, spans written as one atomic
+    overwrite-partitions snapshot and the manifest appended as a
+    snapshot commit with isolation.  Either way the write replaces
+    exactly the todo partitions, and the done set is read from whatever
+    the manifest path holds (``completed_buckets``).
 
     ``spans_layout`` (iceberg only): 'identity' (default -- explicit
     bucket_id column, identity-partitioned) or 'bucket' (the north_rule's
@@ -189,13 +181,7 @@ def run_with_resume(
     fingerprint = job_fingerprint(cfg, n_buckets, bucket_fn)
     bucketed = with_bucket(turns, n_buckets, bucket_fn)
 
-    if catalog == "iceberg":
-        from p_id_text_extraction_spark.sources import iceberg as ice
-        from p_id_text_extraction_spark.sources.iceberg_format import table_exists
-        done_ids = (_bucket_ids(ice.read_table(spark, manifest_dir), fingerprint)
-                    if table_exists(manifest_dir) else set())
-    else:
-        done_ids = completed_buckets(spark, manifest_dir, fingerprint)
+    done_ids = completed_buckets(spark, manifest_dir, fingerprint)
     todo_ids = [b for b in range(n_buckets)
                 if b not in done_ids and (bucket_filter is None or b in bucket_filter)]
     # J7: the resume anti-join, applied as one predicate on the scan (one
@@ -217,42 +203,33 @@ def run_with_resume(
         .repartition(n_write, "bucket_id", "conv_id")
         .sortWithinPartitions("conv_id", "turn_idx", "span_rank")
     )
+    # hidden partitioning (layout 'bucket'): no bucket_id data column --
+    # the table's bucket(conv_id, n) transform IS the bucketing, and the
+    # restart bucket ids align by construction (same murmur3 function on
+    # both sides)
+    if spans_layout == "bucket":
+        spans = spans.drop("bucket_id")
+        partition_cols = ("job_fingerprint", f"bucket(conv_id, {n_buckets})")
+        bucket_key = "conv_id_bucket"
+    else:
+        partition_cols = ("job_fingerprint", "bucket_id")
+        bucket_key = "bucket_id"
+    # the todo partitions are replaced EXPLICITLY, so a bucket retried to
+    # zero spans still drops an aborted attempt's rows
+    replaced = [{"job_fingerprint": fingerprint, bucket_key: b} for b in todo_ids]
     if catalog == "iceberg":
-        # hidden partitioning (layout 'bucket'): no bucket_id data column
-        # -- the table's bucket(conv_id, n) transform IS the bucketing,
-        # and the restart bucket ids align by construction (same murmur3
-        # function on both sides)
-        if spans_layout == "bucket":
-            spans_w = spans.drop("bucket_id")
-            partition_cols = ("job_fingerprint", f"bucket(conv_id, {n_buckets})")
-            replaced = [{"job_fingerprint": fingerprint, "conv_id_bucket": b}
-                        for b in todo_ids]
-        else:
-            spans_w = spans
-            partition_cols = ("job_fingerprint", "bucket_id")
-            replaced = [{"job_fingerprint": fingerprint, "bucket_id": b} for b in todo_ids]
-        ice.ensure_table(spark, output_dir, spans_w.schema, partition_cols)
+        ice.ensure_table(spark, output_dir, spans.schema, partition_cols)
+        # one atomic overwrite-partitions snapshot: a reader never
+        # observes a half-written state
+        write_spans = ice.overwrite_span_partitions
+    else:
+        make_dirs(spark, output_dir)
+        write_spans = replace_partitions
     if not todo_ids:
         # fully resumed: no scan, no kernel, no commit, no manifest row
-        if catalog == "parquet":
-            from p_id_text_extraction_spark.util import make_dirs
-            make_dirs(spark, output_dir)
         return {"fingerprint": fingerprint, "buckets_completed": 0,
                 "task_rows_max": 0, "task_rows_median": 0}
-
-    from p_id_text_extraction_spark.util import dynamic_partition_overwrite
-    if catalog == "iceberg":
-        # one atomic overwrite-partitions snapshot: replaced partitions
-        # are EXPLICIT (the todo set), so a bucket retried to zero
-        # spans still drops its old files -- no pre-clear step, and a
-        # reader never observes a half-written state.
-        ice.overwrite_span_partitions(spans_w, output_dir, replaced=replaced)
-    else:
-        _clear_todo_partitions(spark, output_dir, fingerprint, todo_ids)
-        with dynamic_partition_overwrite(spark):
-            (spans.write.mode("overwrite")
-             .partitionBy("job_fingerprint", "bucket_id")
-             .parquet(output_dir))
+    write_spans(spans, output_dir, partition_cols, replaced)
 
     # lineage counters per completed bucket (FIXTURES.md section 3), all
     # counted by the kernel during the write.  The WRITE-STAGE SKEW

@@ -103,12 +103,13 @@ def overwrite_span_partitions(df: DataFrame, table_or_path: str,
                               replaced: list[dict] | None = None) -> None:
     """Idempotent bucket-retry sink: Iceberg overwrite-partitions (runtime
     ``overwritePartitions()`` or the format layer's snapshot commit) or the
-    parquet dynamic-overwrite fallback.
+    parquet fallback, ``util.replace_partitions``.
 
-    ``replaced`` (format-layer path): explicit partition-value dicts to
-    drop -- pass the todo set so a retry that produces zero rows for a
-    partition still clears it; defaults to the partitions present in
-    ``df``.
+    ``replaced``: explicit partition-value dicts to drop -- pass the todo
+    set so a retry that produces zero rows for a partition still clears
+    it; defaults to the partitions present in ``df``.  The format layer
+    and the parquet fallback honour it alike; the runtime branch replaces
+    the partitions present in ``df``.
 
     The parquet fallback MUST partitionBy: dynamic overwrite is a no-op
     for unpartitioned writes, where mode('overwrite') truncates the whole
@@ -120,6 +121,5 @@ def overwrite_span_partitions(df: DataFrame, table_or_path: str,
         iceberg_format.write_dataframe(df, table_or_path,
                                        mode="overwrite_partitions", replaced=replaced)
     else:
-        from p_id_text_extraction_spark.util import dynamic_partition_overwrite
-        with dynamic_partition_overwrite(df.sparkSession):
-            df.write.mode("overwrite").partitionBy(*partition_cols).parquet(table_or_path)
+        from p_id_text_extraction_spark.util import replace_partitions
+        replace_partitions(df, table_or_path, partition_cols, replaced)

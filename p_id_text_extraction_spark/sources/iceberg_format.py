@@ -723,22 +723,37 @@ def add_equality_deletes(table_path: str, rows: list[dict],
 # ---------------------------------------------------------------------------
 
 
-def plan_files(table_path: str, snapshot_id: int | None = None,
-               partition_filter: dict | None = None,
-               column_range_filter: dict | None = None) -> list[dict]:
-    """Snapshot -> manifest list -> manifests -> live data files, with
-    partition pruning AND column-bounds file skipping
-    (``column_range_filter``: {col: (lo, hi)} inclusive -- a file whose
-    footer min/max range is disjoint never gets opened).  Returns
-    data_file dicts (file_path, partition, record_count,
-    file_size_in_bytes, bounds)."""
-    meta = load_metadata(table_path)
+def _live_files(table_path: str, meta: dict, snapshot_id: int | None,
+                content: int):
+    """Snapshot -> manifest list -> manifests of one ``content`` kind (0
+    data, 1 deletes) -> their live entries, as data_file dicts.  The data
+    sequence number rides along as ``_seq`` (internal key): the read path
+    scopes each delete to the data files it applies to by it."""
     sid = meta.get("current-snapshot-id", -1) if snapshot_id is None else snapshot_id
     if sid in (-1, None):
-        return []
+        return
     snap = next((s for s in meta["snapshots"] if s["snapshot-id"] == sid), None)
     if snap is None:
         raise ValueError(f"unknown snapshot id {sid} for {table_path}")
+    _schema, manifests, _m = avro_io.read_container(snap["manifest-list"])
+    for m in manifests:
+        if m.get("content", 0) != content:
+            continue
+        _s2, entries, _m2 = avro_io.read_container(m["manifest_path"])
+        for e in entries:
+            if e["status"] != STATUS_DELETED:
+                yield {**e["data_file"], "_seq": e["sequence_number"] or 0}
+
+
+def plan_files(table_path: str, snapshot_id: int | None = None,
+               partition_filter: dict | None = None,
+               column_range_filter: dict | None = None) -> list[dict]:
+    """Live data files of a snapshot, with partition pruning AND
+    column-bounds file skipping (``column_range_filter``: {col: (lo, hi)}
+    inclusive -- a file whose footer min/max range is disjoint never gets
+    opened).  Returns data_file dicts (file_path, partition, record_count,
+    file_size_in_bytes, bounds, ``_seq``)."""
+    meta = load_metadata(table_path)
     fields = {f["name"]: f for f in meta["schemas"][meta["current-schema-id"]]["fields"]}
     ranges = {}
     for col, (lo, hi) in (column_range_filter or {}).items():
@@ -757,24 +772,10 @@ def plan_files(table_path: str, snapshot_id: int | None = None,
                 return True
         return False   # missing bounds => cannot prune, must read
 
-    _schema, manifests, _m = avro_io.read_container(snap["manifest-list"])
-    out: list[dict] = []
-    for m in manifests:
-        if m.get("content", 0) != 0:
-            continue    # delete manifests are planned by plan_delete_files
-        _s2, entries, _m2 = avro_io.read_container(m["manifest_path"])
-        for e in entries:
-            if e["status"] == STATUS_DELETED:
-                continue
-            part = e["data_file"]["partition"]
-            if partition_filter and any(part.get(k) != v for k, v in partition_filter.items()):
-                continue
-            if ranges and pruned_by_bounds(e["data_file"]):
-                continue
-            # data sequence number rides along (internal key) so the read
-            # path can scope position deletes: a delete applies only to
-            # files whose data sequence number is <= the delete's
-            out.append({**e["data_file"], "_seq": e["sequence_number"] or 0})
+    out = [df for df in _live_files(table_path, meta, snapshot_id, 0)
+           if not (partition_filter
+                   and any(df["partition"].get(k) != v for k, v in partition_filter.items()))
+           and not (ranges and pruned_by_bounds(df))]
     return sorted(out, key=lambda d: d["file_path"])
 
 
@@ -784,23 +785,7 @@ def plan_delete_files(table_path: str, snapshot_id: int | None = None) -> list[d
     (content=2, carrying ``equality_ids``).  Returns data_file dicts with
     ``_seq`` = the delete's data sequence number; callers dispatch on
     ``content``."""
-    meta = load_metadata(table_path)
-    sid = meta.get("current-snapshot-id", -1) if snapshot_id is None else snapshot_id
-    if sid in (-1, None):
-        return []
-    snap = next((s for s in meta["snapshots"] if s["snapshot-id"] == sid), None)
-    if snap is None:
-        raise ValueError(f"unknown snapshot id {sid} for {table_path}")
-    _schema, manifests, _m = avro_io.read_container(snap["manifest-list"])
-    out: list[dict] = []
-    for m in manifests:
-        if m.get("content", 0) != 1:
-            continue
-        _s2, entries, _m2 = avro_io.read_container(m["manifest_path"])
-        for e in entries:
-            if e["status"] == STATUS_DELETED:
-                continue
-            out.append({**e["data_file"], "_seq": e["sequence_number"] or 0})
+    out = _live_files(table_path, load_metadata(table_path), snapshot_id, 1)
     return sorted(out, key=lambda d: d["file_path"])
 
 

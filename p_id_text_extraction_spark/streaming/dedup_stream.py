@@ -39,9 +39,9 @@ callback alone would under-evict).  Within the horizon the semantics
 are byte-identical to the unbounded default.
 
 Sink protocol: applyInPandasWithState requires update mode, so batches
-land through foreachBatch with batch_id-partitioned dynamic overwrite --
-replay of a failed batch overwrites its own partition, the same
-idempotence contract as extract_stream/rollup_stream.
+land through foreachBatch into a batch_id partition that replaces itself
+(util.replace_partitions) -- replay of a failed batch overwrites its own
+partition, the same idempotence contract as extract_stream.
 """
 
 from __future__ import annotations
@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from p_id_text_extraction_spark.util import replace_partitions
 
 OUTPUT_SCHEMA = "fingerprint string, doc_id bigint, n_seen bigint, is_new boolean"
 STATE_SCHEMA = "first_doc_id bigint, n_seen bigint, last_seen_ms bigint"
@@ -134,11 +136,9 @@ def dedup_stream(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from p_id_text_extraction_spark.util import dynamic_partition_overwrite
-        with dynamic_partition_overwrite(batch_df.sparkSession):
-            (batch_df.filter(F.col("doc_id").isNotNull())
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite").partitionBy("batch_id").parquet(output_dir))
+        replace_partitions(batch_df.filter(F.col("doc_id").isNotNull())
+                           .withColumn("batch_id", F.lit(batch_id)),
+                           output_dir, ("batch_id",), [{"batch_id": int(batch_id)}])
 
     writer = (admitted.writeStream.outputMode("update")
               .foreachBatch(process_batch)

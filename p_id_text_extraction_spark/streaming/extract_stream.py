@@ -16,6 +16,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from p_id_text_extraction_spark.config import DEFAULT_CONFIG, ExtractConfig
 from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
+from p_id_text_extraction_spark.util import replace_partitions
 
 
 def extract_stream(
@@ -30,8 +31,8 @@ def extract_stream(
 
     ``stream`` must be a readStream DataFrame with the transcript schema.
     Each micro-batch runs the batch production plan (the fused map-only
-    kernel, plans/pipeline.extract_pipeline_fused) and lands in a
-    ``batch_id=N`` partition with dynamic partition overwrite, mirroring
+    kernel, plans/pipeline.extract_pipeline_fused) and replaces its own
+    ``batch_id=N`` partition (util.replace_partitions), mirroring
     plans/checkpoint.py's bucket protocol: foreachBatch is at-least-once
     (a micro-batch retried after a mid-write failure re-executes), so the
     write must be idempotent PER BATCH -- a retry fully rewrites its own
@@ -48,17 +49,15 @@ def extract_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        from p_id_text_extraction_spark.util import dynamic_partition_overwrite
         spans = extract_pipeline_fused(batch_df, cfg).withColumn("batch_id", F.lit(batch_id))
+        replaced = [{"batch_id": int(batch_id)}]
         if catalog == "iceberg":
             from p_id_text_extraction_spark.sources import iceberg as icemod
             icemod.ensure_table(batch_df.sparkSession, output_dir,
                                 spans.schema, ("batch_id",))
-            icemod.overwrite_span_partitions(
-                spans, output_dir, replaced=[{"batch_id": int(batch_id)}])
+            icemod.overwrite_span_partitions(spans, output_dir, ("batch_id",), replaced)
         else:
-            with dynamic_partition_overwrite(batch_df.sparkSession):
-                spans.write.mode("overwrite").partitionBy("batch_id").parquet(output_dir)
+            replace_partitions(spans, output_dir, ("batch_id",), replaced)
 
     writer = stream.writeStream.foreachBatch(process_batch).option("checkpointLocation", checkpoint_dir)
     if trigger_available_now:

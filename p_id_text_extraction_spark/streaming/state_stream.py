@@ -9,9 +9,10 @@ conversation-completion detector) would use; the tracker keeps the state
 schema small and the semantics testable.
 
 Sink: parquet doesn't accept update mode, so each batch's updated rows land
-through foreachBatch with batch_id-partitioned dynamic overwrite -- the
-same replay-idempotent protocol as extract_stream.py.  The LATEST state of
-a conversation is the row with its highest batch_id.
+through foreachBatch into a batch_id partition that replaces itself
+(util.replace_partitions) -- the same replay-idempotent protocol as
+extract_stream.py.  The LATEST state of a conversation is the row with its
+highest batch_id.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from p_id_text_extraction_spark.util import replace_partitions
 
 OUTPUT_SCHEMA = "conv_id string, turns_seen long, max_turn_idx int, emits int"
 STATE_SCHEMA = "turns_seen long, max_turn_idx int, emits int"
@@ -67,10 +70,8 @@ def conv_progress_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        from p_id_text_extraction_spark.util import dynamic_partition_overwrite
-        with dynamic_partition_overwrite(batch_df.sparkSession):
-            (batch_df.withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite").partitionBy("batch_id").parquet(output_dir))
+        replace_partitions(batch_df.withColumn("batch_id", F.lit(batch_id)), output_dir,
+                           ("batch_id",), [{"batch_id": int(batch_id)}])
 
     writer = (updates.writeStream.outputMode("update")
               .foreachBatch(process_batch)

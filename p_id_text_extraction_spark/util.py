@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
@@ -43,18 +41,30 @@ def unpersist_tracked(blocking: bool = False) -> int:
     return n
 
 
-@contextmanager
-def dynamic_partition_overwrite(spark: SparkSession):
-    """Temporarily switch partition overwrite to dynamic, restoring the
-    caller's setting afterwards -- writers must not leak a session-global
-    semantics change into unrelated jobs sharing the session."""
+def replace_partitions(df: DataFrame, path: str, partition_cols,
+                       replaced: list[dict] | None = None) -> None:
+    """The parquet partition-replacing write: delete each ``replaced``
+    partition directory (a dict holding a value for every partition
+    column), then write ``df`` partitioned by ``partition_cols`` with
+    dynamic partition overwrite.  Dynamic overwrite alone rewrites only the
+    partitions ``df`` has rows for, so a retry that lands ZERO rows for a
+    partition would keep an aborted attempt's files; the explicit deletes
+    close that gap.  Deletion goes through the Hadoop FileSystem API, so
+    file://, hdfs:// and s3a:// paths work like plain ones.  The caller's
+    partition overwrite mode is restored afterwards: a writer must not
+    leak a session-global semantics change into unrelated jobs sharing the
+    session."""
+    spark = df.sparkSession
+    for part in replaced or ():
+        delete_path(spark, "/".join(
+            [path.rstrip("/"), *(f"{c}={part[c]}" for c in partition_cols)]))
     try:
         prev = spark.conf.get(_OVERWRITE_MODE_KEY)
     except Exception:  # noqa: BLE001 - unset => engine default ("static")
         prev = None
     spark.conf.set(_OVERWRITE_MODE_KEY, "dynamic")
     try:
-        yield
+        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
     finally:
         if prev is None:
             spark.conf.unset(_OVERWRITE_MODE_KEY)

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import pytest
+
 from p_id_text_extraction_spark.sources import iceberg as icemod
+from p_id_text_extraction_spark.sources import iceberg_format as ice_fmt
 from p_id_text_extraction_spark.sources.iceberg import (
     append_spans,
     has_iceberg,
@@ -87,6 +90,23 @@ def test_iceberg_path_heuristic(monkeypatch, spark, tmp_path):
     overwrite_span_partitions(one, str(tmp_path / "ow"), partition_cols=("doc_id",))
     assert spark.read.parquet(str(tmp_path / "ow")).count() == 3
     monkeypatch.setattr(icemod, "_HAS_ICEBERG", False)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
+def test_overwrite_span_partitions_replaces_listed_partitions(spark, tmp_path, fmt):
+    """``replaced`` means the same on both formats: a listed partition is
+    dropped even when the write lands zero rows for it, and an unlisted
+    one is kept."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    if fmt == "iceberg":
+        ice_fmt.create_table(path, df.schema, ("k",))
+        ice_fmt.write_dataframe(df, path)
+    else:
+        df.write.partitionBy("k").parquet(path)
+    overwrite_span_partitions(df.limit(0), path, partition_cols=("k",), replaced=[{"k": 1}])
+    rows = read_table(spark, path).select("k", "v").collect()
+    assert sorted(map(tuple, rows)) == [(2, "b")]
 
 
 def test_distributed_generator_deterministic(spark):

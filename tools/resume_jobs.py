@@ -1,12 +1,13 @@
 """Layer ledger for the resume protocol: the Spark jobs of each call.
 
-Runs one job life cycle of ``run_with_resume(..., catalog="iceberg")`` over
-an Iceberg-format input of ``gen_skew_turns(seed)`` (bucket(conv_id, 16)
-partitions): a killed call (the first half of the buckets), the resume and
-a no-op resume.  A first, unprinted life cycle warms the JVM and the
-workers.  For each call it prints the call's wall and, from the
-application status store, every job it launched: id, wall, task count and
-call site.  The last line is one JSON object with the jobs per call.
+Runs one job life cycle of ``run_with_resume`` per catalog, Iceberg first
+and then parquet, over an Iceberg-format input of ``gen_skew_turns(seed)``
+(bucket(conv_id, 16) partitions): a killed call (the first half of the
+buckets), the resume and a no-op resume.  A first, unprinted Iceberg life
+cycle warms the JVM and the workers.  For each call it prints the call's
+wall and, from the application status store, every job it launched: id,
+wall, task count and call site.  The last line is one JSON object with the
+jobs and the wall per call of each catalog.
 
     python tools/resume_jobs.py [--buckets 256] [--seed 1] [--cores 4]
 """
@@ -33,6 +34,7 @@ from p_id_text_extraction_spark.sources.transcripts import (  # noqa: E402
 )
 
 PHASES = ("killed", "resume", "noop")
+CATALOGS = ("iceberg", "parquet")
 
 
 def _job_rows(sc, group: str) -> list[dict]:
@@ -49,7 +51,8 @@ def _job_rows(sc, group: str) -> list[dict]:
     return rows
 
 
-def life_cycle(spark, src: str, base: str, n_buckets: int, tag: str) -> dict:
+def life_cycle(spark, src: str, base: str, n_buckets: int, catalog: str,
+               tag: str) -> dict:
     """killed, resume and no-op calls; returns {phase: (wall_s, jobs)}."""
     sc = spark.sparkContext
     out, man = os.path.join(base, "spans"), os.path.join(base, "manifest")
@@ -61,7 +64,7 @@ def life_cycle(spark, src: str, base: str, n_buckets: int, tag: str) -> dict:
         t = time.perf_counter()
         try:
             run_with_resume(spark, read_transcripts(spark, src), out, man,
-                            n_buckets=n_buckets, catalog="iceberg", **kw)
+                            n_buckets=n_buckets, catalog=catalog, **kw)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
@@ -82,19 +85,24 @@ def main(argv: list[str] | None = None) -> None:
         src = os.path.join(work, "transcripts_ice")
         iceberg_format.create_table(src, TRANSCRIPT_SCHEMA, ("bucket(conv_id, 16)",))
         iceberg_format.write_dataframe(transcripts_df(spark, gen_skew_turns(args.seed)), src)
-        life_cycle(spark, src, os.path.join(work, "warm"), args.buckets, "warm")
-        ledger = life_cycle(spark, src, os.path.join(work, "run"), args.buckets, "run")
+        life_cycle(spark, src, os.path.join(work, "warm"), args.buckets, "iceberg", "warm")
+        ledgers = {cat: life_cycle(spark, src, os.path.join(work, cat), args.buckets, cat, cat)
+                   for cat in CATALOGS}
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
 
-    for phase, (wall, jobs) in ledger.items():
-        print(f"{phase}: {len(jobs)} jobs, call {wall:.2f} s")
-        for j in jobs:
-            print(f"  job {j['job']:>4}  {j['wall_ms']:>6} ms  {j['tasks']:>4} tasks  {j['name']}")
-    print(json.dumps({"buckets": args.buckets, "seed": args.seed,
-                      "jobs_per_call": {ph: len(jobs) for ph, (_, jobs) in ledger.items()},
-                      "call_s": {ph: round(wall, 3) for ph, (wall, _) in ledger.items()}}))
+    for cat, ledger in ledgers.items():
+        for phase, (wall, jobs) in ledger.items():
+            print(f"{cat} {phase}: {len(jobs)} jobs, call {wall:.2f} s")
+            for j in jobs:
+                print(f"  job {j['job']:>4}  {j['wall_ms']:>6} ms  {j['tasks']:>4} tasks  {j['name']}")
+    print(json.dumps({
+        "buckets": args.buckets, "seed": args.seed,
+        "jobs_per_call": {cat: {ph: len(jobs) for ph, (_, jobs) in ledger.items()}
+                          for cat, ledger in ledgers.items()},
+        "call_s": {cat: {ph: round(wall, 3) for ph, (wall, _) in ledger.items()}
+                   for cat, ledger in ledgers.items()}}))
 
 
 if __name__ == "__main__":
