@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
@@ -14,6 +15,25 @@ WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 # the directory holding the package: Python workers import the daemon and
 # the kernels (pickled by reference) from it
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CLASSPATH_KEYS = ("spark.driver.extraClassPath", "spark.executor.extraClassPath")
+FILE_IMPL = "spark.hadoop.fs.file.impl"
+# built from jvm/NioLocalFileSystem.java by tools/build_jvm.py
+NIO_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar")
+NIO_FS_CLASS = "p_id_text_extraction_spark.jvm.NioLocalFileSystem"
+
+
+def _appended(value: str | None, entry: str) -> str:
+    """``entry`` appended to the path list ``value``, unless already in it."""
+    paths = [p for p in (value or "").split(os.pathsep) if p]
+    return os.pathsep.join(paths if entry in paths else paths + [entry])
+
+
+def _has_class(name: str) -> bool:
+    try:
+        SparkContext._jvm.java.lang.Class.forName(name)
+        return True
+    except Py4JJavaError:
+        return False
 
 
 def get_spark(
@@ -22,6 +42,25 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's local session: ``local[cores]`` with the settings below,
+    then ``extra`` (which wins over them).
+
+    Beyond plain settings it wires three things.  A module or impl that
+    ``extra`` or spark-submit (``--conf``, spark-defaults.conf) set wins;
+    a path list they set is kept and appended to.
+
+    - The Python workers run under ``worker_daemon``
+      (``spark.python.daemon.module``).
+    - The package's parent directory is appended to the workers'
+      ``PYTHONPATH``.
+    - The ``file:`` FileSystem is ``jvm/NioLocalFileSystem``
+      (``spark.hadoop.fs.file.impl``), whose ``setPermission`` is one
+      java.nio call.  Without the Hadoop native library the stock one forks
+      a ``chmod`` for every file, ``.crc`` sidecar and directory a write
+      creates.  Its committed jar is appended to the driver and executor
+      ``extraClassPath``; the impl is set only on a ``local[...]`` master
+      and only when the launched JVM loads the class.
+    """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cores
     # Scan-split sizing is scale-dependent (guide section 6): the bench
@@ -49,21 +88,32 @@ def get_spark(
     }
     # The gateway is launched here exactly as getOrCreate would launch it,
     # so the JVM's conf also holds spark-submit --conf and
-    # spark-defaults.conf.  The worker daemon (worker_daemon.py) takes
-    # ~0.12 s of fixed cost off every Python task; a daemon module the
-    # submitter configured wins.
+    # spark-defaults.conf.  The driver's class path is fixed at launch.
+    for key in CLASSPATH_KEYS:
+        conf[key] = _appended(conf.get(key), NIO_JAR)
     SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
     submitted = SparkConf()
+    # The worker daemon (worker_daemon.py) takes ~0.12 s of fixed cost off
+    # every Python task; a daemon module the submitter configured wins.
     if DAEMON_MODULE not in conf and not submitted.contains(DAEMON_MODULE):
         conf[DAEMON_MODULE] = worker_daemon.__name__
     # A driver started outside the package's parent directory (a script
     # that put it on its own sys.path) would start workers that cannot
     # import the package: append it to the workers' PYTHONPATH, after any
     # value the caller or the submitter set.
-    paths = [p for p in (conf.get(WORKER_PYTHONPATH) or submitted.get(WORKER_PYTHONPATH, ""))
-             .split(os.pathsep) if p]
-    if PACKAGE_PARENT not in paths:
-        conf[WORKER_PYTHONPATH] = os.pathsep.join(paths + [PACKAGE_PARENT])
+    conf[WORKER_PYTHONPATH] = _appended(
+        conf.get(WORKER_PYTHONPATH) or submitted.get(WORKER_PYTHONPATH, ""), PACKAGE_PARENT)
+    # spark-submit puts its own --conf after ours, so the launched JVM's
+    # class path is the submitter's value when there is one: keep it.
+    for key in CLASSPATH_KEYS:
+        conf[key] = _appended(submitted.get(key, conf[key]), NIO_JAR)
+    # Local writes fork no chmod: the file: FileSystem sets modes through
+    # java.nio.  Only where the class really loaded (a gateway launched
+    # earlier without the jar must not get a dangling impl), and never
+    # over a caller's or submitter's impl.
+    if (conf["spark.master"].startswith("local[") and FILE_IMPL not in conf
+            and not submitted.contains(FILE_IMPL) and _has_class(NIO_FS_CLASS)):
+        conf[FILE_IMPL] = NIO_FS_CLASS
     b = SparkSession.builder
     for k, v in conf.items():
         b = b.config(k, v)

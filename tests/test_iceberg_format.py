@@ -203,6 +203,29 @@ def test_resume_with_iceberg_catalog(spark, tmp_path):
                 for fld in pq.read_schema(f["file_path"])} == want
 
 
+def test_resume_with_relative_iceberg_paths(spark, tmp_path, monkeypatch):
+    """Bare relative table paths (``--output spans --manifest man`` run
+    from their parent directory) are Iceberg tables like absolute ones: a
+    killed and a resume call commit snapshots to both tables, and the
+    spans equal an absolute-path run's."""
+    from p_id_text_extraction_spark.sources.iceberg import read_table
+    turns = transcripts_df(spark, gen_turns(40, max_turns=10, seed=3))
+    rel_dir = tmp_path / "rel"
+    rel_dir.mkdir()
+    runs = [(str(tmp_path / "abs_spans"), str(tmp_path / "abs_man"), tmp_path),
+            ("spans", "man", rel_dir)]
+    spans = []
+    for out, man, cwd in runs:
+        monkeypatch.chdir(cwd)
+        run_with_resume(spark, turns, out, man, n_buckets=8,
+                        bucket_filter=[0, 1, 2, 3], catalog="iceberg")
+        run_with_resume(spark, turns, out, man, n_buckets=8, catalog="iceberg")
+        assert len(ice.snapshot_ids(out)) == 2 and len(ice.snapshot_ids(man)) == 2
+        spans.append(sorted(map(tuple, read_table(spark, out).collect())))
+    assert os.path.isdir(rel_dir / "spans" / "data")
+    assert spans[0] == spans[1] and len(spans[0]) > 100
+
+
 def test_resume_with_bucket_partitioned_spans(spark, tmp_path):
     """spans_layout='bucket': the spans table uses the spec's HIDDEN
     bucket(conv_id, n) partitioning (no bucket_id data column), the

@@ -1,22 +1,44 @@
 """The session's Python worker daemon (worker_daemon.py): archives added with
 ``addPyFile`` are still seen, the wrapper really runs, and a daemon module
-the submitter configured wins."""
+the submitter configured wins.  The session's ``file:`` FileSystem
+(jvm/NioLocalFileSystem.java): writes fork no ``chmod``, files and
+directories get the stock impl's modes, sidecars and rename results, and a
+submitted impl wins."""
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
+import shutil
+import stat
 import subprocess
 import sys
 import uuid
 import zipfile
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark import SparkFiles
 
 from p_id_text_extraction_spark import worker_daemon
-from p_id_text_extraction_spark.session import DAEMON_MODULE
+from p_id_text_extraction_spark.session import DAEMON_MODULE, FILE_IMPL, NIO_FS_CLASS
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _run_script(script: str, *args: str, submit_args: str = "pyspark-shell",
+                path: str | None = None) -> list:
+    """Run ``script`` in a fresh driver process (its own JVM); returns the
+    JSON of its last stdout line."""
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="512m", PYTHONPATH=REPO,
+               PYSPARK_SUBMIT_ARGS=submit_args)
+    if path:
+        env["PATH"] = path + os.pathsep + env["PATH"]
+    out = subprocess.run([sys.executable, "-c", script, *args], cwd=REPO, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:
@@ -97,11 +119,146 @@ spark.stop()
 
 
 def test_submitted_daemon_module_wins():
-    env = dict(os.environ, SPARK_DRIVER_MEMORY="512m", PYTHONPATH=REPO,
-               PYSPARK_SUBMIT_ARGS=f"--conf {DAEMON_MODULE}=pyspark.daemon pyspark-shell")
-    out = subprocess.run([sys.executable, "-c", _SUBMITTED], cwd=REPO, env=env,
-                         capture_output=True, text=True, timeout=300)
-    assert out.returncode == 0, out.stderr[-2000:]
-    module, methods = json.loads(out.stdout.strip().splitlines()[-1])
+    module, methods = _run_script(
+        _SUBMITTED, submit_args=f"--conf {DAEMON_MODULE}=pyspark.daemon pyspark-shell")
     assert module == "pyspark.daemon"
     assert methods == ["zipimporter.invalidate_caches"]  # the stock method
+
+
+STOCK_FS_CLASS = "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem"
+
+
+_NO_CHMOD = """
+import json, os, sys
+from p_id_text_extraction_spark.plans.checkpoint import run_with_resume
+from p_id_text_extraction_spark.session import get_spark
+from p_id_text_extraction_spark.sources.transcripts import gen_turns, transcripts_df
+tmp, log, stock_class = sys.argv[1:]
+def forks():
+    return len(open(log).readlines()) if os.path.exists(log) else 0
+spark = get_spark(app="no_chmod", cores=2, shuffle_partitions=2)
+jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+counts = [jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf).getClass().getName()]
+spark.range(64).selectExpr("id", "id % 8 AS p").write.partitionBy("p").parquet(tmp + "/pq")
+counts.append(forks())
+turns = transcripts_df(spark, gen_turns(40, max_turns=10, seed=3))
+r = run_with_resume(spark, turns, tmp + "/spans", tmp + "/man", n_buckets=8,
+                    bucket_filter=[0, 1, 2, 3], catalog="iceberg")
+counts += [r["buckets_completed"], forks()]
+# the wrapper sees the stock impl's fork
+stock = jvm.org.apache.hadoop.util.ReflectionUtils.newInstance(
+    jvm.java.lang.Class.forName(stock_class), conf)
+stock.initialize(jvm.java.net.URI("file:///"), conf)
+stock.setPermission(jvm.org.apache.hadoop.fs.Path(tmp + "/pq"),
+                    jvm.org.apache.hadoop.fs.permission.FsPermission.valueOf("drwxr-xr-x"))
+counts.append(forks())
+print(json.dumps(counts))
+spark.stop()
+"""
+
+
+def test_local_writes_fork_no_chmod(tmp_path):
+    """A partitioned parquet write and a killed Iceberg resume call start no
+    ``chmod`` process (a logging ``chmod`` first on the PATH counts them);
+    the stock impl's ``setPermission`` is seen forking one."""
+    bin_dir, log = tmp_path / "bin", tmp_path / "chmod.log"
+    bin_dir.mkdir()
+    wrapper = bin_dir / "chmod"
+    wrapper.write_text(f'#!/bin/sh\necho "$*" >> "{log}"\nexec "{shutil.which("chmod")}" "$@"\n')
+    wrapper.chmod(0o755)
+    fs_class, after_write, buckets, after_resume, after_stock = _run_script(
+        _NO_CHMOD, str(tmp_path), str(log), STOCK_FS_CLASS, path=str(bin_dir))
+    assert fs_class == NIO_FS_CLASS
+    assert buckets == 4
+    assert (after_write, after_resume, after_stock) == (0, 0, 1)
+
+
+def _local_fs(spark, cls: str):
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.util.ReflectionUtils.newInstance(jvm.java.lang.Class.forName(cls), conf)
+    fs.initialize(jvm.java.net.URI("file:///"), conf)
+    return fs
+
+
+def _exercise(spark, fs, root: str):
+    """Creates, renames and mode changes through ``fs`` under ``root``;
+    returns the rename results, whether a missing path's setPermission
+    raised, and every entry's mode."""
+    jvm = spark._jvm
+    FsPermission = jvm.org.apache.hadoop.fs.permission.FsPermission
+
+    def path(rel):
+        return jvm.org.apache.hadoop.fs.Path(os.path.join(root, rel))
+
+    fs.mkdirs(path("a/b/c"))
+    for name in ("a/f1", "a/f2", "a/f3"):
+        out = fs.create(path(name))
+        out.write(bytearray(name.encode()))
+        out.close()
+    renames = [fs.rename(path("a/f1"), path("a/new")),  # onto a new path
+               fs.rename(path("a/f2"), path("a/f3")),   # onto an existing file
+               fs.rename(path("a/new"), path("a/b"))]   # onto an existing directory
+    fs.setPermission(path("a/f3"), FsPermission.valueOf("-rw-r-----"))
+    fs.setPermission(path("a/b/c"), FsPermission.valueOf("drwxrwxrwt"))  # sticky bit
+    try:
+        fs.setPermission(path("missing"), FsPermission.valueOf("-rw-r--r--"))
+        missing_raises = False
+    except Py4JJavaError:
+        missing_raises = True
+    modes = {}
+    for dirpath, dirs, files in os.walk(root):
+        for name in dirs + files:
+            full = os.path.join(dirpath, name)
+            modes[os.path.relpath(full, root)] = oct(stat.S_IMODE(os.stat(full).st_mode))
+    return renames, missing_raises, modes
+
+
+def test_nio_fs_matches_stock_impl(spark, tmp_path):
+    """The session's ``file:`` impl is the shim, and it behaves as the
+    stock impl: the same modes on created files and directories, the same
+    ``.crc`` sidecars, the same rename results and the sticky-bit
+    fallback."""
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    assert jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf).getClass().getName() == NIO_FS_CLASS
+    stock = _exercise(spark, _local_fs(spark, STOCK_FS_CLASS), str(tmp_path / "stock"))
+    nio = _exercise(spark, _local_fs(spark, NIO_FS_CLASS), str(tmp_path / "nio"))
+    assert nio == stock
+    renames, missing_raises, modes = nio
+    assert renames == [True, False, True] and missing_raises
+    assert modes["a/b/c"] == "0o1777" and modes["a/f3"] == "0o640"
+    assert modes["a/b/new"] == "0o644" and modes["a/b"] == "0o755"
+    assert {".f3.crc", ".new.crc"} <= {os.path.basename(p) for p in modes}
+
+
+_FILE_IMPL = """
+import json, sys
+from pyspark import SparkContext
+from p_id_text_extraction_spark.session import FILE_IMPL, get_spark
+if sys.argv[1] == "launched":
+    SparkContext._ensure_initialized()  # a gateway launched without the jar
+spark = get_spark(app="file_impl", cores=1)
+jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+print(json.dumps([spark.sparkContext.getConf().get(FILE_IMPL, None),
+                  jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf).getClass().getName()]))
+spark.stop()
+"""
+
+
+def test_submitted_file_impl_wins():
+    submitted = "org.apache.hadoop.fs.LocalFileSystem"
+    assert _run_script(_FILE_IMPL, "fresh",
+                       submit_args=f"--conf {FILE_IMPL}={submitted} pyspark-shell") == [
+        submitted, submitted]
+
+
+def test_no_file_impl_on_a_gateway_without_the_jar():
+    assert _run_script(_FILE_IMPL, "launched") == [None, STOCK_FS_CLASS]
+
+
+@pytest.mark.skipif(shutil.which("javac") is None, reason="no javac on the PATH")
+def test_committed_jar_is_built_from_source():
+    spec = importlib.util.spec_from_file_location(
+        "build_jvm", os.path.join(REPO, "tools", "build_jvm.py"))
+    build = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(build)
+    assert build.jar_classes() == build.compile_classes()
