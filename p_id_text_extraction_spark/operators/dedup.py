@@ -16,6 +16,10 @@ Five tiers, scale-ordered:
 All hashing is engine-portable (md5_hash60: first 15 md5 hex chars as
 int64, reproduced literally in DuckDB), so EVERY operator here has a
 value-hash DuckDB oracle mirror -- including the sketches.
+
+The tokenizing operators (shingle and sketch kernels, simhash) go through
+``util.fan_out`` first: a single-file corpus would otherwise tokenize in
+one task, once per AQE broadcast build.
 """
 
 from __future__ import annotations
@@ -25,16 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from p_id_text_extraction_spark.operators.textstats import norm_text_col
-from p_id_text_extraction_spark.util import track_persist
-
-
-def _spread(docs: DataFrame) -> DataFrame:
-    """Decouple tokenization parallelism from file splits: a small input
-    (one parquet file -> one partition) would otherwise run the whole
-    shingle subtree single-threaded -- and AQE's broadcast builds execute
-    that subtree serially once per broadcast.  The repartition is tiny
-    relative to the n-gram work it parallelizes."""
-    return docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+from p_id_text_extraction_spark.util import fan_out, track_persist
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -224,7 +219,7 @@ def hashed_grams_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
 
     import pandas as pd
 
-    pruned = _spread(docs).select("doc_id", norm_text_col().alias("t"))
+    pruned = fan_out(docs).select("doc_id", norm_text_col().alias("t"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -272,7 +267,7 @@ def minhash_sketches_kernel(docs: DataFrame, n: int = 3, num_hashes: int = 32,
     A = np.array([a for a, _ in coeffs], dtype=np.uint64).reshape(-1, 1)
     B = np.array([b for _, b in coeffs], dtype=np.uint64).reshape(-1, 1)
     P = np.uint64(MINHASH_P)
-    pruned = _spread(docs).select("doc_id", norm_text_col().alias("t"))
+    pruned = fan_out(docs).select("doc_id", norm_text_col().alias("t"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -363,7 +358,7 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     """60-bit SimHash over word tokens: per token one engine-portable
     md5-derived hash (md5_hash60), sum of bit votes, sign -> fingerprint
     bits.  Pure aggregate composition, fully SQL-mirrorable."""
-    toks = _spread(docs).select("doc_id", F.explode(F.split(norm_text_col(), " ")).alias("tok"))
+    toks = fan_out(docs).select("doc_id", F.explode(F.split(norm_text_col(), " ")).alias("tok"))
     h = toks.select("doc_id", md5_hash60(F.col("tok")).alias("h"))
     votes = [
         F.sum(F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{i}")

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from p_id_text_extraction_spark.util import fan_out
+
 # stopword markers for the n-gram-free language-ID heuristic.  The SQL
 # twins spell the word boundary \b, and RE2 (DuckDB) counts only ASCII
 # characters as word characters: it finds "and" inside "ñandú", where
@@ -217,17 +219,17 @@ def winnow_fingerprints_kernel(docs: DataFrame, k: int = 8, w: int = 16) -> Data
     window) paid for communication it never needed -- sf10: 234 s -> 75 s.
     Normalize JVM-side, then hash grams and take window minima via a
     numpy sliding view (C speed).  Like the dedup kernels, the slim
-    (doc_id, t) rows are spread over ``defaultParallelism`` tasks first:
-    a single-file corpus would otherwise run one Python worker."""
+    (doc_id, t) rows go through ``util.fan_out`` first: a single-file
+    corpus would otherwise run one Python worker."""
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from p_id_text_extraction_spark.operators.dedup import _spread, char_gram_digests
+    from p_id_text_extraction_spark.operators.dedup import char_gram_digests
 
     norm = norm_text_col()
-    pruned = _spread(docs.select("doc_id", norm.alias("t")).filter(F.length(norm) >= k))
+    pruned = fan_out(docs.select("doc_id", norm.alias("t")).filter(F.length(norm) >= k))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -147,7 +147,7 @@ def run_with_resume(
     partition, detected candidates) into an exact
     `functions.udfs.LineageCounts` accumulator, so the spans write is the
     call's only pass over the data.  With no todo bucket the call returns
-    after the done-set collect without running any extraction: nothing is
+    after the done-set collect without building any plan: nothing is
     written or committed.
 
     ``catalog``: the kind of table a new spans or manifest table gets,
@@ -179,21 +179,22 @@ def run_with_resume(
                          "(hidden partition transforms are an Iceberg concept)")
     bucket_fn = "iceberg" if spans_layout == "bucket" else "xxhash"
     fingerprint = job_fingerprint(cfg, n_buckets, bucket_fn)
-    bucketed = with_bucket(turns, n_buckets, bucket_fn)
 
     done_ids = completed_buckets(spark, manifest_dir, fingerprint)
     todo_ids = [b for b in range(n_buckets)
                 if b not in done_ids and (bucket_filter is None or b in bucket_filter)]
+    if not todo_ids:
+        # fully resumed: no plan, no scan, no kernel, no commit, no manifest row
+        return {"fingerprint": fingerprint, "buckets_completed": 0,
+                "task_rows_max": 0, "task_rows_median": 0}
     # J7: the resume anti-join, applied as one predicate on the scan (one
-    # parsed expression: Column.isin costs a py4j call per literal; an
-    # empty IN () does not parse, and an empty todo set runs no plan)
-    in_todo = (F.expr(f"bucket_id IN ({', '.join(map(str, todo_ids))})")
-               if todo_ids else F.lit(False))
+    # parsed expression: Column.isin costs a py4j call per literal)
+    in_todo = F.expr(f"bucket_id IN ({', '.join(map(str, todo_ids))})")
     n_write = write_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # write_pid is the partition id the write's HashPartitioning(bucket_id,
     # conv_id) gives a turn's spans, so the kernel can count the write
     # stage's rows per task without a pass over the spans
-    todo = (bucketed.filter(in_todo)
+    todo = (with_bucket(turns, n_buckets, bucket_fn).filter(in_todo)
             .withColumn("write_pid", F.pmod(F.hash("bucket_id", "conv_id"), F.lit(n_write))))
 
     counter = spark.sparkContext.accumulator(LineageCounts(), FirstWinsParam())
@@ -225,10 +226,6 @@ def run_with_resume(
     else:
         make_dirs(spark, output_dir)
         write_spans = replace_partitions
-    if not todo_ids:
-        # fully resumed: no scan, no kernel, no commit, no manifest row
-        return {"fingerprint": fingerprint, "buckets_completed": 0,
-                "task_rows_max": 0, "task_rows_median": 0}
     write_spans(spans, output_dir, partition_cols, replaced)
 
     # lineage counters per completed bucket (FIXTURES.md section 3), all

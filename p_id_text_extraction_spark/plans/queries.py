@@ -35,6 +35,7 @@ from p_id_text_extraction_spark.config import DEFAULT_CONFIG
 from p_id_text_extraction_spark.operators import dedup, multimodal, similarity, textstats
 from p_id_text_extraction_spark.plans.pipeline import extract_pipeline, extract_pipeline_fused
 from p_id_text_extraction_spark.sources.transcripts import derive_transcripts_from_documents
+from p_id_text_extraction_spark.util import fan_out
 
 _B = DEFAULT_CONFIG.block_size      # 256
 _S = DEFAULT_CONFIG.step            # 230
@@ -47,54 +48,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-import os as _os
-
-# below this input size the round-robin exchange costs more than the
-# serialized scan stage it parallelizes (measured at sf0.1: extract_fused
-# 0.31s -> 0.50s with an unconditional fan-out; at sf1's 6 MB documents
-# file the same fan-out wins 2-4x) -- parameterised like every other
-# scale-dependent knob
-_FAN_OUT_MIN_BYTES = int(_os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES",
-                                         str(3 * 1024 * 1024)))
-
-
-def _fan_out(df: DataFrame, sf_dir: str, name: str = "documents") -> DataFrame:
-    """Decouple per-row compute from the input's file/row-group layout.
-
-    The driver corpora are ONE single-row-group parquet file per table, so
-    without this every pre-exchange stage -- regex projections, Python
-    kernels, partial aggregates -- runs in a single task while the other
-    cores idle (guide section 2.5, unsplittable input).  The round-robin
-    repartition shuffles only the slim pruned columns; SIZE-GATED so tiny
-    inputs (where the exchange dominates) keep the exchange-free plan, and
-    used only on wrappers whose per-row compute is heavy (the doc_winnow
-    r5 pattern).  A 100 TB table arrives in thousands of splits, reads as
-    a directory (size gate skips it), and does not need this."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        size = _os.path.getsize(path)
-    except OSError:
-        size = 0
-    if size < _FAN_OUT_MIN_BYTES:
-        return df
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    # a scan that already fans out (enough row groups AND split-sized
-    # chunks) must NOT pay an extra full-table exchange on top
-    try:
-        import pyarrow.parquet as _pq
-        rgs = _pq.ParquetFile(path).num_row_groups
-    except Exception:  # noqa: BLE001 - directory table/odd layout: assume split
-        return df
-    raw = df.sparkSession.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728").lower().rstrip("b")
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(raw[-1:], 1)
-    max_split = int(raw.rstrip("kmg") or "134217728") * mult
-    scan_tasks = min(rgs, max(1, size // max(max_split, 1)))
-    if scan_tasks * 2 >= parallelism:
-        return df
-    return df.repartition(parallelism)
-
-
 # ---------------------------------------------------------------------------
 # extraction pipeline (documents-derived)
 # ---------------------------------------------------------------------------
@@ -103,7 +56,7 @@ def q_extract_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the full extraction pipeline (pandas-UDF detect kernel) over
     transcripts derived from the documents table.  Rows-only driver check;
     byte-equality is covered by tests/test_pipeline_golden.py."""
-    turns = _fan_out(derive_transcripts_from_documents(spark, sf_dir), sf_dir)
+    turns = fan_out(derive_transcripts_from_documents(spark, sf_dir))
     return extract_pipeline(turns).withColumn("provenance", F.array_join("provenance", ","))
 
 
@@ -112,7 +65,7 @@ def q_extract_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived transcripts.  Rows-only driver check; byte-equality vs the
     oracle AND vs the relational strategy is pinned by
     tests/test_pipeline_golden.py."""
-    turns = _fan_out(derive_transcripts_from_documents(spark, sf_dir), sf_dir)
+    turns = fan_out(derive_transcripts_from_documents(spark, sf_dir))
     return extract_pipeline_fused(turns).withColumn("provenance", F.array_join("provenance", ","))
 
 
@@ -692,7 +645,7 @@ def q_corpus_pack(spark: SparkSession, sf_dir: str, budget: int = 4096) -> DataF
     LLM training shards).  pack_id = exclusive-cumsum // budget -- one
     window per language partition, deterministic, and the bin assignment
     is pure integer arithmetic both engines reproduce exactly."""
-    docs = _fan_out(_t(spark, sf_dir, "documents"), sf_dir)
+    docs = fan_out(_t(spark, sf_dir, "documents"))
     base = (docs.filter(F.length("text") > 0)
             .select("doc_id", textstats.pred_lang_col().alias("pred_lang"),
                     textstats.n_tokens_col().alias("n_tokens")))
@@ -866,7 +819,7 @@ _INTERVAL_CLUSTERS_SQL = f"""
 # ---------------------------------------------------------------------------
 
 def q_doc_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.token_count(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    return textstats.token_count(fan_out(_t(spark, sf_dir, "documents")))
 
 
 _TOKEN_COUNT_SQL = """
@@ -880,7 +833,7 @@ _TOKEN_COUNT_SQL = """
 
 
 def q_doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.quality_score(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    return textstats.quality_score(fan_out(_t(spark, sf_dir, "documents")))
 
 
 _QUALITY_SQL = """
@@ -895,7 +848,7 @@ _QUALITY_SQL = """
 
 
 def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.lang_id(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    return textstats.lang_id(fan_out(_t(spark, sf_dir, "documents")))
 
 
 _LANG_ID_SQL = r"""
@@ -910,7 +863,7 @@ _LANG_ID_SQL = r"""
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.fingerprint(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    return textstats.fingerprint(fan_out(_t(spark, sf_dir, "documents")))
 
 
 _FINGERPRINT_SQL = """
@@ -923,7 +876,7 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket) document counts, token totals, and floored mean quality --
     the distribution dashboard a curation run reports (A7 analogue on the
     documents domain).  Integer-only aggregates."""
-    docs = _fan_out(_t(spark, sf_dir, "documents"), sf_dir)
+    docs = fan_out(_t(spark, sf_dir, "documents"))
     base = (docs.filter(F.length("text") > 0)
             .select(
                 textstats.pred_lang_col().alias("pred_lang"),
@@ -967,7 +920,7 @@ def q_corpus_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality is tiny (languages), so the per-group sorted list is
     bounded; a 100 TB run wanting sub-percent error at huge groups would
     swap in approx_percentile and lose the oracle."""
-    docs = _fan_out(_t(spark, sf_dir, "documents"), sf_dir)
+    docs = fan_out(_t(spark, sf_dir, "documents"))
     base = (docs.filter(F.length("text") > 0)
             .select(textstats.pred_lang_col().alias("pred_lang"),
                     textstats.n_tokens_col().alias("n_tokens")))
@@ -1011,7 +964,7 @@ _TOKEN_QUANTILES_SQL = r"""
 
 def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic leakage-safe train/val split (content-hash bucketed)."""
-    return textstats.corpus_split(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    return textstats.corpus_split(fan_out(_t(spark, sf_dir, "documents")))
 
 
 _CORPUS_SPLIT_SQL = """
@@ -1028,7 +981,7 @@ _CORPUS_SPLIT_SQL = """
 
 def q_doc_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing: per-doc match counts + md5 of the redacted text."""
-    return textstats.redact_pii(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    return textstats.redact_pii(fan_out(_t(spark, sf_dir, "documents")))
 
 
 def _redact_pii_sql() -> str:
@@ -1055,7 +1008,7 @@ _REDACT_PII_SQL = _redact_pii_sql()
 
 def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-doc line-duplication ratio (degenerate-generation gate)."""
-    return textstats.repetition_score(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    return textstats.repetition_score(fan_out(_t(spark, sf_dir, "documents")))
 
 
 _REPETITION_SQL = """
@@ -1079,9 +1032,8 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (rolling-hash document fingerprint scheme)
     via the Arrow kernel, whose reference is the twin below.  The driver
     corpora are one parquet file per table, which would bound the kernel
-    to one Python worker -- the kernel's pre-kernel repartition of the
-    slim (doc_id, t) rows buys full fan-out (sf1: 13.4x wall ratio ->
-    ~linear)."""
+    to one Python worker -- the kernel fans the slim (doc_id, t) rows out
+    first (``util.fan_out``; sf1: 13.4x wall ratio -> ~linear)."""
     return textstats.winnow_fingerprints_kernel(_t(spark, sf_dir, "documents"))
 
 
@@ -1118,7 +1070,7 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curation pass: exact-dedup to canonical docs, then
     quality / token-count / language gates -- the composition a training
     corpus actually runs, all codegen + one fingerprint hash-agg."""
-    return textstats.corpus_clean(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    return textstats.corpus_clean(fan_out(_t(spark, sf_dir, "documents")))
 
 
 _CORPUS_CLEAN_SQL = """
@@ -1247,7 +1199,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     static driver oracle; 8 at sf1 -- a fixed 3 planes put 2.5k vectors
     per bucket there and the candidate join spilled the disk to death)."""
     return dedup.embedding_cosine_dups(
-        _fan_out(_t(spark, sf_dir, "embeddings"), sf_dir, "embeddings"), min_cos_milli=300)
+        fan_out(_t(spark, sf_dir, "embeddings")), min_cos_milli=300)
 
 
 def emb_cos_dup_sql_for(sf_dir: str) -> str:
@@ -1299,7 +1251,7 @@ _EMB_COS_DUP_SQL = _emb_cos_dup_sql()
 
 def q_sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.brute_force_topk(
-        _fan_out(_t(spark, sf_dir, "embeddings"), sf_dir, "embeddings"))
+        fan_out(_t(spark, sf_dir, "embeddings")))
 
 
 _SIM_TOPK_SQL = """
@@ -1540,7 +1492,7 @@ _SIMHASH_SQL = _simhash_sql()
 
 def q_sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_ann_topk(
-        _fan_out(_t(spark, sf_dir, "embeddings"), sf_dir, "embeddings"))
+        fan_out(_t(spark, sf_dir, "embeddings")))
 
 
 def _ann_bucket_union_sql(n_queries: int = 10, n_planes: int = 8, n_tables: int = 4,
@@ -1600,7 +1552,7 @@ def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only check records it every round (VERDICT r1 item 7); the
     exhaustive side is O(n*q), so this query is a small-sample audit, not a
     production path."""
-    emb = _fan_out(_t(spark, sf_dir, "embeddings"), sf_dir, "embeddings")
+    emb = fan_out(_t(spark, sf_dir, "embeddings"))
     k = 5
     # per-query neighbor SETS on each side: the collect_set aggregates
     # reuse each subtree's existing HashPartitioning(query_id), and the
@@ -1626,7 +1578,7 @@ def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(
-        _fan_out(_t(spark, sf_dir, "embeddings"), sf_dir, "embeddings"))
+        fan_out(_t(spark, sf_dir, "embeddings")))
 
 
 _SIM_IVF_SQL = """
@@ -1780,7 +1732,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte) so the output is a flat hashable CSV the driver can value-check
     against a DuckDB twin -- the recognize-stage 'records are always
     checkable' rule (text_recognition.py:175-189)."""
-    media = _media_from_docs(_fan_out(_t(spark, sf_dir, "documents"), sf_dir))
+    media = _media_from_docs(fan_out(_t(spark, sf_dir, "documents")))
     feats = multimodal.extract_features(media, fake=True)
     byte_of = lambda x: F.round(x.cast("double") * 127.5 + 127.5).cast("int").cast("string")  # noqa: E731
     return feats.select(

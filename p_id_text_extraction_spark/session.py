@@ -17,9 +17,11 @@ WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CLASSPATH_KEYS = ("spark.driver.extraClassPath", "spark.executor.extraClassPath")
 FILE_IMPL = "spark.hadoop.fs.file.impl"
-# built from jvm/NioLocalFileSystem.java by tools/build_jvm.py
+FILE_AFS_IMPL = "spark.hadoop.fs.AbstractFileSystem.file.impl"
+# built from jvm/*.java by tools/build_jvm.py
 NIO_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar")
 NIO_FS_CLASS = "p_id_text_extraction_spark.jvm.NioLocalFileSystem"
+NIO_AFS_CLASS = "p_id_text_extraction_spark.jvm.NioLocalFs"
 
 
 def _appended(value: str | None, entry: str) -> str:
@@ -57,9 +59,12 @@ def get_spark(
       (``spark.hadoop.fs.file.impl``), whose ``setPermission`` is one
       java.nio call.  Without the Hadoop native library the stock one forks
       a ``chmod`` for every file, ``.crc`` sidecar and directory a write
-      creates.  Its committed jar is appended to the driver and executor
-      ``extraClassPath``; the impl is set only on a ``local[...]`` master
-      and only when the launched JVM loads the class.
+      creates.  FileContext (a streaming checkpoint) gets the same through
+      ``jvm/NioLocalFs`` (``spark.hadoop.fs.AbstractFileSystem.file.impl``).
+      Their committed jar is appended to the driver and executor
+      ``extraClassPath``; the impls are set only on a ``local[...]`` master,
+      only when the launched JVM loads the class and never when the caller
+      or the submitter set a ``file:`` FileSystem impl.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cores
@@ -107,13 +112,15 @@ def get_spark(
     # class path is the submitter's value when there is one: keep it.
     for key in CLASSPATH_KEYS:
         conf[key] = _appended(submitted.get(key, conf[key]), NIO_JAR)
-    # Local writes fork no chmod: the file: FileSystem sets modes through
-    # java.nio.  Only where the class really loaded (a gateway launched
-    # earlier without the jar must not get a dangling impl), and never
-    # over a caller's or submitter's impl.
+    # Local writes fork no chmod: the file: FileSystem and AbstractFileSystem
+    # set modes through java.nio.  Only where the class really loaded (a
+    # gateway launched earlier without the jar must not get a dangling
+    # impl), and never over a caller's or submitter's impl.
     if (conf["spark.master"].startswith("local[") and FILE_IMPL not in conf
             and not submitted.contains(FILE_IMPL) and _has_class(NIO_FS_CLASS)):
         conf[FILE_IMPL] = NIO_FS_CLASS
+        if FILE_AFS_IMPL not in conf and not submitted.contains(FILE_AFS_IMPL):
+            conf[FILE_AFS_IMPL] = NIO_AFS_CLASS
     b = SparkSession.builder
     for k, v in conf.items():
         b = b.config(k, v)

@@ -41,6 +41,40 @@ def unpersist_tracked(blocking: bool = False) -> int:
     return n
 
 
+def fan_out(df: DataFrame) -> DataFrame:
+    """``df`` round-robin repartitioned over ``defaultParallelism`` when its
+    scan would leave most cores idle (a single-file corpus reads as one task
+    per row group); otherwise ``df`` unchanged.
+
+    The scan's non-empty tasks are estimated over the parquet footers of
+    ``df.inputFiles()`` as min(row groups, max(1, bytes //
+    spark.sql.files.maxPartitionBytes)); the exchange is added iff that is
+    below half of ``defaultParallelism``.  An input with at least that many
+    files, with no files (an in-memory DataFrame) or whose footers pyarrow
+    cannot open comes back unchanged.  No Spark job runs: the file list
+    comes from the plan's file indexes, the footers are read on the driver."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    spark = df.sparkSession
+    parallelism = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if not files or len(files) * 2 >= parallelism:
+        return df
+    row_groups = size = 0
+    try:
+        for uri in files:
+            fs, path = pafs.FileSystem.from_uri(uri)
+            with fs.open_input_file(path) as f:
+                size += f.size()
+                row_groups += pq.ParquetFile(f).num_row_groups
+    except Exception:  # noqa: BLE001 - not parquet, or a scheme pyarrow lacks
+        return df
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    scan_tasks = min(row_groups, max(1, size // max_split))
+    return df.repartition(parallelism) if scan_tasks * 2 < parallelism else df
+
+
 def replace_partitions(df: DataFrame, path: str, partition_cols,
                        replaced: list[dict] | None = None) -> None:
     """The parquet partition-replacing write: delete each ``replaced``

@@ -173,6 +173,22 @@ def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
         assert (ice.snapshot_ids(out), ice.snapshot_ids(man)) == snaps
 
 
+@pytest.mark.parametrize("catalog", ["parquet", "iceberg"])
+def test_noop_resume_builds_no_plan(spark, turns_df, tmp_path, monkeypatch, catalog):
+    """A resume over a complete manifest returns before it builds the
+    extraction plan."""
+    from p_id_text_extraction_spark.plans import checkpoint
+    out, man = str(tmp_path / "o"), str(tmp_path / "m")
+    run_with_resume(spark, turns_df, out, man, n_buckets=8, catalog=catalog)
+
+    def no_plan(*args, **kwargs):
+        raise AssertionError("a no-op resume built the extraction plan")
+
+    monkeypatch.setattr(checkpoint, "extract_pipeline_fused", no_plan)
+    r = run_with_resume(spark, turns_df, out, man, n_buckets=8, catalog=catalog)
+    assert r["buckets_completed"] == 0
+
+
 # Spark jobs a killed call (fresh manifest) and its resume launch on this
 # fixture, as measured: the shuffle and result stages of the spans write
 # (the kernel counts every manifest counter on the way); the parquet

@@ -22,7 +22,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark import SparkFiles
 
 from p_id_text_extraction_spark import worker_daemon
-from p_id_text_extraction_spark.session import DAEMON_MODULE, FILE_IMPL, NIO_FS_CLASS
+from p_id_text_extraction_spark.session import DAEMON_MODULE, FILE_IMPL, NIO_AFS_CLASS, NIO_FS_CLASS
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -171,6 +171,45 @@ def test_local_writes_fork_no_chmod(tmp_path):
     assert fs_class == NIO_FS_CLASS
     assert buckets == 4
     assert (after_write, after_resume, after_stock) == (0, 0, 1)
+
+
+_STREAM_NO_CHMOD = """
+import json, os, sys
+from p_id_text_extraction_spark.session import get_spark
+from p_id_text_extraction_spark.sources.transcripts import (TRANSCRIPT_SCHEMA, gen_turns,
+                                                            transcripts_df)
+from p_id_text_extraction_spark.streaming.extract_stream import extract_stream
+tmp, log = sys.argv[1:]
+def forks():
+    return len(open(log).readlines()) if os.path.exists(log) else 0
+spark = get_spark(app="stream_no_chmod", cores=2, shuffle_partitions=2)
+jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+afs = jvm.org.apache.hadoop.fs.AbstractFileSystem.get(jvm.java.net.URI("file:///"), conf)
+turns = gen_turns(12, max_turns=4, seed=5)
+for i in range(3):  # three files, one micro-batch each
+    transcripts_df(spark, turns[i::3]).coalesce(1).write.mode("append").parquet(tmp + "/src")
+stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(tmp + "/src")
+q = extract_stream(stream, tmp + "/out", tmp + "/ckpt")
+q.awaitTermination(120)
+print(json.dumps([afs.getClass().getName(), sum(not f.startswith(".") for f in os.listdir(tmp + "/ckpt/commits")), forks()]))
+spark.stop()
+"""
+
+
+def test_streaming_checkpoint_forks_no_chmod(tmp_path):
+    """A three-micro-batch ``extract_stream`` starts no ``chmod``: the
+    checkpoint's FileContext (``fs.AbstractFileSystem.file.impl``) is the
+    shim's ``NioLocalFs``."""
+    bin_dir, log = tmp_path / "bin", tmp_path / "chmod.log"
+    bin_dir.mkdir()
+    wrapper = bin_dir / "chmod"
+    wrapper.write_text(f'#!/bin/sh\necho "$*" >> "{log}"\nexec "{shutil.which("chmod")}" "$@"\n')
+    wrapper.chmod(0o755)
+    afs_class, batches, forks = _run_script(
+        _STREAM_NO_CHMOD, str(tmp_path), str(log), path=str(bin_dir))
+    assert afs_class == NIO_AFS_CLASS
+    assert batches == 3
+    assert forks == 0
 
 
 def _local_fs(spark, cls: str):

@@ -776,3 +776,57 @@ def test_dup_components_local_equals_distributed(spark):
     loc = sorted(map(tuple, dedup.dup_components(pairs, algorithm="local").collect()))
     auto = sorted(map(tuple, dedup.dup_components(pairs, algorithm="auto").collect()))
     assert loc == dist == auto
+
+
+def _round_robins(df) -> list[str]:
+    """The round-robin exchanges of ``df``'s physical plan."""
+    import re
+    return re.findall(r"RoundRobinPartitioning\(\d+\)",
+                      df._jdf.queryExecution().executedPlan().toString())
+
+
+def test_fan_out_one_file_scan_gets_one_round_robin(spark, twin_corpus):
+    """A one-file, one-row-group scan fans out over defaultParallelism."""
+    from p_id_text_extraction_spark.util import fan_out
+    sf_dir, _ = twin_corpus
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    n = spark.sparkContext.defaultParallelism
+    assert _round_robins(fan_out(docs)) == [f"RoundRobinPartitioning({n})"]
+
+
+def test_fan_out_skips_a_scan_with_enough_files(spark, tmp_path):
+    """A directory of >= defaultParallelism/2 files already fans out: the
+    sketch kernel plans no round-robin exchange over it."""
+    n_files = (spark.sparkContext.defaultParallelism + 1) // 2
+    path = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(DOCS, "doc_id long, text string").repartition(n_files).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert len(docs.inputFiles()) == n_files
+    assert _round_robins(dedup.minhash_sketches_kernel(docs)) == []
+
+
+def test_fan_out_reads_file_uris_like_plain_paths(spark, twin_corpus):
+    """A wrapper over a file:// URI fans out exactly as over the plain path."""
+    from p_id_text_extraction_spark.plans import queries
+    sf_dir, _ = twin_corpus
+    plain = _round_robins(queries.QUERIES["doc_lang_id"](spark, sf_dir))
+    assert len(plain) == 1
+    assert _round_robins(queries.QUERIES["doc_lang_id"](spark, f"file://{sf_dir}")) == plain
+
+
+def test_fan_out_decision_runs_no_job(spark, twin_corpus):
+    """Deciding runs no Spark job, even on an input whose plan holds an
+    exchange (where getNumPartitions would run one)."""
+    from p_id_text_extraction_spark.util import fan_out
+    sf_dir, _ = twin_corpus
+    counts = spark.read.parquet(f"{sf_dir}/documents.parquet").groupBy("lang").count()
+    sc, group = spark.sparkContext, "fan-out-decision"
+    sc.setJobGroup(group, group)
+    try:
+        out = fan_out(counts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert len(_round_robins(out)) == 1

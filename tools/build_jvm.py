@@ -1,6 +1,6 @@
-"""Rebuild the session's JVM jar from its committed source.
+"""Rebuild the session's JVM jar from its committed sources.
 
-``p_id_text_extraction_spark/jvm/NioLocalFileSystem.java`` is compiled with
+The ``.java`` files of ``p_id_text_extraction_spark/jvm/`` are compiled with
 ``javac --release 17`` against ``$SPARK_HOME/jars/hadoop-client-api-*.jar``
 and stored as ``p_id_text_extraction_spark/jvm/nio-local-fs.jar`` (no
 manifest; every entry has the same fixed time, so the same class bytes
@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from p_id_text_extraction_spark.session import NIO_JAR  # noqa: E402
 
-SOURCE = os.path.join(os.path.dirname(NIO_JAR), "NioLocalFileSystem.java")
+SOURCES = sorted(glob.glob(os.path.join(os.path.dirname(NIO_JAR), "*.java")))
 _ENTRY_TIME = (1980, 1, 1, 0, 0, 0)
 
 
@@ -38,10 +38,10 @@ def hadoop_api_jar() -> str:
 
 
 def compile_classes() -> dict[str, bytes]:
-    """Compile SOURCE; returns {jar entry name: class bytes}."""
+    """Compile SOURCES; returns {jar entry name: class bytes}."""
     with tempfile.TemporaryDirectory() as out:
         subprocess.run(["javac", "--release", "17", "-nowarn", "-cp", hadoop_api_jar(),
-                        "-d", out, SOURCE], check=True)
+                        "-d", out, *SOURCES], check=True)
         classes = {}
         for path in glob.glob(os.path.join(out, "**", "*.class"), recursive=True):
             with open(path, "rb") as f:
