@@ -10,7 +10,8 @@ Five tiers, scale-ordered:
                       exact Jaccard before emission
   simhash          -- 60-bit sign-hash fingerprint
   embedding LSH    -- integer sign-bucket hyperplane tables + exact cosine
-                      rerank (equi-joins only)
+                      rerank (equi-joins only); ``lsh_buckets`` is the
+                      index similarity.lsh_ann_topk probes too
   + dup_components -- connected components over dup pairs (canonical docs)
 
 All hashing is engine-portable (md5_hash60: first 15 md5 hex chars as
@@ -23,6 +24,8 @@ one task, once per AQE broadcast build.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -373,42 +376,6 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     return agg.select("doc_id", sig.alias("simhash"))
 
 
-# edges above this count stay distributed in algorithm='auto'; below it
-# the whole edge list is a few hundred MB and a driver union-find beats
-# a dozen distributed label-propagation rounds by their fixed job costs
-LOCAL_EDGE_CAP = 10_000_000
-
-
-def _dup_components_local(pairs: DataFrame) -> DataFrame:
-    """Driver-side union-find over the collected EDGE LIST (never the
-    corpus): path-halving find + union-by-min, identical output contract
-    to the distributed variants (min-doc_id component labels)."""
-    spark = pairs.sparkSession
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]     # path halving
-            x = parent[x]
-        return x
-
-    for a, b in pairs.select("doc_a", "doc_b").toLocalIterator():
-        a, b = int(a), int(b)
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by MIN label so the root IS the component id
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    rows = [(x, find(x)) for x in parent]
-    from collections import Counter
-    sizes = Counter(c for _x, c in rows)
-    out = [(x, c, sizes[c]) for x, c in rows]
-    return spark.createDataFrame(
-        out, "doc_id bigint, component_id bigint, component_size bigint")
-
-
 def dup_components(pairs: DataFrame, max_iter: int = 15,
                    algorithm: str = "propagate") -> DataFrame:
     """Connected components over near-duplicate pairs: canonical-document
@@ -437,41 +404,15 @@ def dup_components(pairs: DataFrame, max_iter: int = 15,
     self-join per round), collapsing convergence to O(log diameter)
     rounds: the escape hatch for pathological long-chain dup graphs
     (e.g. a 10^6-doc chain of pairwise near-dups) that 'propagate' would
-    need a million rounds for.
-
-    ``algorithm='local'``: collect the EDGE LIST (not the corpus) to the
-    driver and union-find it -- the right call when the dup graph is
-    small relative to the corpus, which it almost always is (dedup found
-    48.5k edge rows in a 500k-doc corpus at sf10; a graph that small
-    costs ~10 driver-side milliseconds vs a dozen distributed rounds'
-    job overhead).  ``algorithm='auto'``: count the edges (one cheap
-    aggregate over the pair pipeline) and pick local under
-    ``local_edge_cap``, distributed propagation above -- how a production
-    pipeline should decide, since the edge count is unknowable before
-    dedup runs.
+    need a million rounds for.  Neither replaces the other: on a
+    near-clique the extra self-join costs 'jump' more jobs than the
+    rounds it saves.
 
     Input: (doc_a, doc_b) pairs.  Output: (doc_id, component_id,
     component_size), component_id = min doc_id of the component.
     """
-    if algorithm not in ("propagate", "jump", "local", "auto"):
-        raise ValueError(f"unknown algorithm {algorithm!r}: use "
-                         "'propagate', 'jump', 'local' or 'auto'")
-    if algorithm == "auto":
-        # The upstream pair pipeline (MinHash/LSH + exact verify) is the
-        # expensive part of the job -- persist it so the edge-count probe
-        # and the chosen algorithm's consumption share ONE evaluation
-        # instead of recomputing the sketch join from scratch.
-        pairs = pairs.persist()
-        try:
-            n_edges = pairs.count()
-            algorithm = "local" if n_edges <= LOCAL_EDGE_CAP else "propagate"
-            if algorithm == "local":
-                return _dup_components_local(pairs)
-            return dup_components(pairs, max_iter, algorithm)
-        finally:
-            pairs.unpersist()
-    if algorithm == "local":
-        return _dup_components_local(pairs)
+    if algorithm not in ("propagate", "jump"):
+        raise ValueError(f"unknown algorithm {algorithm!r}: use 'propagate' or 'jump'")
     fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = fwd.unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
@@ -583,31 +524,54 @@ def _int_sign_bucket(vq: F.Column, planes: list[list[int]]) -> F.Column:
     return bucket
 
 
+def lsh_buckets(embeddings: DataFrame, n_planes: int, n_tables: int, seed: int,
+                dim: int, quant: int) -> DataFrame:
+    """The multi-table sign-bucket LSH index of an embedding corpus:
+    (vec_id, v, nrm, tbl, bucket), one row per vector per table ``tbl`` in
+    [0, n_tables), ``v`` the vector as doubles and ``nrm`` its norm.  Table
+    ``t`` buckets the integer-quantized vector (``floor(x * quant)``) by
+    the packed signs of its dots with ``lsh_plane_ints(dim, n_planes,
+    seed + t)``, so a SQL twin reproduces every bucket bit-for-bit.
+
+    The quantized projection is persisted (``track_persist``): it feeds
+    one subtree per table, and without the cache each union branch
+    re-reads and re-normalizes the whole corpus (n_tables full scans).
+    The dim is checked first (``check_embedding_dim``)."""
+    check_embedding_dim(embeddings, dim)
+    corpus = embeddings.select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    ).withColumn(
+        "nrm", F.sqrt(F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)),
+    )
+    q = track_persist(corpus.withColumn("vq", F.transform("v", lambda x: F.floor(x * quant).cast("long"))))
+    tables = [q.select("vec_id", "v", "nrm", F.lit(t).alias("tbl"),
+                       _int_sign_bucket(F.col("vq"), lsh_plane_ints(dim, n_planes, seed + t))
+                       .alias("bucket"))
+              for t in range(n_tables)]
+    return reduce(DataFrame.unionByName, tables)
+
+
 def embedding_cosine_dups(embeddings: DataFrame, min_cos_milli: int = 950,
-                          method: str = "lsh", n_planes: int | None = None,
-                          n_tables: int = 8,
+                          n_planes: int | None = None, n_tables: int = 8,
                           seed: int = 7, quant: int = 100000, dim: int = 64) -> DataFrame:
     """Embedding near-duplicate pairs: cosine >= threshold.
 
-    ``method='lsh'`` (the 100 TB path): multi-table random-hyperplane
-    sign-bit buckets -- candidates only meet bucket-mates via a plain
-    EQUI-join on (table, bucket), exact cosine reranks inside the candidate
-    set.  Cost is O(sum of bucket^2) instead of O(n^2); recall is tunable
-    via (n_planes, n_tables).  ``n_planes=None`` sizes the plane count
-    from the corpus row count (auto_n_planes: mean bucket ~150 vectors),
+    Multi-table random-hyperplane sign-bit buckets (``lsh_buckets``) --
+    candidates only meet bucket-mates via a plain EQUI-join on (table,
+    bucket), exact cosine reranks inside the candidate set.  Cost is
+    O(sum of bucket^2) instead of O(n^2); recall is tunable via
+    (n_planes, n_tables).  ``n_planes=None`` sizes the plane count from
+    the corpus row count (auto_n_planes: mean bucket ~150 vectors),
     because a fixed plane count stops scaling the moment the corpus
     outgrows it -- bucket occupancy grows linearly and candidate pairs
-    quadratically.  Bucketing is integer-exact (lsh_plane_ints) so a
-    SQL oracle reproduces the same candidate set bit-for-bit.
-
-    ``method='brute'``: the exhaustive all-pairs nested-loop -- recall 1.0,
-    O(n^2), acceptable only for small inputs or as a recall audit.
+    quadratically.
     """
-    e = embeddings.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    norm = e.select(
-        "vec_id", "v",
-        F.sqrt(F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)).alias("nrm"),
-    )
+    if n_planes is None:
+        # one column-pruned count; production reads this from table
+        # metadata (Iceberg record counts) at index-build time
+        n_planes = auto_n_planes(embeddings.count())
+    bucketed = lsh_buckets(embeddings, n_planes, n_tables, seed, dim, quant)
+    a, b = bucketed.alias("a"), bucketed.alias("b")
     # exact rerank AS the join projection: the cosine is computed while a
     # candidate pair is still colocated in the join task and the vectors
     # drop immediately -- only (vec_a, vec_b, cos_milli) ever shuffles.
@@ -618,44 +582,16 @@ def embedding_cosine_dups(embeddings: DataFrame, min_cos_milli: int = 950,
     dot_ab = F.aggregate(F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
                          F.lit(0.0), lambda acc, x: acc + x)
     cos_milli = F.floor(F.lit(1000) * dot_ab / (F.col("a.nrm") * F.col("b.nrm"))).cast("int")
-    if method == "brute":
-        a, b = norm.alias("a"), norm.alias("b")
-        return (a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-                .select(F.col("a.vec_id").alias("vec_a"),
-                        F.col("b.vec_id").alias("vec_b"),
-                        cos_milli.alias("cos_milli"))
-                .filter(F.col("cos_milli") >= min_cos_milli))
-    else:
-        check_embedding_dim(embeddings, dim)
-        if n_planes is None:
-            # one column-pruned count; production reads this from table
-            # metadata (Iceberg record counts) at index-build time
-            n_planes = auto_n_planes(embeddings.count())
-        # persist the shared corpus projection: it feeds one subtree PER
-        # LSH table -- without the cache each union branch re-reads and
-        # re-normalizes the whole corpus (n_tables full scans at 100 TB)
-        q = track_persist(norm.withColumn("vq", F.transform("v", lambda x: F.floor(x * quant).cast("long"))))
-        tables = []
-        for t in range(n_tables):
-            planes = lsh_plane_ints(dim, n_planes, seed + t)
-            tables.append(q.select(
-                "vec_id", "v", "nrm", F.lit(t).alias("tbl"),
-                _int_sign_bucket(F.col("vq"), planes).alias("bucket"),
-            ))
-        bucketed = tables[0]
-        for t in tables[1:]:
-            bucketed = bucketed.unionByName(t)
-        a, b = bucketed.alias("a"), bucketed.alias("b")
-        # threshold BEFORE the dedup shuffle: a pair's cosine is a pure
-        # function of the pair, so filtering first is equivalent and the
-        # distinct exchange moves only genuine duplicates (the answer),
-        # never the rejected candidate bulk
-        return (
-            a.join(b, (F.col("a.tbl") == F.col("b.tbl")) & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b"),
-                    cos_milli.alias("cos_milli"))
-            .filter(F.col("cos_milli") >= min_cos_milli)
-            .dropDuplicates(["vec_a", "vec_b"])
-        )
+    # threshold BEFORE the dedup shuffle: a pair's cosine is a pure
+    # function of the pair, so filtering first is equivalent and the
+    # distinct exchange moves only genuine duplicates (the answer),
+    # never the rejected candidate bulk
+    return (
+        a.join(b, (F.col("a.tbl") == F.col("b.tbl")) & (F.col("a.bucket") == F.col("b.bucket"))
+               & (F.col("a.vec_id") < F.col("b.vec_id")))
+        .select(F.col("a.vec_id").alias("vec_a"),
+                F.col("b.vec_id").alias("vec_b"),
+                cos_milli.alias("cos_milli"))
+        .filter(F.col("cos_milli") >= min_cos_milli)
+        .dropDuplicates(["vec_a", "vec_b"])
+    )

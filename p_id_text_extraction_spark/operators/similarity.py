@@ -4,10 +4,10 @@ Three paths:
   brute_force_topk -- exact cosine top-k: broadcast the (small) query set
                       against the corpus; JVM-side zip_with/aggregate dot
                       products, rank via window.  The correctness baseline.
-  lsh_ann_topk     -- random-hyperplane LSH: deterministic sign-bit bucket
-                      key, candidates only meet bucket-mates (multi-probe
-                      over several independent tables), exact rerank inside
-                      the candidate set.  Cost is O(candidates) not
+  lsh_ann_topk     -- random-hyperplane LSH (dedup.lsh_buckets): deterministic
+                      sign-bit bucket key, candidates only meet bucket-mates
+                      (multi-probe over several independent tables), exact
+                      rerank inside the candidate set.  Cost is O(candidates) not
                       O(corpus) per query.
   ivf_topk         -- inverted-file index: every vector is assigned to its
                       best coarse centroid cell (broadcast centroids +
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from p_id_text_extraction_spark.util import track_persist
+from p_id_text_extraction_spark.operators.dedup import auto_n_planes, lsh_buckets
 
 
 def _as_double(col: str = "embedding") -> F.Column:
@@ -153,37 +153,18 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     ~128 beyond that) -- per-query rerank cost tracks bucket occupancy,
     which grows linearly with the corpus at a fixed plane count.
 
-    Each vector lands in one bucket per table; query candidates = union of
-    its buckets across tables.  Equality join on (table, bucket) -- a plain
+    Each vector lands in one bucket per table (``dedup.lsh_buckets``, the
+    index embedding dedup joins too); query candidates = union of its
+    buckets across tables.  Equality join on (table, bucket) -- a plain
     shuffle-hash join that scales linearly; brute-force cosine only inside
     the candidate set.  Buckets come from INTEGER-exact sign bits
     (dedup.lsh_plane_ints: quantized vector x integer-milli plane, every
     product < 2^53), so a DuckDB oracle reproduces the same candidate set
     bit-for-bit and the whole approximate path is value-hash-checkable.
     """
-    from p_id_text_extraction_spark.operators.dedup import (
-        _int_sign_bucket,
-        auto_n_planes,
-        check_embedding_dim,
-        lsh_plane_ints,
-    )
-    check_embedding_dim(embeddings, dim)
     if n_planes is None:
         n_planes = auto_n_planes(embeddings.count(), target_bucket=128, lo=8, hi=16)
-    corpus = embeddings.select("vec_id", _as_double().alias("v")).withColumn("nrm", _norm(F.col("v")))
-    # shared projection feeds one subtree per table: cache it or pay
-    # n_tables corpus scans (see dedup.embedding_cosine_dups)
-    q = track_persist(corpus.withColumn("vq", F.transform("v", lambda x: F.floor(x * quant).cast("long"))))
-    tables = []
-    for t in range(n_tables):
-        planes = lsh_plane_ints(dim, n_planes, seed + t)
-        tables.append(q.select(
-            "vec_id", "v", "nrm", F.lit(t).alias("tbl"),
-            _int_sign_bucket(F.col("vq"), planes).alias("bucket"),
-        ))
-    bucketed = tables[0]
-    for t in tables[1:]:
-        bucketed = bucketed.unionByName(t)
+    bucketed = lsh_buckets(embeddings, n_planes, n_tables, seed, dim, quant)
 
     q = bucketed.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qnrm"),

@@ -129,16 +129,15 @@ def run_with_resume(
     cfg: ExtractConfig = DEFAULT_CONFIG,
     n_buckets: int = 16,
     bucket_filter: list[int] | None = None,
-    write_partitions: int | None = None,
     catalog: str = "parquet",
     spans_layout: str = "identity",
 ) -> dict:
     """Run the pipeline over not-yet-completed buckets; append manifest rows.
 
     ``bucket_filter`` (tests only) simulates a run killed after finishing a
-    subset of buckets.  ``write_partitions`` sizes the final shuffle before
-    the write (default: session shuffle partitions) -- the write fans out
-    over (bucket_id, conv_id), NOT just bucket_id, so output parallelism
+    subset of buckets.  The final shuffle before the write spreads the
+    spans over the session's ``spark.sql.shuffle.partitions`` by
+    (bucket_id, conv_id), NOT just bucket_id, so output parallelism
     tracks the cluster instead of collapsing to n_buckets tasks.
 
     The extraction is the fused map-only kernel
@@ -190,7 +189,7 @@ def run_with_resume(
     # J7: the resume anti-join, applied as one predicate on the scan (one
     # parsed expression: Column.isin costs a py4j call per literal)
     in_todo = F.expr(f"bucket_id IN ({', '.join(map(str, todo_ids))})")
-    n_write = write_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_write = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # write_pid is the partition id the write's HashPartitioning(bucket_id,
     # conv_id) gives a turn's spans, so the kernel can count the write
     # stage's rows per task without a pass over the spans

@@ -5,8 +5,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-_OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
-
 # Registry of operator-internal caches (multi-consumer intermediates like
 # shingle arrays and quantized corpus projections).  Operators return LAZY
 # plans that still reference their caches, so they cannot unpersist
@@ -84,26 +82,16 @@ def replace_partitions(df: DataFrame, path: str, partition_cols,
     partitions ``df`` has rows for, so a retry that lands ZERO rows for a
     partition would keep an aborted attempt's files; the explicit deletes
     close that gap.  Deletion goes through the Hadoop FileSystem API, so
-    file://, hdfs:// and s3a:// paths work like plain ones.  The caller's
-    partition overwrite mode is restored afterwards: a writer must not
-    leak a session-global semantics change into unrelated jobs sharing the
-    session."""
+    file://, hdfs:// and s3a:// paths work like plain ones.  The dynamic
+    mode is a write option, not a session conf: the session's
+    ``spark.sql.sources.partitionOverwriteMode`` is neither read nor set,
+    so concurrent jobs sharing the session keep their own semantics."""
     spark = df.sparkSession
     for part in replaced or ():
         delete_path(spark, "/".join(
             [path.rstrip("/"), *(f"{c}={part[c]}" for c in partition_cols)]))
-    try:
-        prev = spark.conf.get(_OVERWRITE_MODE_KEY)
-    except Exception:  # noqa: BLE001 - unset => engine default ("static")
-        prev = None
-    spark.conf.set(_OVERWRITE_MODE_KEY, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(_OVERWRITE_MODE_KEY)
-        else:
-            spark.conf.set(_OVERWRITE_MODE_KEY, prev)
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*partition_cols).parquet(path))
 
 
 def _hadoop_fs(spark: SparkSession, path: str):

@@ -282,6 +282,37 @@ def test_zero_span_todo_bucket_cleared(spark, tmp_path):
     assert not os.path.isdir(part) or not any(f.endswith(".parquet") for f in os.listdir(part))
 
 
+def test_replace_partitions_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """With the session in static overwrite mode, replace_partitions still
+    replaces only its partitions (k=2, neither listed nor written,
+    survives a rewrite of k=1), and no conf call names the session's
+    partition overwrite mode: the dynamic mode is a write option."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from p_id_text_extraction_spark.util import replace_partitions
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.partitionBy("k").parquet(out)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    named = []
+    set_ = RuntimeConfig.set
+    monkeypatch.setattr(RuntimeConfig, "set",
+                        lambda self, k, v: (named.append(k), set_(self, k, v))[1])
+    monkeypatch.setattr(RuntimeConfig, "unset", lambda self, k: named.append(k))
+    try:
+        replace_partitions(spark.createDataFrame([(1, "c")], "k int, v string"),
+                           out, ("k",), [{"k": 1}])
+        mode = spark.conf.get(key)
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, prev)
+    assert sorted(map(tuple, spark.read.parquet(out).select("k", "v").collect())) == [
+        (1, "c"), (2, "b")]
+    assert key not in named
+    assert mode.lower() == "static"
+
+
 def test_resume_churn_matrix_isolation(spark, turns_df, tmp_path):
     """Interleaved config AND bucketing churn over SHARED output/manifest
     dirs (VERDICT r2 item 7): A-run (killed half-way), B-run (different

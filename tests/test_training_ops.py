@@ -415,11 +415,39 @@ def test_null_text_matches_duckdb_twin(spark, twin_corpus):
                  "dedup_components", "dedup_components_jump", "dedup_minhash_lsh"]:
         sdf = QUERIES[name](spark, sf_dir).toPandas()
         unpersist_tracked()
-        odf = con.execute(ORACLES[name]).df()
-        s = sorted(map(tuple, sdf[sorted(sdf.columns)].astype(str).itertuples(index=False)))
-        o = sorted(map(tuple, odf[sorted(odf.columns)].astype(str).itertuples(index=False)))
-        assert len(sdf) == len(odf) > 0, name
-        assert s == o, f"{name}: first diff {[p for p in zip(s, o) if p[0] != p[1]][:2]}"
+        _assert_same_rows(name, sdf, con.execute(ORACLES[name]).df())
+
+
+def _assert_same_rows(name, sdf, odf) -> None:
+    """Spark and twin frames hold the same non-empty multiset of rows
+    (columns matched by name, values compared as strings)."""
+    s = sorted(map(tuple, sdf[sorted(sdf.columns)].astype(str).itertuples(index=False)))
+    o = sorted(map(tuple, odf[sorted(odf.columns)].astype(str).itertuples(index=False)))
+    assert len(sdf) == len(odf) > 0, name
+    assert s == o, f"{name}: first diff {[p for p in zip(s, o) if p[0] != p[1]][:2]}"
+
+
+def test_embedding_queries_match_duckdb_twins(spark, emb_df):
+    """The three LSH queries (embedding dedup, ANN top-k and its recall
+    audit) equal their DuckDB twins on the sf0.01 tables, beside the
+    sf0.001 ones ``emb_df`` reads.  Each twin is minted by ORACLES_DYNAMIC
+    with the sf-adaptive plane count, as tools/check_oracles.py does."""
+    import os
+    from urllib.parse import urlparse
+
+    import duckdb
+
+    from p_id_text_extraction_spark.plans.queries import ORACLES_DYNAMIC, QUERIES
+    from p_id_text_extraction_spark.util import unpersist_tracked
+    sf_small = os.path.dirname(urlparse(emb_df.inputFiles()[0]).path)
+    sf_dir = os.path.join(os.path.dirname(sf_small), "sf0.01")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
+    for name in ["dedup_embedding_cosine", "sim_lsh_ann", "sim_ann_recall"]:
+        sdf = QUERIES[name](spark, sf_dir).toPandas()
+        unpersist_tracked()
+        _assert_same_rows(name, sdf, con.execute(ORACLES_DYNAMIC[name](sf_dir)).df())
+    con.close()
 
 
 def _ctes_before(sql: str, cte: str) -> str:
@@ -762,20 +790,36 @@ def test_real_feature_and_resize_on_png(spark):
 
 
 def test_dup_components_local_equals_distributed(spark):
-    """Driver union-find ('local'/'auto' under the cap) must produce the
-    identical component assignment as distributed propagation on random
-    graphs with chains, cliques and islands."""
+    """'propagate' and 'jump' must both produce the component assignment
+    of a union-find (min-doc_id labels) on graphs with chains, cliques and
+    islands; the removed driver-side 'local' strategy is refused."""
     import random
+    from collections import Counter
     rng = random.Random(5)
     edges = [(i, i + 1) for i in range(0, 30)]                   # chain
     edges += [(100 + a, 100 + b) for a in range(6) for b in range(a + 1, 6)]  # clique
     edges += [(rng.randint(200, 260), rng.randint(200, 260)) for _ in range(40)]
     edges = [(a, b) for a, b in edges if a != b]
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    labels = {x: find(x) for x in parent}
+    sizes = Counter(labels.values())
+    want = sorted((x, c, sizes[c]) for x, c in labels.items())
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    dist = sorted(map(tuple, dedup.dup_components(pairs, max_iter=40).collect()))
-    loc = sorted(map(tuple, dedup.dup_components(pairs, algorithm="local").collect()))
-    auto = sorted(map(tuple, dedup.dup_components(pairs, algorithm="auto").collect()))
-    assert loc == dist == auto
+    for algorithm in ("propagate", "jump"):
+        got = sorted(map(tuple, dedup.dup_components(
+            pairs, max_iter=40, algorithm=algorithm).collect()))
+        assert got == want, algorithm
+    with pytest.raises(ValueError, match="unknown algorithm"):
+        dedup.dup_components(pairs, algorithm="local")
 
 
 def _round_robins(df) -> list[str]:
