@@ -8,8 +8,9 @@ records each completed (bucket_id, job_fingerprint) with lineage counters
 (FIXTURES.md section 3); resume re-processes only missing buckets.
 
 The resume anti-join is evaluated on the driver: the done set holds at
-most ``n_buckets`` ids, so it is collected (no Spark job when there is no
-manifest yet), subtracted from ``range(n_buckets)``, and the remainder
+most ``n_buckets`` ids, so it is read on the driver (no Spark job when
+there is no manifest yet or it is an Iceberg-format table without
+deletes), subtracted from ``range(n_buckets)``, and the remainder
 reaches the scan as ONE ``bucket_id IN (...)`` predicate.  A Spark-side
 left-anti join against the done set would add an exchange that shuffles
 every todo turn's text before the kernel, for a table of <= n_buckets
@@ -49,6 +50,7 @@ from p_id_text_extraction_spark.config import DEFAULT_CONFIG, ExtractConfig
 from p_id_text_extraction_spark.functions.udfs import FirstWinsParam, LineageCounts
 from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
 from p_id_text_extraction_spark.sources import iceberg as ice
+from p_id_text_extraction_spark.sources import iceberg_format
 from p_id_text_extraction_spark.sources.iceberg_format import bucket_transform_col, table_exists
 from p_id_text_extraction_spark.util import has_file, make_dirs, replace_partitions
 
@@ -104,12 +106,23 @@ def with_bucket(turns: DataFrame, n_buckets: int,
 
 def completed_buckets(spark: SparkSession, manifest_dir: str, fingerprint: str) -> set[int]:
     """Bucket ids already done for this fingerprint, read from whatever the
-    manifest path holds: an Iceberg-format table through
-    sources/iceberg.read_table, else partitioned parquet; empty if there is
-    no manifest yet.  The parquet probe goes through the Hadoop FileSystem
-    API, so a file://, hdfs:// or s3a:// manifest is found like a plain
-    path."""
+    manifest path holds: an Iceberg-format table, else partitioned
+    parquet; empty if there is no manifest yet.  A format table with no
+    live delete file is read on the driver with pyarrow, from the data
+    files its snapshot plans (no Spark job); one with deletes goes
+    through sources/iceberg.read_table.  The parquet probe goes through
+    the Hadoop FileSystem API, so a file://, hdfs:// or s3a:// manifest
+    is found like a plain path."""
     if table_exists(manifest_dir):
+        if not iceberg_format.plan_delete_files(manifest_dir):
+            import pyarrow.parquet as pq
+            done = set()
+            for f in iceberg_format.plan_files(manifest_dir):
+                cols = pq.ParquetFile(f["file_path"]).read(
+                    columns=["bucket_id", "job_fingerprint"]).to_pydict()
+                done.update(b for b, fp in zip(cols["bucket_id"], cols["job_fingerprint"])
+                            if fp == fingerprint)
+            return done
         manifest = ice.read_table(spark, manifest_dir)
     elif has_file(spark, manifest_dir, ".parquet"):
         # the declared schema spares a schema-inference job over the footers
@@ -146,7 +159,7 @@ def run_with_resume(
     partition, detected candidates) into an exact
     `functions.udfs.LineageCounts` accumulator, so the spans write is the
     call's only pass over the data.  With no todo bucket the call returns
-    after the done-set collect without building any plan: nothing is
+    after reading the done set without building any plan: nothing is
     written or committed.
 
     ``catalog``: the kind of table a new spans or manifest table gets,

@@ -22,12 +22,14 @@ needs:
     partitions, exactly like the reference implementation.
 
 Deliberate deviations, documented:
-  * data files are written by Spark's parquet writer, except small
-    driver-side appends (``append_rows``, e.g. the checkpoint manifest)
-    and delete files, which pyarrow writes; both stamp top-level
-    ``PARQUET:field_id``s, and the table metadata also carries
-    ``schema.name-mapping.default`` -- the spec's sanctioned mechanism
-    for mapping id-less files (and nested list elements) by column name;
+  * data files are written with pyarrow: a DataFrame write's Spark tasks
+    write and describe their own files (no staging directory, no Spark
+    file commit), while small driver-side appends (``append_rows``, e.g.
+    the checkpoint manifest) and delete files are written on the driver;
+    all stamp top-level ``PARQUET:field_id``s, and the table metadata
+    also carries ``schema.name-mapping.default`` -- the spec's sanctioned
+    mechanism for mapping id-less files (and nested list elements) by
+    column name;
   * identity-partition source columns live in the directory structure
     (Hive layout) rather than in the data files; reads reconstitute them
     via Spark's basePath partition discovery, value-identical to Iceberg's
@@ -625,17 +627,14 @@ def add_position_deletes(table_path: str, deletes: list[tuple[str, int]]) -> dic
     return _commit_delete_file(table_path, meta, df, seq)
 
 
-def _write_driver_file(table_path: str, tbl, seq: int, suffix: str) -> dict:
+def _write_driver_file(table_path: str, tbl, seq: int, suffix: str,
+                       fields: dict | None = None) -> dict:
     """Write a pyarrow table as ONE parquet file under the table's data
-    dir; return its unpartitioned data_file dict (no bounds)."""
-    import pyarrow.parquet as pq
+    dir; return its unpartitioned data_file dict (``_write_file``)."""
     data_dir = os.path.join(table_path, "data")
     os.makedirs(data_dir, exist_ok=True)
     path = os.path.join(data_dir, f"{seq:05d}-{_uuid.uuid4().hex[:12]}{suffix}.parquet")
-    pq.write_table(tbl, path)
-    return {"file_path": path, "partition": {}, "record_count": tbl.num_rows,
-            "file_size_in_bytes": os.path.getsize(path),
-            "lower_bounds": None, "upper_bounds": None}
+    return _write_file(path, tbl.schema, tbl.to_batches(), fields)
 
 
 def _commit_delete_file(table_path: str, meta: dict, df: dict, seq: int) -> dict:
@@ -672,7 +671,6 @@ def append_rows(table_path: str, rows: list[tuple]) -> dict:
     for small tables such as the checkpoint manifest.  Unpartitioned
     tables of primitive columns only."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     meta = load_metadata(table_path)
     if meta["partition-specs"][meta["default-spec-id"]]["fields"]:
         raise ValueError(f"append_rows writes unpartitioned tables only: {table_path}")
@@ -682,9 +680,8 @@ def append_rows(table_path: str, rows: list[tuple]) -> dict:
     schema = pa.schema([_pa_field(f) for f in fields])
     tbl = pa.Table.from_pydict(
         {f["name"]: [r[i] for r in rows] for i, f in enumerate(fields)}, schema=schema)
-    df = _write_driver_file(table_path, tbl, meta["last-sequence-number"] + 1, "")
-    df["lower_bounds"], df["upper_bounds"] = _file_bounds(
-        pq.ParquetFile(df["file_path"]).metadata, {f["name"]: f for f in fields})
+    df = _write_driver_file(table_path, tbl, meta["last-sequence-number"] + 1, "",
+                            {f["name"]: f for f in fields})
     return append_files(table_path, [df])
 
 
@@ -891,33 +888,47 @@ def expire_snapshots(table_path: str, keep_last: int = 1) -> dict:
 
 _BOUND_TYPES = ("int", "long", "float", "double", "string")
 
+# parquet-mr (Spark's writer) drops a string column chunk's min/max when
+# the two together reach this many bytes
+_MAX_STATS_SIZE = 4096
 
-def _file_bounds(md, schema_fields: dict) -> tuple[list | None, list | None]:
-    """Per-file column bounds from the parquet footer statistics (the
-    Iceberg lower_bounds/upper_bounds maps, keyed by field id) -- what
-    makes file-level data skipping possible beyond partition pruning."""
-    names = {md.schema.column(j).path: j for j in range(md.num_columns)}
-    lowers, uppers = {}, {}
-    for f in schema_fields.values():
-        if not isinstance(f["type"], str) or f["type"] not in _BOUND_TYPES:
-            continue
-        j = names.get(f["name"])
-        if j is None:
-            continue
-        mins, maxs = [], []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(j).statistics
-            if st is None or not st.has_min_max:
-                mins = []
-                break
-            mins.append(st.min)
-            maxs.append(st.max)
-        if mins:
-            lowers[f["id"]] = encode_bound(min(mins), f["type"])
-            uppers[f["id"]] = encode_bound(max(maxs), f["type"])
-    lb = [{"key": k, "value": v} for k, v in sorted(lowers.items())]
-    ub = [{"key": k, "value": v} for k, v in sorted(uppers.items())]
-    return (lb or None), (ub or None)
+
+def _write_file(path: str, schema, batches, fields: dict | None = None) -> dict:
+    """Write ``batches`` as ONE parquet file with pyarrow and describe it
+    as an unpartitioned data_file dict.  The bound-typed columns among
+    ``fields`` (name -> Iceberg schema field) get lower/upper bounds --
+    what makes file-level data skipping possible beyond partition
+    pruning.  The bounds come from the rows written, not from the footer:
+    pyarrow keeps a footer min/max whose other side went over its
+    4096-byte stats limit and reads that side back as ''.  A string
+    column whose min and max together reach ``_MAX_STATS_SIZE`` bytes
+    gets no bounds, as in a Spark-written file; a missing bound never
+    prunes."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    bounded = [f for f in (fields or {}).values()
+               if f["name"] in schema.names
+               and isinstance(f["type"], str) and f["type"] in _BOUND_TYPES]
+    lows: dict[int, Any] = {}
+    highs: dict[int, Any] = {}
+    rows = 0
+    with pq.ParquetWriter(path, schema) as writer:
+        for batch in batches:
+            writer.write_batch(batch)
+            rows += batch.num_rows
+            for f in bounded:
+                mm = pc.min_max(batch.column(f["name"])).as_py()
+                if mm["min"] is not None:
+                    lows[f["id"]] = min(lows.get(f["id"], mm["min"]), mm["min"])
+                    highs[f["id"]] = max(highs.get(f["id"], mm["max"]), mm["max"])
+    types = {f["id"]: f["type"] for f in bounded}
+    kept = [k for k in sorted(lows) if types[k] != "string"
+            or len(lows[k].encode()) + len(highs[k].encode()) < _MAX_STATS_SIZE]
+    lb = [{"key": k, "value": encode_bound(lows[k], types[k])} for k in kept]
+    ub = [{"key": k, "value": encode_bound(highs[k], types[k])} for k in kept]
+    return {"file_path": path, "partition": {}, "record_count": rows,
+            "file_size_in_bytes": os.path.getsize(path),
+            "lower_bounds": lb or None, "upper_bounds": ub or None}
 
 
 def _parse_partition_value(v: str, iceberg_type: str):
@@ -927,7 +938,7 @@ def _parse_partition_value(v: str, iceberg_type: str):
     Avro TRUE (non-empty string), and string-vs-typed comparisons in
     partition_filter / overwrite's is_replaced would silently never
     match."""
-    if v == "__HIVE_DEFAULT_PARTITION__":
+    if v == _HIVE_DEFAULT_PARTITION:
         return None
     if iceberg_type in ("int", "long"):
         return int(v)
@@ -938,75 +949,166 @@ def _parse_partition_value(v: str, iceberg_type: str):
     return v
 
 
+_HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# the characters Spark's ExternalCatalogUtils.escapePathName writes as %XX
+_HIVE_ESCAPED = frozenset(map(chr, range(1, 0x20))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+
+
+def _hive_escape(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in s)
+
+
+def _hive_dir(name: str, value) -> str:
+    """One ``name=value`` directory as Spark's partitioned writer spells
+    it: NULL and '' as __HIVE_DEFAULT_PARTITION__, booleans lower case,
+    everything else its string form, escaped."""
+    if value is None or value == "":
+        return f"{_hive_escape(name)}={_HIVE_DEFAULT_PARTITION}"
+    s = ("true" if value else "false") if isinstance(value, bool) else str(value)
+    return f"{_hive_escape(name)}={_hive_escape(s)}"
+
+
+def _partition_of(rel_dir: str, ptypes: dict) -> dict:
+    """The typed partition values of a data file's ``k=v/...`` directory
+    -- the values read_table's basePath discovery reads back."""
+    import urllib.parse
+    partition: dict = {}
+    for piece in rel_dir.split("/") if rel_dir else []:
+        k, _, v = map(urllib.parse.unquote, piece.partition("="))
+        partition[k] = _parse_partition_value(v, ptypes[k])
+    return partition
+
+
+def _partition_runs(batch, cols: tuple[str, ...]):
+    """(values, slice) for each run of equal ``cols`` values in ``batch``,
+    in row order (NULL equals NULL)."""
+    import pyarrow.compute as pc
+    n = batch.num_rows
+    if n == 0:
+        return
+    starts = {0}
+    for c in cols:
+        a = batch.column(c)
+        prev, cur = a.slice(0, n - 1), a.slice(1)
+        changed = pc.or_(pc.fill_null(pc.not_equal(cur, prev), False),
+                         pc.xor(pc.is_null(cur), pc.is_null(prev)))
+        starts.update(i + 1 for i in pc.indices_nonzero(changed).to_pylist())
+    cuts = sorted(starts) + [n]
+    for s, e in zip(cuts, cuts[1:]):
+        yield tuple(batch.column(c)[s].as_py() for c in cols), batch.slice(s, e - s)
+
+
+def _remove(paths) -> None:
+    """Delete ``paths``; one the other side of an abort (task or driver)
+    deleted first is skipped."""
+    for p in paths:
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
+
+
+def _live_marker(data_dir: str, writer_tag: str) -> str:
+    """The file that exists while a write's Spark job may still succeed."""
+    return os.path.join(data_dir, f"_writing-{writer_tag}")
+
+
+def _task_writer(data_dir: str, writer_tag: str, partition_cols: tuple[str, ...],
+                 fields: dict, ptypes: dict):
+    """The ``mapInArrow`` function of ``_stage_datafiles``.  A task gets
+    its rows sorted on the partition columns and writes each run of one
+    partition value as one file under ``data/<k>=<v>/``, at most one file
+    open at a time; it yields one pickled data_file dict per file.  A
+    task that raises deletes the files it wrote (Iceberg's
+    ``DataWriter.abort``), and so does one that finds the write's live
+    marker gone: the job already failed while it was writing."""
+
+    def write(batches):
+        import itertools
+        import pickle
+
+        import pyarrow as pa
+        from pyspark import TaskContext
+        ctx = TaskContext.get()
+        prefix = f"{writer_tag}-{ctx.partitionId():05d}-{ctx.attemptNumber()}"
+        runs = (run for b in batches for run in _partition_runs(b, partition_cols))
+        paths: list[str] = []
+        described: list[dict] = []
+        names = schema = None
+        try:
+            for key, group in itertools.groupby(runs, key=lambda run: run[0]):
+                first = next(group)[1]
+                if schema is None:
+                    names = [n for n in first.schema.names if n not in partition_cols]
+                    # top-level PARQUET:field_id stamps; list element ids
+                    # stay with the table's name mapping
+                    schema = pa.schema([
+                        first.schema.field(n).with_metadata(
+                            {b"PARQUET:field_id": str(fields[n]["id"]).encode()})
+                        if n in fields else first.schema.field(n) for n in names])
+                rel = "/".join(_hive_dir(c, v) for c, v in zip(partition_cols, key))
+                os.makedirs(os.path.join(data_dir, rel), exist_ok=True)
+                paths.append(os.path.join(data_dir, rel, f"{prefix}-{len(paths):05d}.parquet"))
+                slices = itertools.chain([first], (s for _k, s in group))
+                datafile = _write_file(paths[-1], schema, (s.select(names) for s in slices),
+                                       fields)
+                described.append({**datafile, "partition": _partition_of(rel, ptypes)})
+            if not os.path.exists(_live_marker(data_dir, writer_tag)):
+                raise RuntimeError(f"data-file write {writer_tag} was aborted")
+        except BaseException:
+            _remove(paths)
+            raise
+        yield pa.record_batch([pa.array([pickle.dumps(d) for d in described], pa.binary())],
+                              names=["datafile"])
+
+    return write
+
+
 def _stage_datafiles(df, table_path: str, partition_cols: tuple[str, ...],
                      seq_tag: str) -> list[dict]:
-    """Write df via Spark's parquet writer into the table's data dir and
-    return data_file dicts.  Files land under data/<k>=<v>/ (Hive layout);
-    record counts come from the parquet footers (pyarrow).
+    """Write df's rows as data files under the table's data dir and return
+    their data_file dicts.  The Spark tasks write the files themselves
+    with pyarrow (``_task_writer``): files land under data/<k>=<v>/ (Hive
+    layout, Spark's spelling), each with its record count and column
+    bounds, and only the descriptions reach the driver -- no staging
+    directory, no Spark file commit, no footer re-read.
 
-    Staging is PER-WRITER: the dir name and the moved data-file prefix
-    both carry a uuid, so two writers racing from the same base metadata
-    never share a staging dir (Spark's mode('overwrite') would delete the
-    other writer's staged files mid-walk) and never collide on data-file
-    names.  The metadata commit -- already protected by _write_version's
-    O_EXCL claim -- is the ONLY contention point."""
-    import urllib.parse
-    import uuid
-
-    import pyarrow.parquet as pq
-    writer_tag = f"{seq_tag}-{uuid.uuid4().hex[:12]}"
-    staging = os.path.join(table_path, f"_staging-{writer_tag}")
+    Every file name carries a per-WRITER tag (the sequence tag and a
+    uuid), the task's partition id and its attempt number, so two writers
+    racing from the same base metadata never collide on data-file names,
+    nor do two attempts of one task.  The metadata commit -- protected by
+    _write_version's O_EXCL claim -- is the ONLY contention point.  If
+    the Spark job fails, the driver removes the write's live marker, then
+    deletes every file carrying this writer's tag before the error
+    propagates (Iceberg's ``BatchWrite.abort``).  A cancelled task still
+    running checks the marker after its last file and deletes its own,
+    so no file the job wrote outlives the failure."""
+    import pickle
+    writer_tag = f"{seq_tag}-{_uuid.uuid4().hex[:12]}"
+    data_dir = os.path.join(os.path.abspath(table_path), "data")
     meta = load_metadata(table_path)
-    schema_fields = {f["name"]: f for f in meta["schemas"][meta["current-schema-id"]]["fields"]}
-    # stamp Iceberg field ids into the parquet files: Spark's writer emits
-    # PARQUET:field_id for any column whose schema metadata carries
-    # 'parquet.field.id' (spark.sql.parquet.fieldId.write.enabled, default
-    # true) -- no extra I/O, fully distributed.  List ELEMENT ids are not
-    # expressible through column metadata, so the table keeps
-    # schema.name-mapping.default as the spec-sanctioned fallback for
-    # nested levels and for files written before the stamping existed.
-    from pyspark.sql import functions as F
-    df = df.select([F.col(c).alias(c, metadata={"parquet.field.id": schema_fields[c]["id"]})
-                    if c in schema_fields else F.col(c) for c in df.columns])
-    # hidden partitioning: derive transform columns (e.g. bucket[N]) the
-    # caller's df doesn't carry; partitionBy turns them into directories
-    # only -- the source column stays in the data files
-    df = _with_partition_cols(df, meta)
+    fields = {f["name"]: f for f in meta["schemas"][meta["current-schema-id"]]["fields"]}
     ptypes = {i["name"]: i["value_type"] for i in _spec_info(meta)}
-    writer = df.write.mode("overwrite")
+    # hidden partitioning: derive transform columns (e.g. bucket[N]) the
+    # caller's df doesn't carry; they become directories only -- the
+    # source column stays in the data files
+    df = _with_partition_cols(df, meta)
     if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-    datafiles: list[dict] = []
-    data_dir = os.path.join(table_path, "data")
-    for root, _dirs, files in os.walk(staging):
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            src = os.path.join(root, fname)
-            rel = os.path.relpath(root, staging)
-            partition: dict = {}
-            for piece in ([] if rel == "." else rel.split(os.sep)):
-                k, _, v = piece.partition("=")
-                v = urllib.parse.unquote(v)
-                partition[k] = _parse_partition_value(v, ptypes[k])
-            dest_dir = os.path.join(data_dir, "" if rel == "." else rel)
-            os.makedirs(dest_dir, exist_ok=True)
-            dest = os.path.join(dest_dir, f"{writer_tag}-{fname}")
-            os.replace(src, dest)
-            md = pq.ParquetFile(dest).metadata
-            lower, upper = _file_bounds(md, schema_fields)
-            datafiles.append({
-                "file_path": dest,
-                "partition": partition,
-                "record_count": md.num_rows,
-                "file_size_in_bytes": os.path.getsize(dest),
-                "lower_bounds": lower,
-                "upper_bounds": upper,
-            })
-    import shutil
-    shutil.rmtree(staging, ignore_errors=True)
-    return datafiles
+        # the local sort Spark's partitioned file writer adds itself
+        df = df.sortWithinPartitions(*partition_cols)
+    write = _task_writer(data_dir, writer_tag, partition_cols, fields, ptypes)
+    live = _live_marker(data_dir, writer_tag)
+    os.makedirs(data_dir, exist_ok=True)
+    open(live, "w").close()
+    try:
+        rows = df.mapInArrow(write, "datafile binary").collect()
+    except BaseException:
+        _remove([live])
+        _remove(os.path.join(root, name) for root, _dirs, names in os.walk(data_dir)
+                for name in names if name.startswith(f"{writer_tag}-"))
+        raise
+    _remove([live])
+    return sorted((pickle.loads(r.datafile) for r in rows), key=lambda d: d["file_path"])
 
 
 def write_dataframe(df, table_path: str, mode: str = "append",

@@ -76,7 +76,7 @@ def _canon(df):
 
 
 def test_corpus_payload_profile_pins_twin_scope():
-    """The extract_full SQL twin now mirrors parse_payload for all four
+    r"""The extract_full SQL twin now mirrors parse_payload for all four
     payload classes; the residual out-of-scope shapes are field-less JSON
     envelopes (Python re-serializes compact+sorted -- no DuckDB mirror),
     payloads containing \x00 (the spec's slow path), and non-ASCII text

@@ -772,3 +772,103 @@ def test_compact_null_partition_keeps_rows(spark, tmp_path):
     null_files = [f for f in ice.plan_files(path)
                   if f["partition"]["grp"] is None]
     assert len(null_files) == 1
+
+
+def test_failed_write_leaves_nothing_behind(spark, table):
+    """A write whose task raises commits no snapshot and leaves no data
+    file and no staging directory under the table: the failing task
+    deletes what it wrote, the driver every file of the write that other
+    tasks finished, and a cancelled task still running deletes its own
+    files once it finds the write's live marker gone."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    def files():
+        return {os.path.join(r, n) for r, _d, names in os.walk(table) for n in names}
+
+    before, snaps = files(), ice.snapshot_ids(table)
+    df = (_df(spark, [(f"f{i}", i % 4, f"text {i}") for i in range(400)]).repartition(4)
+          .withColumn("text", F.when(F.col("conv_id") == "f317", F.raise_error(F.lit("boom")))
+                      .otherwise(F.col("text"))))
+    with pytest.raises(Exception, match="boom"):
+        ice.write_dataframe(df, table)
+    deadline = time.time() + 30   # cancelled tasks finish in the background
+    while files() != before and time.time() < deadline:
+        time.sleep(0.1)
+    assert files() == before
+    assert ice.snapshot_ids(table) == snaps
+    assert not [d for d in os.listdir(table) if d.startswith("_staging")]
+
+
+def _data_dirs(root):
+    return {os.path.relpath(r, root) for r, _d, names in os.walk(root)
+            if any(n.endswith(".parquet") for n in names)}
+
+
+@pytest.mark.parametrize("ddl,partition,rows", [
+    ("id bigint, grp string, text string", "grp",
+     [(i, g, f"t{i}") for i, g in enumerate(["a/b", "k=v", "50%", "sp ace", "é", None, "x"])]),
+    ("id bigint, flag boolean, text string", "flag",
+     [(1, True, "t"), (2, False, "f"), (3, False, "g"), (4, None, "n")]),
+    ("conv_id string, id bigint, text string", "bucket(conv_id, 4)",
+     [(f"conv{i}", i, f"t{i}") for i in range(12)]),
+], ids=["escaped_and_null", "boolean", "bucket"])
+def test_partition_values_roundtrip(spark, tmp_path, ddl, partition, rows):
+    """The tasks write the directories Spark's partitionBy writes for the
+    same rows (escaping, NULL, booleans, hidden bucket values); read_table
+    and overwrite_partitions see the typed values back."""
+    df = spark.createDataFrame(rows, ddl)
+    path = str(tmp_path / "t")
+    ice.create_table(path, df.schema, partition_cols=(partition,))
+    ice.write_dataframe(df, path)
+    spark_df = ice._with_partition_cols(df, ice.load_metadata(path))
+    part_col = spark_df.columns[-1] if partition.startswith("bucket(") else partition
+    spark_df.write.partitionBy(part_col).parquet(str(tmp_path / "spark"))
+    assert _data_dirs(os.path.join(path, "data")) == _data_dirs(str(tmp_path / "spark"))
+
+    def read():
+        return sorted(map(tuple, ice.read_table(spark, path).select(*df.columns).collect()),
+                      key=repr)
+
+    assert read() == sorted(rows, key=repr)
+    # replace every partition with its own rows: the typed values must
+    # match the committed ones, or the old files would survive beside the new
+    replaced = [dict(t) for t in {tuple(f["partition"].items()) for f in ice.plan_files(path)}]
+    assert len(replaced) > 1
+    ice.write_dataframe(df, path, mode="overwrite_partitions", replaced=replaced)
+    assert read() == sorted(rows, key=repr)
+
+
+def test_long_string_column_gets_no_bound(spark, tmp_path):
+    """A string column whose min and max together reach 4096 bytes gets
+    no bounds (pyarrow's footer would report the 10000-byte max as '');
+    a range filter over the long value still returns its row."""
+    path = str(tmp_path / "long")
+    df = spark.createDataFrame([(1, "z" * 10000), (2, "b")], "id bigint, text string").coalesce(1)
+    ice.create_table(path, df.schema)
+    ice.write_dataframe(df, path)
+    [f] = ice.plan_files(path)
+    assert f["record_count"] == 2
+    assert [e["key"] for e in f["lower_bounds"]] == [e["key"] for e in f["upper_bounds"]] == [1]
+    got = ice.read_table(spark, path, column_range_filter={"text": ("y", "zz")})
+    assert 1 in {r.id for r in got.collect()}
+
+
+def test_done_set_read_on_driver_honours_deletes(spark, tmp_path):
+    """An Iceberg manifest without delete files is read on the driver; one
+    with a position delete falls back to read_table, and the deleted
+    manifest row's bucket is no longer done."""
+    import pyarrow.parquet as pq
+
+    from p_id_text_extraction_spark.plans.checkpoint import completed_buckets
+    turns = transcripts_df(spark, gen_turns(20, max_turns=4, seed=2))
+    out, man = str(tmp_path / "o"), str(tmp_path / "m")
+    r = run_with_resume(spark, turns, out, man, n_buckets=8, bucket_filter=[0, 1, 2, 3],
+                        catalog="iceberg")
+    assert completed_buckets(spark, man, r["fingerprint"]) == {0, 1, 2, 3}
+    assert completed_buckets(spark, man, "other") == set()
+    [f] = ice.plan_files(man)
+    pos = pq.read_table(f["file_path"]).column("bucket_id").to_pylist().index(2)
+    ice.add_position_deletes(man, [(f["file_path"], pos)])
+    assert completed_buckets(spark, man, r["fingerprint"]) == {0, 1, 3}

@@ -157,8 +157,10 @@ def _jobs(spark, group, call):
 
 @pytest.mark.parametrize("catalog", ["parquet", "iceberg"])
 def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
-    """A resume over a complete manifest collects the done set and stops:
-    one Spark job, no Iceberg snapshot, same return value as ever."""
+    """A resume over a complete manifest reads the done set and stops: no
+    Spark job on the Iceberg catalog (the driver reads the manifest's
+    files), one on parquet, no Iceberg snapshot, same return value as
+    ever."""
     from p_id_text_extraction_spark.sources import iceberg_format as ice
     out, man = str(tmp_path / "o"), str(tmp_path / "m")
     run_with_resume(spark, turns_df, out, man, n_buckets=8, catalog=catalog)
@@ -166,7 +168,7 @@ def test_noop_resume_runs_no_pipeline(spark, turns_df, tmp_path, catalog):
              if catalog == "iceberg" else None)
     r, jobs = _jobs(spark, f"noop-resume-{catalog}", lambda: run_with_resume(
         spark, turns_df, out, man, n_buckets=8, catalog=catalog))
-    assert jobs <= 1
+    assert jobs <= (0 if catalog == "iceberg" else 1)
     assert {k: v for k, v in r.items() if k != "fingerprint"} == \
         {"buckets_completed": 0, "task_rows_max": 0, "task_rows_median": 0}
     if catalog == "iceberg":
@@ -192,8 +194,9 @@ def test_noop_resume_builds_no_plan(spark, turns_df, tmp_path, monkeypatch, cata
 # Spark jobs a killed call (fresh manifest) and its resume launch on this
 # fixture, as measured: the shuffle and result stages of the spans write
 # (the kernel counts every manifest counter on the way); the parquet
-# catalog adds its manifest write, and a resume adds the done-set collect.
-JOBS_PER_CALL = {"parquet": (3, 4), "iceberg": (2, 3)}
+# catalog adds its manifest write, and its resume adds the done-set
+# collect (the Iceberg done set is read on the driver).
+JOBS_PER_CALL = {"parquet": (3, 4), "iceberg": (2, 2)}
 
 
 def _sql_plans_since(spark, last_id):
@@ -227,8 +230,10 @@ def test_resume_plan_has_no_join(spark, turns_df, tmp_path, catalog):
     plans = _sql_plans_since(spark, last_id)
     assert r1["buckets_completed"] == 4
     assert plans and not any("Join" in p for p in plans)
-    write = [p for p in plans
-             if "InsertIntoHadoopFsRelationCommand" in p and "MapInPandas" in p]
+    # the parquet write is Spark's file command; the Iceberg-format tasks
+    # write their own files from a MapInArrow
+    writer = "InsertIntoHadoopFsRelationCommand" if catalog == "parquet" else "MapInArrow"
+    write = [p for p in plans if writer in p and "MapInPandas" in p]
     assert len(write) == 1
     # each exchange shows up in the initial and the final AQE plan: compare
     # partitionings, not nodes
