@@ -114,16 +114,19 @@ def completed_buckets(spark: SparkSession, manifest_dir: str, fingerprint: str) 
     the Hadoop FileSystem API, so a file://, hdfs:// or s3a:// manifest
     is found like a plain path."""
     if table_exists(manifest_dir):
-        if not iceberg_format.plan_delete_files(manifest_dir):
+        # one snapshot for both plans: a commit in between must not add
+        # delete files the data-file read skips
+        sid = iceberg_format.load_metadata(manifest_dir).get("current-snapshot-id", -1)
+        if not iceberg_format.plan_delete_files(manifest_dir, sid):
             import pyarrow.parquet as pq
             done = set()
-            for f in iceberg_format.plan_files(manifest_dir):
+            for f in iceberg_format.plan_files(manifest_dir, sid):
                 cols = pq.ParquetFile(f["file_path"]).read(
                     columns=["bucket_id", "job_fingerprint"]).to_pydict()
                 done.update(b for b, fp in zip(cols["bucket_id"], cols["job_fingerprint"])
                             if fp == fingerprint)
             return done
-        manifest = ice.read_table(spark, manifest_dir)
+        manifest = ice.read_table(spark, manifest_dir, snapshot_id=sid)
     elif has_file(spark, manifest_dir, ".parquet"):
         # the declared schema spares a schema-inference job over the footers
         manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)

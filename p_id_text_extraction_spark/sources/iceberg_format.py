@@ -891,6 +891,9 @@ _BOUND_TYPES = ("int", "long", "float", "double", "string")
 # parquet-mr (Spark's writer) drops a string column chunk's min/max when
 # the two together reach this many bytes
 _MAX_STATS_SIZE = 4096
+# Arrow bytes buffered into one row group (parquet-mr's default block
+# size): each write_batch call would otherwise be a row group of its own
+_ROW_GROUP_BYTES = 128 * 1024 * 1024
 
 
 def _write_file(path: str, schema, batches, fields: dict | None = None) -> dict:
@@ -903,7 +906,9 @@ def _write_file(path: str, schema, batches, fields: dict | None = None) -> dict:
     4096-byte stats limit and reads that side back as ''.  A string
     column whose min and max together reach ``_MAX_STATS_SIZE`` bytes
     gets no bounds, as in a Spark-written file; a missing bound never
-    prunes."""
+    prunes.  Batches are buffered up to ``_ROW_GROUP_BYTES`` per row
+    group."""
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
     bounded = [f for f in (fields or {}).values()
@@ -912,15 +917,26 @@ def _write_file(path: str, schema, batches, fields: dict | None = None) -> dict:
     lows: dict[int, Any] = {}
     highs: dict[int, Any] = {}
     rows = 0
+    group: list = []
+
+    def flush(writer):
+        table = pa.Table.from_batches(group, schema)
+        writer.write_table(table, row_group_size=max(1, table.num_rows))
+        group.clear()
+
     with pq.ParquetWriter(path, schema) as writer:
         for batch in batches:
-            writer.write_batch(batch)
+            group.append(batch)
+            if sum(b.nbytes for b in group) >= _ROW_GROUP_BYTES:
+                flush(writer)
             rows += batch.num_rows
             for f in bounded:
                 mm = pc.min_max(batch.column(f["name"])).as_py()
                 if mm["min"] is not None:
                     lows[f["id"]] = min(lows.get(f["id"], mm["min"]), mm["min"])
                     highs[f["id"]] = max(highs.get(f["id"], mm["max"]), mm["max"])
+        if group:
+            flush(writer)
     types = {f["id"]: f["type"] for f in bounded}
     kept = [k for k in sorted(lows) if types[k] != "string"
             or len(lows[k].encode()) + len(highs[k].encode()) < _MAX_STATS_SIZE]
@@ -1030,7 +1046,10 @@ def _task_writer(data_dir: str, writer_tag: str, partition_cols: tuple[str, ...]
         import pyarrow as pa
         from pyspark import TaskContext
         ctx = TaskContext.get()
-        prefix = f"{writer_tag}-{ctx.partitionId():05d}-{ctx.attemptNumber()}"
+        # taskAttemptId, not attemptNumber: attemptNumber restarts at 0 in
+        # each stage attempt, so a zombie task of a failed stage attempt
+        # and its rerun would share (and delete) each other's files
+        prefix = f"{writer_tag}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
         runs = (run for b in batches for run in _partition_runs(b, partition_cols))
         paths: list[str] = []
         described: list[dict] = []
@@ -1074,15 +1093,21 @@ def _stage_datafiles(df, table_path: str, partition_cols: tuple[str, ...],
     directory, no Spark file commit, no footer re-read.
 
     Every file name carries a per-WRITER tag (the sequence tag and a
-    uuid), the task's partition id and its attempt number, so two writers
-    racing from the same base metadata never collide on data-file names,
-    nor do two attempts of one task.  The metadata commit -- protected by
+    uuid), the task's partition id and its task attempt id (unique in
+    the application, across stage attempts too), so two writers racing
+    from the same base metadata never collide on data-file names, nor do
+    two attempts of one task.  The metadata commit -- protected by
     _write_version's O_EXCL claim -- is the ONLY contention point.  If
     the Spark job fails, the driver removes the write's live marker, then
     deletes every file carrying this writer's tag before the error
     propagates (Iceberg's ``BatchWrite.abort``).  A cancelled task still
-    running checks the marker after its last file and deletes its own,
-    so no file the job wrote outlives the failure."""
+    running checks the marker after its last file and deletes its own.
+
+    The cleanup runs in Python: a task attempt killed outright (SIGKILL
+    after ``spark.python.task.killTimeout``, a lost executor) deletes
+    nothing.  Its files stay under data/, unreferenced by any snapshot,
+    when the job still succeeds or when they land after the driver's
+    walk; so do the partition directories a failed write created."""
     import pickle
     writer_tag = f"{seq_tag}-{_uuid.uuid4().hex[:12]}"
     data_dir = os.path.join(os.path.abspath(table_path), "data")

@@ -801,6 +801,74 @@ def test_failed_write_leaves_nothing_behind(spark, table):
     assert not [d for d in os.listdir(table) if d.startswith("_staging")]
 
 
+def test_task_attempts_across_stage_attempts_keep_their_files(tmp_path, monkeypatch):
+    """Spark restarts attemptNumber at 0 in each stage attempt, so a task
+    still running from a failed stage attempt and its rerun share
+    partitionId and attemptNumber.  Their files are named by the task
+    attempt id: the names differ, and one attempt's abort deletes only
+    its own files."""
+    import pickle
+
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    class Ctx:
+        def __init__(self, tid):
+            self.tid = tid
+
+        def partitionId(self):
+            return 3
+
+        def attemptNumber(self):
+            return 0
+
+        def taskAttemptId(self):
+            return self.tid
+
+    data_dir, tag = str(tmp_path / "data"), "00001-abc"
+    os.makedirs(data_dir)
+    open(ice._live_marker(data_dir, tag), "w").close()
+    fields = {"id": {"id": 1, "name": "id", "required": False, "type": "long"},
+              "grp": {"id": 2, "name": "grp", "required": False, "type": "string"}}
+    batch = pa.record_batch([pa.array([1, 2], pa.int64()), pa.array(["a", "a"])],
+                            names=["id", "grp"])
+
+    def run(tid, batches):
+        monkeypatch.setattr(TaskContext, "get", staticmethod(lambda: Ctx(tid)))
+        write = ice._task_writer(data_dir, tag, ("grp",), fields, {"grp": "string"})
+        return {pickle.loads(d)["file_path"]
+                for b in write(batches) for d in b.column(0).to_pylist()}
+
+    def failing():
+        yield batch
+        raise RuntimeError("task killed")
+
+    paths_a, paths_b = run(7, iter([batch])), run(9, iter([batch]))
+    assert paths_a and paths_b and not (paths_a & paths_b)
+    with pytest.raises(RuntimeError, match="task killed"):
+        run(11, failing())
+    left = {os.path.join(r, n) for r, _d, names in os.walk(data_dir)
+            for n in names if n.endswith(".parquet")}
+    assert left == paths_a | paths_b
+
+
+def test_task_file_buffers_batches_into_one_row_group(tmp_path):
+    """A file written from many Arrow batches holds them in one row group
+    (up to _ROW_GROUP_BYTES), not one row group per batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    batches = [pa.record_batch([pa.array(range(i * 10, i * 10 + 10), pa.int64())], names=["id"])
+               for i in range(5)]
+    path = str(tmp_path / "f.parquet")
+    d = ice._write_file(path, batches[0].schema, iter(batches),
+                        {"id": {"id": 1, "name": "id", "required": False, "type": "long"}})
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    assert d["record_count"] == 50
+    assert pq.read_table(path).column("id").to_pylist() == list(range(50))
+    assert [ice.decode_bound(e["value"], "long") for e in d["lower_bounds"] + d["upper_bounds"]] \
+        == [0, 49]
+
+
 def _data_dirs(root):
     return {os.path.relpath(r, root) for r, _d, names in os.walk(root)
             if any(n.endswith(".parquet") for n in names)}
